@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.config.ExtractionConfig
 import graft.xml.XmlExtraction
 
@@ -38,14 +37,7 @@ object ExtractorCli {
     }
     val Array(inPath, outPath, configFile) = positional
     val config = ExtractionConfig.fromFile(configFile)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get("graft-extract")
     try {
       if (flags.contains("--stream")) {
         val query = graft.streaming.StreamingExtraction

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.xml.XmlExtraction
 
 /**
@@ -19,13 +17,7 @@ object IngestCli {
       sys.exit(2)
     }
     val Array(inDir, outPath) = args
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-ingest")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get("graft-ingest")
     try XmlExtraction.corpusToSequenceFile(
       XmlExtraction.corpusFromXmlFiles(spark, inDir), outPath)
     finally spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -20,14 +19,7 @@ import graft.operators.Dedup
 object PipelineScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nDocs = args.lift(0).map(_.toInt).getOrElse(100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get("graft-pipeline-scale-smoke")
 
     // doc d with d % 100 == 1 copies doc d-1's words, changing only the last
     // word — a planted near-duplicate pair per 100 docs. Words come from a

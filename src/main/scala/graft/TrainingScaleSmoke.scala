@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, CorpusOps, Dedup, Ivf, Similarity}
@@ -26,21 +25,16 @@ import graft.operators.{Bpe, CorpusOps, Dedup, Ivf, Similarity}
 object TrainingScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nDocs = args.lift(0).map(_.toInt).getOrElse(100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus()
+    val spark = Sessions.get("graft-training-scale-smoke", cpus)
     // spill-aware partitioning: at 1M docs the wide aggregates carry ~50M
     // feature rows — with only `cpus` partitions that is ~1.5M-row hash
     // states on 32 CONCURRENT tasks, which intermittently exhausts the 8g
     // heap under contention. Scale partition count with the corpus so
     // per-task state stays bounded (tasks then run in waves); at the
     // default 100k the value stays `cpus`, identical to Bench/Verify.
-    val shufflePartitions = math.max(cpus.toInt, nDocs / 10000)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.max(cpus, nDocs / 10000).toLong)
 
     // doc d with d % 100 == 1 copies doc d-1's words, changing only the last
     // word — one planted near-duplicate pair per 100 docs, and the changed
@@ -112,7 +106,7 @@ object TrainingScaleSmoke {
     //    one hash shuffle on the worker key, per-partition streaming fold.
     val nBins = timed("next-fit packing") {
       CorpusOps.packNextFit(tok, col("doc_id"), col("n_subwords"),
-        tokensPerBin = 4096, nWorkers = cpus.toInt)
+        tokensPerBin = 4096, nWorkers = cpus)
         .select(col("worker"), col("bin")).distinct().count()
     }
     free(tokIds)

@@ -164,10 +164,9 @@ object Bpe {
   }
 
   /** Bench/test hook: drop every memoised merge table so the next
-   * [[mergeArtifact]] call re-learns from the corpus. The bench's unseeded
-   * (default) mode calls this before each timed query so a min-of-N pass
-   * can never be served a previous pass's k-round learning from the in-JVM
-   * memo — the same honesty rule as the seed cache (VERDICT r18 #2). The
+   * [[mergeArtifact]] call re-learns from the corpus. The bench calls this
+   * before each timed query so a min-of-N pass can never be served a
+   * previous pass's k-round learning from the in-JVM memo. The
    * artifact-reuse semantics of real pipelines (train once, apply anywhere)
    * are unchanged for library callers. */
   def clearArtifacts(): Unit = artifacts.clear()

@@ -63,9 +63,9 @@ private[graft] object Checkpoints {
 
   /** Persist `df` as a LAZY plan-keyed reuse point and track it for
    * [[release]]. If the plan is ALREADY cached in this session (a prior
-   * call on the same input, or a harness cache seed), returns `df`
-   * untouched — no duplicate registration, no CacheManager warning, and
-   * the substitution hits the existing entry. */
+   * call on the same input), returns `df` untouched — no duplicate
+   * registration, no CacheManager warning, and the substitution hits the
+   * existing entry. */
   def reusePoint(df: DataFrame): DataFrame = {
     purgeStoppedContexts()
     if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
@@ -170,7 +170,7 @@ private[graft] object Checkpoints {
   /** Mark one iteration round as a REUSE POINT. Three modes:
    *
    *   - default: `persist(MEMORY_AND_DISK)` — LAZY, so constructing an
-   *     unrolled-iteration plan (PlanDump, plan-shape specs, `explain`)
+   *     unrolled-iteration plan (ExplainQuery, plan-shape specs, `explain`)
    *     runs ZERO Spark jobs (VERDICT r12 #4; a non-eager `checkpoint`
    *     would NOT deliver this — under AQE even `eager = false` executes
    *     every intermediate query stage at RDD-creation time). The round

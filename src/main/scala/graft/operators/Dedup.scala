@@ -1111,8 +1111,8 @@ object Dedup {
   //    and the ranking window (measured 3x at sf1.0).
   //
   // 100 TB posture: every exchange is corpus-linear with ≤24-byte rows.
-  // The verify side is ONE broadcast while it fits [[fitsInlineVerify]]'s
-  // budget and K broadcast-sized map-side slices above it (r19
+  // The verify side is ONE broadcast while it fits [[inlineVerifyBudget]]
+  // and K broadcast-sized map-side slices above it (r19
   // [[chunkedGate]] — the candidate stream is NEVER shuffled carrying
   // attached arrays; the naive repartition-join alternative measurably
   // filled the disk at sf100). [[allPairsJaccard]]/[[containmentPairs]]
@@ -1206,20 +1206,18 @@ object Dedup {
       .withColumn("np", count(lit(1)).over(byId))
   }
 
-  /** Postings-census gate for the inline-verify paths: total shingle
-   * occurrences, compared against the broadcast budget (the verify side is
-   * a corpus-derived broadcast — sub-linear only because these exact pair
-   * tables run on sampled diagnostic corpora; the env knob makes the budget
-   * explicit). */
-  private def fitsInlineVerify(postings: Long): Boolean =
-    postings <= gateKnob("graft.inline.verify.max.postings",
-      "SPARK_GRAFT_INLINE_VERIFY_MAX_POSTINGS", "150000000")
+  /** Broadcast budget of the inline-verify paths, in total shingle
+   * occurrences (the verify side is a corpus-derived broadcast — sub-linear
+   * only because these exact pair tables run on sampled diagnostic
+   * corpora; the env knob makes the budget explicit). */
+  private[graft] def inlineVerifyBudget: Long =
+    gateKnob("graft.inline.verify.max.postings",
+      "SPARK_GRAFT_INLINE_VERIFY_MAX_POSTINGS", 150000000L, floor = 1L)
 
   /** Chunk count for [[chunkedGate]]: 1 while the whole verify side fits
    * the broadcast budget, else ⌈census / budget⌉ broadcast-sized slices. */
   private def gateChunks(postings: Long): Int = {
-    val budget = gateKnob("graft.inline.verify.max.postings",
-      "SPARK_GRAFT_INLINE_VERIFY_MAX_POSTINGS", "150000000")
+    val budget = inlineVerifyBudget
     math.max(1, ((postings + budget - 1) / budget).toInt)
   }
 
@@ -1229,15 +1227,23 @@ object Dedup {
    * falls back to the counting plan (final resort). Default 3 extends the
    * state-free family to 3× the broadcast budget (450M postings) at ≤9
    * branches. */
-  private def maxGateChunks: Int =
+  private[graft] def maxGateChunks: Int =
     gateKnob("graft.verify.max.chunks", "SPARK_GRAFT_VERIFY_MAX_CHUNKS",
-      "3").toInt
+      3L, floor = 1L).toInt
 
   /** Dispatch knob: JVM system property (tests pin regimes per-call)
    * overrides the env (operators set deployment-wide budgets), overrides
    * the measured default. */
-  private def gateKnob(prop: String, env: String, dflt: String): Long =
-    sys.props.get(prop).orElse(sys.env.get(env)).getOrElse(dflt).toLong
+  private def gateKnob(prop: String, env: String, dflt: Long, floor: Long): Long =
+    sys.props.get(prop).orElse(sys.env.get(env))
+      .fold(dflt)(knobValue(s"$prop / $env", _, floor))
+
+  /** A knob's raw setting as an integer ≥ `floor`; anything else fails
+   * naming the knob, never a silent misroute or a division by zero. */
+  private[graft] def knobValue(name: String, raw: String, floor: Long): Long =
+    raw.trim.toLongOption.filter(_ >= floor).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name must be an integer >= $floor (got '$raw')"))
 
   /** Postings census feeding the dispatch gates: total shingle occurrences,
    * one map-side-combinable aggregate over the corpus. */
@@ -1253,8 +1259,11 @@ object Dedup {
    * prefix (small-side prefix × full postings) wins at every measured
    * scale (q92: 1.82 s vs counting's 2.79 s even at sf0.1). */
   private def preferCounting(postings: Long): Boolean =
-    postings < gateKnob("graft.prefix.min.postings",
-      "SPARK_GRAFT_PREFIX_MIN_POSTINGS", "2000000")
+    postings < prefixMinPostings
+
+  private[graft] def prefixMinPostings: Long =
+    gateKnob("graft.prefix.min.postings",
+      "SPARK_GRAFT_PREFIX_MIN_POSTINGS", 2000000L, floor = 0L)
 
   /**
    * The prefix-filtered Jaccard join (header comment above): exact,

@@ -433,25 +433,43 @@ object Similarity {
     // colliding vocabulary, never observed, the counting core runs at any
     // scale, so values are exact either way). MergeDotCosineSpec pins the
     // two paths value-identical.
-    val cen = post.groupBy(col("term")).agg(count(lit(1)).as("d"))
+    mergeDotDispatch(post, maxDf, stateFreeMinDf2()) match {
+      case Some(hotFree) => mergeDotCosinePairs(post, minCosPpm, maxDf, hotFree)
+      case None =>
+        // norms are over ALL kept postings — the cap changes candidate
+        // generation, never the vector the cosine is taken against
+        val norms = postingsNorms(post)
+        cappedCosineFromPostings(post, norms, minCosPpm, maxDf)
+    }
+  }
+
+  /** [[tfidfCosinePairs]]'s dispatch, decided on ONE census over the kept
+   * postings: `None` keeps the counting core; `Some(hotFree)` takes the
+   * state-free merge-dot core once Σ d² (d = kept postings per term)
+   * exceeds `stateBudget` on a hash-collision-free vocabulary. `hotFree`
+   * holds iff no term's corpus df exceeds the cap — the same `df` column
+   * the hot set is built from, NOT the post-prune d: a term whose wt > 0
+   * prune leaves d ≤ maxDf < df is still hot, and exactly-once emission
+   * over it would drop pairs whose minimal common hash is that term. */
+  private[graft] def mergeDotDispatch(post: DataFrame, maxDf: Long,
+                                      stateBudget: Long): Option[Boolean] = {
+    val cen = post.groupBy(col("term"))
+      .agg(count(lit(1)).as("d"), max(col("df")).as("df"))
       .agg(coalesce(sum(col("d") * col("d")), lit(0L)).as("s2"),
         count(lit(1)).as("t"),
         count_distinct(xxhash64(col("term"))).as("h"),
-        coalesce(max(col("d")), lit(0L)).as("m")).head()
-    val stateBudget = sys.env.getOrElse(
-      "SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2", "1000000000").toLong
+        coalesce(max(col("df")), lit(0L)).as("m")).head()
     if (cen.getLong(0) > stateBudget && cen.getLong(1) == cen.getLong(2))
-      // hotFree rides the same census (max kept df ≤ cap ⟹ the hot set is
-      // empty ⟹ the exactly-once emission below is recall-safe)
-      mergeDotCosinePairs(post, minCosPpm, maxDf,
-        hotFree = cen.getLong(3) <= maxDf)
-    else {
-      // norms are over ALL kept postings — the cap changes candidate
-      // generation, never the vector the cosine is taken against
-      val norms = postingsNorms(post)
-      cappedCosineFromPostings(post, norms, minCosPpm, maxDf)
-    }
+      Some(cen.getLong(3) <= maxDf)
+    else None
   }
+
+  /** The Σ d² budget above which [[mergeDotDispatch]] leaves the counting
+   * core (`SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2`, an integer ≥ 0). */
+  private[graft] def stateFreeMinDf2(
+      env: collection.Map[String, String] = sys.env): Long =
+    env.get("SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2")
+      .fold(1000000000L)(Dedup.knobValue("SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2", _, 0L))
 
   /**
    * The STATE-FREE within-corpus cosine core (r18): cold single-token
@@ -472,7 +490,7 @@ object Similarity {
    * through this path at test scale.
    */
   /** @param hotFree caller-proven "the df cap does not bind on this postings
-   * frame" (max kept df ≤ maxDf — ridden on the dispatch census). When true,
+   * frame" (every kept term's df ≤ maxDf — [[mergeDotDispatch]]). When true,
    * the candidate join emits each pair EXACTLY ONCE: a row survives only if
    * its join hash equals `min_common_sorted(ka, kb)` — recall-safe because
    * with no hot terms every common hash of the two arrays is a join key the

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /**
  * Engine extension point — install with
- * `spark.sql.extensions=graft.plans.GraftExtensions` (or
- * `SparkSession.builder.withExtensions(new GraftExtensions)`).
+ * `spark.sql.extensions=graft.plans.GraftExtensions`, as every
+ * `graft.Sessions` session does.
  *
  * Registers the native expressions the engine adds beyond Spark's built-ins.
  */

@@ -66,7 +66,7 @@ object Tables {
         require(isUtc,
           "Tables.events: TIMESTAMP_NTZ -> TIMESTAMP is micros-preserving only " +
             "under a UTC session timezone; set spark.sql.session.timeZone=UTC " +
-            s"in the SparkSession builder (got '$tz')")
+            s"as graft.Sessions does (got '$tz')")
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }

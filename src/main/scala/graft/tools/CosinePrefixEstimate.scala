@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => T}
@@ -34,15 +33,7 @@ object CosinePrefixEstimate {
     val tPpm = if (args.length > 1) args(1).toLong else 500000L
     val maxDf = 10000L
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-cosine-prefix-estimate")
 
     // q126's exact postings construction (%10 corpus, maxDfDenom=2)
     val toks = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 import graft.operators.Similarity
@@ -18,15 +17,7 @@ object CosineProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-cosine-profile")
 
     val toks = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") % 10 === 0)

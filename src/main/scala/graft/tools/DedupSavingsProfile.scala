@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => T}
@@ -25,15 +24,7 @@ object DedupSavingsProfile {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 2
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-dedup-savings-profile")
 
     // q141's exact input: the deterministic 1/3 sample, distinct word
     // 2-gram shingles (T.shingles is value-identical to the fused kernel)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -40,15 +40,7 @@ object DfCapSweep {
     val caps = if (args.length > 2) args(2).split(",").map(_.toLong).toSeq
       else Seq(2000L, 5000L, 10000L)
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-df-cap-sweep")
 
     // the exact q92/q112 input: distinct word-2-gram shingles of the %3
     // draw, via the same fused kernel the queries use when installed

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit aid: print the formatted physical plan of one SparkEntry query
   * and its noop-sink wall time. Usage:
   *   runMain graft.tools.ExplainQuery <query_name> [sfDir] [--no-run] [--repeat=N]
@@ -14,15 +12,7 @@ object ExplainQuery {
     val sfDir = args.drop(1).filterNot(_.startsWith("--"))
       .headOption.getOrElse("/root/testdata/sf0.01")
     val run = !args.contains("--no-run")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-explain-query")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     if (run) {

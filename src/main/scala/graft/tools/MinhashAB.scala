@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 import graft.operators.Dedup
@@ -19,15 +18,7 @@ object MinhashAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-minhash-ab")
 
     // q32's exact corpus and parameters (k=36, 12 bands, verify at 0.8)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 import graft.operators.Dedup
@@ -18,15 +18,7 @@ object PigeonProfile {
     val sfDir = args(0)
     val theta = if (args.length > 1) args(1).toDouble else 0.5
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-pigeon-profile")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") % 3 === 0)

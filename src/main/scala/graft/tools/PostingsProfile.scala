@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 
@@ -31,15 +31,7 @@ object PostingsProfile {
     // schemes needing a pair join are skipped above this Σdf² (default: on)
     val joinCensus = args.length <= 1 || args(1) != "--no-join"
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-postings-profile")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") % 3 === 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => V}
@@ -23,15 +22,7 @@ object PqPhaseProfile {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 2
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-pq-phase-profile")
 
     def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"), V.asDouble(col("embedding")).as("vec"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -137,14 +137,8 @@ object ScaleUp {
     require((0 until k).map(perm(_)._1).distinct.size == k,
       s"keyed cipher collision within $k replicas - change the stream seed")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-scale-up")
+    spark.conf.set("spark.sql.shuffle.partitions", 32L)
 
     def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {

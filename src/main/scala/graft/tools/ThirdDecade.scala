@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -83,15 +83,7 @@ object ThirdDecade {
     // real doc_id through sf100 (5M)
     val offset = 99999999L
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get("graft-third-decade")
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
     val guardedId = when(col("doc_id") < offset, col("doc_id"))

@@ -3,20 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt).
+ * Four slots on any box, so plan-shape specs see a fixed partition count. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.get("graft-test", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

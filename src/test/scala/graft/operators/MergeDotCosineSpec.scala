@@ -69,4 +69,46 @@ class MergeDotCosineSpec extends SparkSpec {
       assert(oncePath == counting, s"minCosPpm $minCos")
     }
   }
+
+  test("dispatch keeps full multiplicity when the wt prune hides a hot term") {
+    // h sits in 1003 docs (df 1003 > maxDf 3), but only docs 1-3 (tf 2)
+    // keep a posting after the wt = 1000·tf div df > 0 prune — the kept
+    // postings count d = 3 would call the frame hot-free. Docs 2 and 3
+    // also share one cold term c whose hash is above h's, so their
+    // minimal common hash is the hot h: exactly-once emission would drop
+    // (2, 3).
+    val s = spark
+    import s.implicits._
+    val colds = (0 until 50).map(i => s"c$i")
+    val hash = ("h" +: colds).toDF("t")
+      .select(col("t"), xxhash64(col("t"))).as[(String, Long)].collect().toMap
+    val c = colds.find(hash(_) > hash("h")).get
+    val toks = ((1L to 3L).flatMap(id => Seq((id, "h"), (id, "h"))) ++
+      Seq((2L, c), (3L, c)) ++ (1001L to 2000L).map(id => (id, "h")))
+      .toDF("id", "term")
+    val post = Similarity.buildPostingsForTest(toks, 1).localCheckpoint()
+    val budget = 0L // any Σ d² > 0 leaves the counting core
+
+    assert(Similarity.mergeDotDispatch(post, maxDf = 3L, budget) == Some(false))
+    val counting = rows(Similarity.cappedCosineForTest(post, 0L, 3L))
+    assert(counting.exists(r => (r._1, r._2) == (2L, 3L)))
+    assert(rows(Similarity.mergeDotCosinePairs(post, 0L, 3L, hotFree = false)) ==
+      counting)
+
+    // uncapped, the same frame IS hot-free and exactly-once emission is exact
+    assert(Similarity.mergeDotDispatch(post, Long.MaxValue, budget) == Some(true))
+    assert(rows(Similarity.mergeDotCosinePairs(post, 0L, Long.MaxValue,
+      hotFree = true)) == rows(Similarity.cappedCosineForTest(post, 0L, Long.MaxValue)))
+  }
+
+  test("the state-free budget knob rejects a malformed value by name") {
+    assert(Similarity.stateFreeMinDf2(Map.empty) == 1000000000L)
+    assert(Similarity.stateFreeMinDf2(
+      Map("SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2" -> "0")) == 0L)
+    for (bad <- Seq("-1", "1e9", "x")) {
+      val e = intercept[IllegalArgumentException](Similarity.stateFreeMinDf2(
+        Map("SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2"), bad)
+    }
+  }
 }

@@ -165,4 +165,33 @@ class PrefixPigeonholeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(cplan.contains("intersect_count_sorted"), cplan.take(2000))
   }
+
+  /** A dispatch knob at its floor is taken; below it, or not an integer,
+   * it fails naming both its system property and its env var. */
+  private def rejectsBelowFloor(prop: String, env: String, floor: Long)(
+      read: => Long): Unit =
+    try {
+      sys.props(prop) = floor.toString
+      assert(read == floor)
+      for (bad <- Seq((floor - 1).toString, "x", "")) {
+        sys.props(prop) = bad
+        val e = intercept[IllegalArgumentException](read)
+        assert(e.getMessage.contains(prop) && e.getMessage.contains(env), bad)
+      }
+    } finally sys.props -= prop
+
+  test("inline-verify budget below 1 fails by name (no division by zero)") {
+    rejectsBelowFloor("graft.inline.verify.max.postings",
+      "SPARK_GRAFT_INLINE_VERIFY_MAX_POSTINGS", 1L)(Dedup.inlineVerifyBudget)
+  }
+
+  test("verify chunk cap below 1 fails by name") {
+    rejectsBelowFloor("graft.verify.max.chunks",
+      "SPARK_GRAFT_VERIFY_MAX_CHUNKS", 1L)(Dedup.maxGateChunks.toLong)
+  }
+
+  test("prefix floor below 0 fails by name") {
+    rejectsBelowFloor("graft.prefix.min.postings",
+      "SPARK_GRAFT_PREFIX_MIN_POSTINGS", 0L)(Dedup.prefixMinPostings)
+  }
 }

@@ -9,7 +9,7 @@ import graft.SparkEntry
 
 /**
  * Plan CONSTRUCTION must not run Spark jobs (VERDICT r12 #4): building a
- * query's DataFrame — what PlanDump, `explain`, and every plan-shape spec do
+ * query's DataFrame — what ExplainQuery, `explain`, and every plan-shape spec do
  * — is driver-side planning, and a builder that launches jobs to construct
  * its plan couples "look at the plan" to "execute the pipeline". The r12
  * offenders (q90's max-id guard `require`, bradleyTerry's census `head()`,
