@@ -56,12 +56,19 @@ object XmlExtraction {
         col("value").as("xml"))
 
   /** Read a reference-format SequenceFile corpus (`Text` uuid → `Text` xml document,
-   * `CreateSequenceFile.java:37-51`). */
+   * `CreateSequenceFile.java:37-51`).
+   *
+   * A document stays the indivisible unit, but the file does not: the read asks for at
+   * least `defaultParallelism` splits (the session's core count, the target Spark's own
+   * file scans use), so a single corpus file feeds every core. A split starts at the
+   * first sync marker after its byte offset and ends at the first one after its end, so
+   * every document lands in exactly one split. Input of at least cores × block size
+   * already splits by block, and there the request changes nothing. */
   def corpusFromSequenceFile(spark: SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.io.Text
     import spark.implicits._
     spark.sparkContext
-      .sequenceFile(path, classOf[Text], classOf[Text])
+      .sequenceFile(path, classOf[Text], classOf[Text], spark.sparkContext.defaultParallelism)
       .map { case (k, v) => (k.toString, v.toString) }
       .toDF("docId", "xml")
   }
@@ -85,6 +92,11 @@ object XmlExtraction {
    * Full extraction in one narrow pass: for each document, scan fragments, evaluate
    * XPaths, and fold the tuples through the reference's streaming pivot (carry-forward
    * column array + row trigger on the last column, `XmlExtractor.java:150-175`).
+   *
+   * A document is never split across tasks: each input partition holds whole documents
+   * (see [[corpusFromSequenceFile]] for how SequenceFile input splits).
+   * Each partition builds its XPath evaluators once and reuses them for all its
+   * fragments; they are partition-local and never shared between threads.
    *
    * Output schema: docId, seq (trigger tuple's stream position), c0..c{n-1}.
    */
@@ -228,19 +240,25 @@ object XmlExtraction {
           .map(p => StaxProjector.compile(p.xpath).map(c => (p.order, c)))
         if (subset.forall(_.isDefined))
           Right(new StaxRuleEvaluator(subset.flatten))
-        else
-          Left(rule.xpaths.toIndexedSeq.map(p => (p.order, xpath.compile(p.xpath))))
+        else // stable sort: the DOM pass then yields tuples in the StAX pass's order
+          Left(rule.xpaths.toIndexedSeq.sortBy(_.order).map(p => (p.order, xpath.compile(p.xpath))))
       }
     }
     private lazy val builder = {
       val f = DocumentBuilderFactory.newInstance()
       f.setNamespaceAware(true)
+      // a CDATA section and its neighbouring text are one XPath text node; without
+      // coalescing, NodeList.item yields only that node's first DOM piece
+      f.setCoalescing(true)
       f.newDocumentBuilder()
     }
 
+    /** A fragment's tuples ordered by `order`, as the reference's shuffle delivers
+     * them to the reducer (`XmlReducerKeySortComparator.java:21-24`): both engines
+     * produce that order themselves, so the fused fold sees the reducer's sequence. */
     def tuples(frag: Fragment): Seq[(Int, String)] = {
       try {
-        val unordered = engines(frag.ruleIndex) match {
+        engines(frag.ruleIndex) match {
           case Right(stax) => stax.eval(frag.xml)
           case Left(compiled) =>
             builder.reset()
@@ -257,10 +275,6 @@ object XmlExtraction {
               } catch { case _: Exception => None }
             }
         }
-        // within one fragment all tuples share `seq`; the reference's shuffle then
-        // orders them by `order` (XmlReducerKeySortComparator.java:21-24) — replicate
-        // so the fused fold sees the same sequence as the reducer
-        unordered.sortBy(_._1)
       } catch { case _: Exception => Seq.empty } // unparseable fragment: all tuples dropped
     }
   }

@@ -1,0 +1,26 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards on the bytes of the sources themselves. */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  test("no Scala source under src/ holds a NUL byte (write it as the \\u0000 escape)") {
+    val root = Paths.get("src")
+    assert(Files.isDirectory(root.resolve("main/scala")), s"run from the repository root ($root)")
+    val sources = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.exists(_.endsWith("SourceHygieneSpec.scala")))
+    // a NUL byte makes git treat the file as binary: diffs show no lines
+    val offenders = for {
+      f <- sources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.indexOf('\u0000') >= 0
+    } yield s"$f:${i + 1}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+}

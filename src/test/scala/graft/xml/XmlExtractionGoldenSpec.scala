@@ -101,6 +101,22 @@ class XmlExtractionGoldenSpec extends SparkSpec {
     assert(out.toSeq == Seq(" |7|"))
   }
 
+  test("text around a CDATA section is one value on the StAX path and the DOM fallback") {
+    import spark.implicits._
+    val doc = Seq(("d1", "<r><s>a<![CDATA[x<]]>b</s></r>")).toDF("docId", "xml")
+    // `//s/text()` is in the StAX subset; the predicate sends `//s[1]/text()` to DOM
+    for (xpath <- Seq("//s/text()", "//s[1]/text()")) {
+      val config = ExtractionConfig.fromProperties(Map(
+        ExtractionConfig.DelimiterKey -> ";",
+        ExtractionConfig.SortOrderDelimiterKey -> "#",
+        ExtractionConfig.OutputDelimiterKey -> "|",
+        ExtractionConfig.NodesKey -> "s;",
+        ExtractionConfig.NrOfColumnsKey -> "1",
+        "s" -> s"s;false;true; ;0#$xpath;"))
+      assert(XmlExtraction.run(doc, config).collect().map(_.getString(0)).toSeq == Seq("ax<b|"), xpath)
+    }
+  }
+
   test("SequenceFile round-trip: write corpus, read back, extract identically") {
     val dir = java.nio.file.Files.createTempDirectory("graft-seq").toFile
     dir.deleteOnExit()
@@ -114,5 +130,34 @@ class XmlExtractionGoldenSpec extends SparkSpec {
     val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
     val out = XmlExtraction.run(back, config).collect().map(_.getString(0)).toSeq.sorted
     assert(out == goldenInventory)
+  }
+
+  test("SequenceFile input splits to the core count; every document lands in one split") {
+    import org.apache.hadoop.io.Text
+    import spark.implicits._
+    // 64 documents of about 8.7 KB: one part file that spans several sync
+    // markers, so a byte-range split can start mid-file
+    val docs = (0 until 64).map { i =>
+      (f"doc$i%02d", resourceText("InventoryBanks.xml").replace("BanksBooks", s"Banks$i"))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-seq-split").toFile
+    dir.deleteOnExit()
+    val path = s"${dir.getAbsolutePath}/corpus.seq"
+    spark.sparkContext.parallelize(docs, 1)
+      .map { case (k, v) => (new Text(k), new Text(v)) }
+      .saveAsSequenceFile(path)
+
+    val back = XmlExtraction.corpusFromSequenceFile(spark, path)
+    assert(back.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    val perPartition = back.select("docId").as[String].rdd.glom().collect().map(_.toSeq)
+    assert(perPartition.forall(_.nonEmpty), perPartition.map(_.size).mkString("sizes ", ",", ""))
+    assert(perPartition.flatten.sorted.toSeq == docs.map(_._1))
+
+    val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
+    def extracted(corpus: org.apache.spark.sql.DataFrame): Seq[String] =
+      XmlExtraction.run(corpus, config).collect().map(_.getString(0)).toSeq.sorted
+    val inMemory = extracted(docs.toDF("docId", "xml"))
+    assert(inMemory.size == 64 * 19)
+    assert(extracted(back) == inMemory)
   }
 }
