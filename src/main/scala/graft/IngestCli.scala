@@ -7,8 +7,10 @@ import graft.xml.XmlExtraction
  * (`CreateSequenceFile.java:19-57`): pack a directory of XML documents into a
  * SequenceFile corpus. Unlike the reference's single-JVM client loop, this
  * runs distributed — each partition writes a SequenceFile part — and uses
- * deterministic docIds (file names) instead of random UUIDs
- * (`CreateSequenceFile.java:49`; divergence documented in SURVEY.md §2.10 #8).
+ * deterministic docIds instead of random UUIDs (`CreateSequenceFile.java:49`;
+ * divergence documented in SURVEY.md §2.10 #8): a document's docId is its file's
+ * path relative to the deepest glob-free directory of the input path, so a flat
+ * directory keeps bare file names ([[XmlExtraction.corpusFromXmlFiles]]).
  */
 object IngestCli {
   def main(args: Array[String]): Unit = {

@@ -66,6 +66,12 @@ final case class ExtractionConfig(
     rules: Seq[ExtractionRule]) {
 
   require(nrOfColumns > 0, "nr_of_columns must be positive")
+  // the reference writes `theColumns[order]` into an array of nr_of_columns, so an
+  // order outside it fails that job; here it fails when the config is built
+  for (r <- rules; p <- r.xpaths)
+    require(p.order >= 0 && p.order < nrOfColumns,
+      s"rule '${r.element}': projection '${p.order}$sortOrderDelimiter${p.xpath}' has an order " +
+        s"outside [0, $nrOfColumns), nr_of_columns = $nrOfColumns")
 
   /** The column index whose arrival triggers emission of a row
    * (`XmlExtractor.java:159`: `order == nrOfColumns - 1`). */

@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{ExtractionConfig, ExtractionRule}
-import graft.xml.FragmentScanner
+import graft.xml.{FragmentScanner, XmlExtraction}
 
 /**
  * DataSource V2 file source `graft-xml`: scans XML documents for configured
@@ -39,6 +39,8 @@ import graft.xml.FragmentScanner
  * Scan-level optimizations, in the DSv2 contract:
  *  - one input partition per file: a document is the indivisible unit (the
  *    reference's `isSplitable = false`), parallelism = file count;
+ *  - `docId` is the file's path relative to the deepest glob-free directory of
+ *    the load path, the rule [[XmlExtraction.corpusFromXmlFiles]] uses;
  *  - column pruning ([[SupportsPushDownRequiredColumns]]): e.g. a count over
  *    fragments never materializes the fragment bodies;
  *  - `rule = '...'` filter pushdown ([[SupportsPushDownFilters]]): evaluated
@@ -142,8 +144,9 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
     val openCost =
       byteStringAsBytes(session.conf.get("spark.sql.files.openCostInBytes", "4m"))
 
+    val base = XmlExtraction.docIdBase(path, hadoopConf)
     val partitions = Array.newBuilder[InputPartition]
-    val current = Array.newBuilder[String]
+    val current = Array.newBuilder[(String, String)]
     var currentBytes = 0L
     var currentN = 0
     def flush(): Unit = if (currentN > 0) {
@@ -153,7 +156,7 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
     files.foreach { st =>
       val cost = st.getLen + openCost
       if (currentN > 0 && currentBytes + cost > maxBytes) flush()
-      current += st.getPath.toString
+      current += st.getPath.toString -> XmlExtraction.docId(st.getPath, base)
       currentBytes += cost
       currentN += 1
     }
@@ -172,7 +175,8 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
   }
 }
 
-private[sources] case class XmlFilesPartition(files: Array[String]) extends InputPartition
+/** The files of one input partition, each with its docId. */
+private[sources] case class XmlFilesPartition(files: Array[(String, String)]) extends InputPartition
 
 private[sources] class XmlFragmentReaderFactory(
     rules: IndexedSeq[ExtractionRule], fields: Array[String], ruleEqs: Set[String],
@@ -184,7 +188,7 @@ private[sources] class XmlFragmentReaderFactory(
 }
 
 private[sources] class XmlFragmentReader(
-    files: Array[String], rules: IndexedSeq[ExtractionRule], fields: Array[String],
+    files: Array[(String, String)], rules: IndexedSeq[ExtractionRule], fields: Array[String],
     ruleEqs: Set[String], confProps: Array[(String, String)])
     extends PartitionReader[InternalRow] {
 
@@ -218,9 +222,8 @@ private[sources] class XmlFragmentReader(
     while (idx >= fragments.length) {
       fileIdx += 1
       if (fileIdx >= files.length) return false
-      val file = files(fileIdx)
-      docId = file.substring(file.lastIndexOf('/') + 1)
-      fragments = scanFile(file)
+      docId = files(fileIdx)._2
+      fragments = scanFile(files(fileIdx)._1)
       idx = 0
     }
     true

@@ -43,7 +43,7 @@ object StreamingExtraction {
 
   /**
    * Streaming variant of [[XmlExtraction.corpusFromXmlFiles]]: every file that
-   * lands in `dir` becomes one document row with a deterministic docId.
+   * lands in `dir` becomes one document row, with the same docId rule.
    */
   def streamingCorpus(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
@@ -51,7 +51,7 @@ object StreamingExtraction {
       .option("maxFilesPerTrigger", 1000)
       .text(dir)
       .select(
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("docId"),
+        XmlExtraction.docIdColumn(spark, dir).as("docId"),
         col("value").as("xml"))
 
   /**

@@ -1,6 +1,6 @@
 package graft.xml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -68,13 +68,4 @@ object StructuredExtraction {
       .select(col("store"), col("phone"), col("month"), col("day"),
         col("book._id").as("book_id"),
         col("book._inStock").cast("string").as("in_stock"))
-
-  /** Render structured rows in the reference's delimited shape (trailing
-   * delimiter, space for null) for golden comparison. */
-  def toLines(df: DataFrame, delimiter: String): DataFrame = {
-    val pieces: Seq[Column] = df.columns.toSeq.flatMap { c =>
-      Seq(when(col(c).isNull || col(c) === "", lit(" ")).otherwise(col(c)), lit(delimiter))
-    }
-    df.select(concat(pieces: _*).as("line"))
-  }
 }

@@ -23,4 +23,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
+
+  test("new XPathEvaluator( appears once under src/main/scala: one extraction kernel") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val hits = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("new XPathEvaluator(")
+    } yield s"$f:${i + 1}"
+    assert(hits.size == 1, hits.mkString("\n", "\n", ""))
+  }
 }

@@ -64,4 +64,23 @@ class ExtractionConfigSpec extends AnyFunSuite {
     assert(r.requiredAttrSubstring.contains("x"))
     assert(r.xpaths == Seq(XPathProjection(1, "//e/text()")))
   }
+
+  private def withOrder(order: Int): ExtractionConfig = ExtractionConfig.fromProperties(Map(
+    ExtractionConfig.DelimiterKey -> ";",
+    ExtractionConfig.SortOrderDelimiterKey -> "#",
+    ExtractionConfig.OutputDelimiterKey -> ";",
+    ExtractionConfig.NodesKey -> "e;",
+    ExtractionConfig.NrOfColumnsKey -> "2",
+    "e" -> s"e;true;false; ;0#//e/@a;$order#//e/@b;"))
+
+  test("a projection order equal to nr_of_columns is rejected, naming rule and projection") {
+    assert(withOrder(1).rules.head.xpaths.map(_.order) == Seq(0, 1))
+    val e = intercept[IllegalArgumentException](withOrder(2))
+    assert(e.getMessage.contains("rule 'e'") && e.getMessage.contains("'2#//e/@b'"), e.getMessage)
+  }
+
+  test("a negative projection order is rejected, naming rule and projection") {
+    val e = intercept[IllegalArgumentException](withOrder(-1))
+    assert(e.getMessage.contains("rule 'e'") && e.getMessage.contains("'-1#//e/@b'"), e.getMessage)
+  }
 }

@@ -81,14 +81,14 @@ class XmlFragmentSourceSpec extends SparkSpec {
 
     val all = readPath(root.toString)
     val docs = all.select("docId").distinct().collect().map(_.getString(0)).toSet
-    assert(docs == Set("InventorySoho.xml", "InventoryBanks.xml", "InventorySoho2.xml"))
+    assert(docs == Set("a/InventorySoho.xml", "a/deep/InventoryBanks.xml", "b/InventorySoho2.xml"))
     // three small files fit one maxPartitionBytes budget → packed together
     assert(all.rdd.getNumPartitions == 1)
 
     // glob limits to the matching subtree (a/* = the direct file + deep/, recursed)
     val globbed = readPath(s"$root/a/*")
     val globbedDocs = globbed.select("docId").distinct().collect().map(_.getString(0)).toSet
-    assert(globbedDocs == Set("InventorySoho.xml", "InventoryBanks.xml"))
+    assert(globbedDocs == Set("InventorySoho.xml", "deep/InventoryBanks.xml"))
   }
 
   test("conflicting pushed rule equalities yield the empty intersection") {
@@ -106,5 +106,27 @@ class XmlFragmentSourceSpec extends SparkSpec {
       .orderBy("docId", "seq").collect().map(_.toSeq).toSeq
     assert(viaDsv2 == fused)
     assert(viaDsv2.nonEmpty)
+  }
+
+  test("same-name files in different directories stay two documents (docId = relative path)") {
+    val tree = Files.createTempDirectory("graft-dsv2-samename")
+    for ((sub, name) <- Seq("a" -> "InventorySoho.xml", "b" -> "InventoryBanks.xml"))
+      Files.writeString(Files.createDirectory(tree.resolve(sub)).resolve("x.xml"), resourceText(name))
+    val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
+    def lines(rows: org.apache.spark.sql.DataFrame) =
+      XmlExtraction.formatLines(rows, config).collect().map(_.getString(0)).toSeq.sorted
+    // each document extracted alone: the 30 golden rows
+    val alone = lines(XmlExtraction.extractRows(XmlExtraction.corpusFromXmlFiles(spark, dir), config))
+    assert(alone.length == 30)
+
+    val fragments = spark.read.format("graft-xml").option("config", configPath).load(tree.toString)
+    val viaDsv2 = XmlExtraction.pivotRows(XmlExtraction.tuplesFromFragments(fragments, config), config)
+    assert(lines(viaDsv2) == alone)
+    assert(viaDsv2.select("docId").distinct().collect().map(_.getString(0)).toSet ==
+      Set("a/x.xml", "b/x.xml"))
+
+    val globbed = XmlExtraction.corpusFromXmlFiles(spark, s"$tree/*")
+    assert(globbed.select("docId").collect().map(_.getString(0)).toSet == Set("a/x.xml", "b/x.xml"))
+    assert(lines(XmlExtraction.extractRows(globbed, config)) == alone)
   }
 }

@@ -23,7 +23,7 @@ class StructuredExtractionSpec extends SparkSpec {
   }
 
   test("structured ExtractInventory == parity engine output (30 golden rows)") {
-    val structured = StructuredExtraction.toLines(
+    val structured = XmlExtraction.delimitedLines(
       StructuredExtraction.inventoryQuery(spark, dir), ";")
       .collect().map(_.getString(0)).toSeq.sorted
     val parity = parityLines("ExtractInventory.xml")
@@ -32,7 +32,7 @@ class StructuredExtractionSpec extends SparkSpec {
   }
 
   test("structured ExtractBook (bk106) == parity engine output (4 rows)") {
-    val structured = StructuredExtraction.toLines(
+    val structured = XmlExtraction.delimitedLines(
       StructuredExtraction.bookQuery(spark, dir, "bk106"), ";")
       .collect().map(_.getString(0)).toSeq.sorted
     val parity = parityLines("ExtractBook.xml")
