@@ -4,8 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -18,7 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{ExtractionConfig, ExtractionRule}
-import graft.xml.{FragmentScanner, XmlExtraction}
+import graft.xml.{FragmentScanner, XmlExtraction, XmlFile}
 
 /**
  * DataSource V2 file source `graft-xml`: scans XML documents for configured
@@ -37,8 +36,15 @@ import graft.xml.{FragmentScanner, XmlExtraction}
  * per extracted fragment, `seq` = stream position (document order).
  *
  * Scan-level optimizations, in the DSv2 contract:
- *  - one input partition per file: a document is the indivisible unit (the
- *    reference's `isSplitable = false`), parallelism = file count;
+ *  - the files are those of [[XmlExtraction.listXmlFiles]], the lister of
+ *    [[XmlExtraction.corpusFromXmlFiles]]: a glob is expanded, directories are
+ *    walked with `listStatus`, names starting with `_` or `.` are skipped with
+ *    everything below them, and a missing path fails with `PATH_NOT_FOUND`;
+ *  - a document is the indivisible unit (the reference's `isSplitable = false`):
+ *    whole files are packed in path order into partitions of at most
+ *    `spark.sql.files.maxPartitionBytes`, each file counted with
+ *    `spark.sql.files.openCostInBytes` on top of its length; each file is read
+ *    whole by [[XmlExtraction.readXmlFile]] (one open, codecs by extension);
  *  - `docId` is the file's path relative to the deepest glob-free directory of
  *    the load path, the rule [[XmlExtraction.corpusFromXmlFiles]] uses;
  *  - column pruning ([[SupportsPushDownRequiredColumns]]): e.g. a count over
@@ -114,29 +120,14 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
       (if (ruleEqs.nonEmpty) s" pushedRules=${ruleEqs.mkString(",")}" else "")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // Driver-side listing with the session's Hadoop conf. Files are packed
-    // into shared partitions up to spark.sql.files.maxPartitionBytes (with
-    // the standard openCostInBytes padding per file), so a 100 TB layout of
-    // millions of small documents doesn't produce millions of partitions —
-    // but a file is never split (the document is the indivisible unit, the
-    // reference's `isSplitable = false`).
+    // Driver-side listing with the session's Hadoop conf, the rule of
+    // XmlExtraction.listXmlFiles. Files are packed into shared partitions up to
+    // spark.sql.files.maxPartitionBytes (with the standard openCostInBytes
+    // padding per file), so a 100 TB layout of millions of small documents
+    // doesn't produce millions of partitions — but a file is never split (the
+    // document is the indivisible unit, the reference's `isSplitable = false`).
     val session = SparkSession.active
-    val hadoopConf = session.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hadoopConf)
-    val globbed: Array[org.apache.hadoop.fs.FileStatus] =
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val files = globbed.flatMap { st =>
-      if (st.isDirectory) {
-        // recursive listing below each matched directory
-        val it = fs.listFiles(st.getPath, true)
-        val buf = Array.newBuilder[org.apache.hadoop.fs.FileStatus]
-        while (it.hasNext) buf += it.next()
-        buf.result()
-      } else Array(st)
-    }.filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-        && !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.toString)
+    val files = XmlExtraction.listXmlFiles(path, session.sparkContext.hadoopConfiguration)
 
     import org.apache.spark.network.util.JavaUtils.byteStringAsBytes
     val maxBytes =
@@ -144,19 +135,18 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
     val openCost =
       byteStringAsBytes(session.conf.get("spark.sql.files.openCostInBytes", "4m"))
 
-    val base = XmlExtraction.docIdBase(path, hadoopConf)
     val partitions = Array.newBuilder[InputPartition]
-    val current = Array.newBuilder[(String, String)]
+    val current = Array.newBuilder[XmlFile]
     var currentBytes = 0L
     var currentN = 0
     def flush(): Unit = if (currentN > 0) {
       partitions += XmlFilesPartition(current.result())
       current.clear(); currentBytes = 0L; currentN = 0
     }
-    files.foreach { st =>
-      val cost = st.getLen + openCost
+    files.foreach { f =>
+      val cost = f.length + openCost
       if (currentN > 0 && currentBytes + cost > maxBytes) flush()
-      current += st.getPath.toString -> XmlExtraction.docId(st.getPath, base)
+      current += f
       currentBytes += cost
       currentN += 1
     }
@@ -164,19 +154,13 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
     partitions.result()
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Hadoop Configuration is not Serializable; ship the driver conf's
-    // resolved properties and rebuild it on executors so filesystem settings
-    // and credentials (fs.defaultFS, S3A keys, ...) survive the trip.
-    val hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-    val confProps: Array[(String, String)] =
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-    new XmlFragmentReaderFactory(rules, required.fieldNames, ruleEqs, confProps)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new XmlFragmentReaderFactory(rules, required.fieldNames, ruleEqs,
+      XmlExtraction.confProps(SparkSession.active.sparkContext.hadoopConfiguration))
 }
 
-/** The files of one input partition, each with its docId. */
-private[sources] case class XmlFilesPartition(files: Array[(String, String)]) extends InputPartition
+/** The files of one input partition. */
+private[sources] case class XmlFilesPartition(files: Array[XmlFile]) extends InputPartition
 
 private[sources] class XmlFragmentReaderFactory(
     rules: IndexedSeq[ExtractionRule], fields: Array[String], ruleEqs: Set[String],
@@ -188,24 +172,16 @@ private[sources] class XmlFragmentReaderFactory(
 }
 
 private[sources] class XmlFragmentReader(
-    files: Array[(String, String)], rules: IndexedSeq[ExtractionRule], fields: Array[String],
+    files: Array[XmlFile], rules: IndexedSeq[ExtractionRule], fields: Array[String],
     ruleEqs: Set[String], confProps: Array[(String, String)])
     extends PartitionReader[InternalRow] {
 
-  private lazy val hadoopConf = {
-    val c = new Configuration(false)
-    confProps.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  private lazy val hadoopConf = XmlExtraction.confFrom(confProps)
+
+  private lazy val codecs = new CompressionCodecFactory(hadoopConf)
 
   private def scanFile(file: String): IndexedSeq[graft.xml.Fragment] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(hadoopConf)
-    val in = fs.open(p)
-    val content =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val all = FragmentScanner.scan(content, rules)
+    val all = FragmentScanner.scan(XmlExtraction.readXmlFile(file, hadoopConf, codecs), rules)
     if (ruleEqs.isEmpty) all
     // single pushed value: equality; 2+ distinct values: empty intersection
     else if (ruleEqs.size == 1) all.filter(f => rules(f.ruleIndex).element == ruleEqs.head)
@@ -222,8 +198,8 @@ private[sources] class XmlFragmentReader(
     while (idx >= fragments.length) {
       fileIdx += 1
       if (fileIdx >= files.length) return false
-      docId = files(fileIdx)._2
-      fragments = scanFile(files(fileIdx)._1)
+      docId = files(fileIdx).docId
+      fragments = scanFile(files(fileIdx).path)
       idx = 0
     }
     true

@@ -43,7 +43,8 @@ object StreamingExtraction {
 
   /**
    * Streaming variant of [[XmlExtraction.corpusFromXmlFiles]]: every file that
-   * lands in `dir` becomes one document row, with the same docId rule.
+   * lands in `dir` becomes one document row, with the same docId rule. Only the
+   * directory's own files are read; the batch reader also walks its subdirectories.
    */
   def streamingCorpus(spark: SparkSession, dir: String): DataFrame =
     spark.readStream

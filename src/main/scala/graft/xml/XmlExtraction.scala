@@ -1,13 +1,18 @@
 package graft.xml
 
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, InputStream}
+import java.nio.charset.StandardCharsets
 import java.util.regex.Pattern
 import javax.xml.parsers.DocumentBuilderFactory
 import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.w3c.dom.NodeList
@@ -18,6 +23,10 @@ import graft.config.{ExtractionConfig, ExtractionRule}
  * records (`XmlReducerKeyWritable` + `XmlReducerValueWritable`):
  * (document id, stream position of the fragment, output column index, extracted value). */
 final case class ExtractedTuple(docId: String, seq: Long, order: Int, value: String)
+
+/** One input file of a whole-document read: its qualified path, its length in bytes and
+ * its docId ([[XmlExtraction.docId]]). */
+final case class XmlFile(path: String, length: Long, docId: String)
 
 /**
  * The per-document pipeline, defined once: scan a document into fragments, evaluate
@@ -81,12 +90,100 @@ object XmlExtraction {
    * file's path relative to the deepest glob-free directory of `path`, so a flat
    * directory keeps bare file names and `tree/a/x.xml`, `tree/b/x.xml` stay apart. The
    * reference keys documents by random UUID (`SeqXmlRecordReader.java:171`, SURVEY.md
-   * §2.10 #8) — we make ids deterministic for testability. */
-  def corpusFromXmlFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", true).text(path)
-      .select(
-        docIdColumn(spark, path).as("docId"),
-        col("value").as("xml"))
+   * §2.10 #8) — we make ids deterministic for testability.
+   *
+   * The files are those of [[listXmlFiles]] (a missing path fails naming it), packed
+   * by [[packFiles]] into at least `defaultParallelism` partitions of whole files, so
+   * a directory of small documents still feeds every core. A task reads each of its
+   * files with [[readXmlFile]]. */
+  def corpusFromXmlFiles(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val maxBytes = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    val groups = packFiles(listXmlFiles(path, sc.hadoopConfiguration), sc.defaultParallelism, maxBytes)
+    val props = confProps(sc.hadoopConfiguration)
+    sc.parallelize(groups, groups.size.max(1)).mapPartitions { group =>
+      val conf = confFrom(props)
+      val codecs = new CompressionCodecFactory(conf)
+      group.flatten.map(f => (f.docId, readXmlFile(f.path, conf, codecs)))
+    }.toDF("docId", "xml")
+  }
+
+  /** A Hadoop conf's resolved properties, to rebuild it in a task with [[confFrom]]:
+   * `Configuration` is not Serializable, and filesystem settings and credentials
+   * (`fs.defaultFS`, S3A keys, ...) must survive the trip. */
+  private[graft] def confProps(conf: Configuration): Array[(String, String)] =
+    conf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
+
+  /** The Hadoop conf [[confProps]] shipped. */
+  private[graft] def confFrom(props: Array[(String, String)]): Configuration = {
+    val conf = new Configuration(false)
+    props.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  /** One whole document, decoded as UTF-8, with one `open`: a file whose extension names a
+   * Hadoop codec (`.gz`, `.bz2`, ...) is decompressed, as Spark's `wholetext` reader does.
+   * Both file readers read through it, each task with one codec factory. */
+  def readXmlFile(path: String, conf: Configuration, codecs: CompressionCodecFactory): String = {
+    val p = new Path(path)
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(codecs.getCodec(p)).fold[InputStream](raw)(_.createInputStream(raw))
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** The files a whole-document read of `path` covers, sorted by path, each with its
+   * [[docId]]. `path` is a file, a directory or a glob; directories are walked
+   * recursively with `listStatus`. Spark's hidden-path rule applies to files and
+   * directories alike, wherever the glob or the walk meets them: a name starting with
+   * `_` or `.` (`_SUCCESS`, `_temporary/`, `.x.crc`), or ending in `._COPYING_`, is
+   * skipped with everything below it. A glob-free `path` is read even when its own
+   * name is hidden. A path that does not exist, or a glob that matches nothing, fails
+   * with `PATH_NOT_FOUND`. */
+  def listXmlFiles(path: String, conf: Configuration): IndexedSeq[XmlFile] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val roots = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
+    if (roots.isEmpty)
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(p).toString))
+    def hidden(name: String) =
+      name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
+    def walk(st: FileStatus, named: Boolean): Iterator[FileStatus] =
+      if (!named && hidden(st.getPath.getName)) Iterator.empty
+      else if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk(_, named = false))
+      else Iterator(st)
+    val literal = !path.exists(GlobChars.contains(_))
+    val base = docIdBase(path, conf)
+    roots.iterator.flatMap(walk(_, literal)).toIndexedSeq.sortBy(_.getPath.toString)
+      .map(st => XmlFile(st.getPath.toString, st.getLen, docId(st.getPath, base)))
+  }
+
+  /** Whole files → contiguous groups in path order, balanced by bytes: at least
+   * `minGroups` of them (never more than there are files), none above `maxBytes`
+   * except a single file larger than that, which sits alone. Each group takes the
+   * files up to its even share of the bytes still unassigned, rounding at file
+   * midpoints, so small files spread evenly over the cores. */
+  def packFiles(files: IndexedSeq[XmlFile], minGroups: Int, maxBytes: Long): IndexedSeq[IndexedSeq[XmlFile]] = {
+    val total = files.iterator.map(_.length).sum
+    val wanted = math.min(files.size.toLong, math.max(minGroups.toLong, (total + maxBytes - 1) / maxBytes))
+    val groups = IndexedSeq.newBuilder[IndexedSeq[XmlFile]]
+    val current = IndexedSeq.newBuilder[XmlFile]
+    var closed = 0L // groups emitted so far
+    var left = total // bytes not yet in an emitted group
+    var bytes = 0L // bytes in the current group
+    var n = 0 // files in the current group
+    for ((f, i) <- files.iterator.zipWithIndex) {
+      val share = left.toDouble / (wanted - closed).max(1)
+      val mustOpen = files.size - i <= wanted - closed - 1 // one file left per group still wanted
+      if (n > 0 && (bytes + f.length > maxBytes || bytes + f.length / 2.0 > share || mustOpen)) {
+        groups += current.result(); current.clear()
+        closed += 1; left -= bytes; bytes = 0L; n = 0
+      }
+      current += f; bytes += f.length; n += 1
+    }
+    if (n > 0) groups += current.result()
+    groups.result()
+  }
 
   /** Read a reference-format SequenceFile corpus (`Text` uuid → `Text` xml document,
    * `CreateSequenceFile.java:37-51`). The read asks for at least `defaultParallelism`
@@ -112,6 +209,9 @@ object XmlExtraction {
       .saveAsSequenceFile(path)
   }
 
+  /** The characters that make a load path a glob for Hadoop's `globStatus`. */
+  private val GlobChars = "*?[{\\"
+
   /** The docId rule of every file reader: a file's docId is its path relative to the
    * deepest glob-free directory of the load path — the load path itself when it is a
    * directory (or does not exist yet), its parent when it is a file. */
@@ -120,7 +220,7 @@ object XmlExtraction {
     val fs = p.getFileSystem(conf)
     val q = fs.makeQualified(p)
     Iterator.iterate(q)(_.getParent).takeWhile(_ != null)
-      .filter(_.getName.exists("*?[{\\".contains(_))).toSeq.lastOption.map(_.getParent)
+      .filter(_.getName.exists(GlobChars.contains(_))).toSeq.lastOption.map(_.getParent)
       .getOrElse(if (fs.exists(q) && fs.getFileStatus(q).isFile) q.getParent else q)
   }
 

@@ -34,4 +34,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     assert(hits.size == 1, hits.mkString("\n", "\n", ""))
   }
+
+  test("file readers list with listStatus, and only streaming reads wholetext") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val lines = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    } yield (f, s"$f:${i + 1}", line)
+    // on the local filesystem both build a LocatedFileStatus per file, which forks `ls`
+    val forking = lines.collect { case (_, at, l) if l.contains("listFiles(") || l.contains("listLocatedStatus(") => at }
+    assert(forking.isEmpty, forking.mkString("\n", "\n", ""))
+    val wholetext = lines.collect {
+      case (f, at, l) if l.contains("\"wholetext\"") && !f.endsWith("streaming/StreamingExtraction.scala") => at
+    }
+    assert(wholetext.isEmpty, wholetext.mkString("\n", "\n", ""))
+    assert(lines.exists(_._3.contains("\"wholetext\"")))
+  }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -75,6 +76,9 @@ class XmlFragmentSourceSpec extends SparkSpec {
     Files.writeString(subB.resolve("InventoryBanks.xml"), resourceText("InventoryBanks.xml"))
     Files.writeString(subC.resolve("InventorySoho2.xml"), resourceText("InventorySoho.xml"))
     Files.writeString(root.resolve("_SUCCESS"), "") // marker files are skipped
+    // and so is everything below a hidden directory
+    for (hidden <- Seq("_temporary", ".x"))
+      Files.writeString(Files.createDirectory(root.resolve(hidden)).resolve("y.xml"), resourceText("InventorySoho.xml"))
 
     def readPath(p: String) =
       spark.read.format("graft-xml").option("config", configPath).load(p)
@@ -128,5 +132,30 @@ class XmlFragmentSourceSpec extends SparkSpec {
     val globbed = XmlExtraction.corpusFromXmlFiles(spark, s"$tree/*")
     assert(globbed.select("docId").collect().map(_.getString(0)).toSet == Set("a/x.xml", "b/x.xml"))
     assert(lines(XmlExtraction.extractRows(globbed, config)) == alone)
+  }
+
+  test("both file readers fail naming a missing path or a glob that matches nothing") {
+    val root = Files.createTempDirectory("graft-missing")
+    for (p <- Seq(s"$root/absent", s"$root/*.xml")) {
+      val viaCorpus = intercept[AnalysisException](XmlExtraction.corpusFromXmlFiles(spark, p))
+      val viaSource = intercept[AnalysisException](
+        spark.read.format("graft-xml").option("config", configPath).load(p).count())
+      for (e <- Seq(viaCorpus, viaSource)) {
+        assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+        assert(e.getMessage.contains(p), e.getMessage)
+      }
+    }
+  }
+
+  test("a gzipped document scans to the fragments of its plain twin") {
+    val d = Files.createTempDirectory("graft-dsv2-gz")
+    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(d.resolve("InventorySoho.xml.gz")))
+    try gz.write(resourceText("InventorySoho.xml").getBytes("UTF-8")) finally gz.close()
+    def fragments(p: String) =
+      spark.read.format("graft-xml").option("config", configPath).load(p)
+        .collect().map(r => (r.getLong(1), r.getString(2), r.getString(3))).toSet
+    val plain = fragments(s"$dir/InventorySoho.xml")
+    assert(plain.nonEmpty)
+    assert(fragments(d.toString) == plain)
   }
 }

@@ -160,4 +160,105 @@ class XmlExtractionGoldenSpec extends SparkSpec {
     assert(inMemory.size == 64 * 19)
     assert(extracted(back) == inMemory)
   }
+
+  test("small XML files pack to the core count: whole documents, every docId once") {
+    import spark.implicits._
+    // 200 files: Spark's own packing (a 4 MB open cost per file against a 128 MB
+    // budget) makes 7 partitions of them, so only a core-count packer passes; with
+    // 64 files it would land on 4 as well
+    val docs = (0 until 200).map { i =>
+      (f"doc$i%03d.xml", resourceText("InventoryBanks.xml").replace("BanksBooks", s"Banks$i"))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-small-files")
+    for ((name, xml) <- docs) java.nio.file.Files.writeString(dir.resolve(name), xml)
+
+    val back = XmlExtraction.corpusFromXmlFiles(spark, dir.toString)
+    assert(back.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    val perPartition = back.select("docId").as[String].rdd.glom().collect().map(_.toSeq)
+    assert(perPartition.forall(_.nonEmpty), perPartition.map(_.size).mkString("sizes ", ",", ""))
+    assert(perPartition.flatten.sorted.toSeq == docs.map(_._1))
+
+    val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
+    def extracted(corpus: org.apache.spark.sql.DataFrame): Seq[String] =
+      XmlExtraction.run(corpus, config).collect().map(_.getString(0)).toSeq.sorted
+    val inMemory = extracted(docs.toDF("docId", "xml"))
+    assert(inMemory.size == 200 * 19)
+    assert(extracted(back) == inMemory)
+  }
+
+  test("file listing and codecs match Spark's wholetext reader, for a directory and a glob") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    val tree = Files.createTempDirectory("graft-list-parity")
+    def put(rel: String, text: String): Unit = {
+      val f = tree.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, text)
+    }
+    val soho = resourceText("InventorySoho.xml")
+    val banks = resourceText("InventoryBanks.xml")
+    put("top.xml", soho)
+    put("a/x.xml", banks)
+    put("a/deep/x.xml", soho.replace("SohoBooks", "DeepBooks"))
+    put("a/plus+one.xml", banks.replace("BanksBooks", "PlusBooks"))
+    put("a/with space.xml", soho.replace("SohoBooks", "SpaceBooks"))
+    put("_SUCCESS", "")
+    put("a/_SUCCESS", "")
+    put(".x.xml.crc", "crc")
+    put("_temporary/y.xml", soho)
+    put("a/_temporary/y.xml", soho)
+    put(".hidden/z.xml", banks)
+    put("a/.hidden/z.xml", banks)
+    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(tree.resolve("a/packed.xml.gz")))
+    try gz.write(banks.replace("BanksBooks", "GzipBooks").getBytes("UTF-8")) finally gz.close()
+
+    def viaWholetext(p: String, recursive: Boolean = false): Set[(String, String)] =
+      spark.read.option("wholetext", true).option("recursiveFileLookup", recursive).text(p)
+        .select(XmlExtraction.docIdColumn(spark, p), col("value"))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    def viaCorpus(p: String): Set[(String, String)] =
+      XmlExtraction.corpusFromXmlFiles(spark, p)
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+    // a directory is walked like Spark's reader with recursiveFileLookup: hidden names
+    // below it are skipped, `+` and spaces survive in docIds, `.gz` is decompressed
+    val all = viaCorpus(tree.toString)
+    assert(all == viaWholetext(tree.toString, recursive = true))
+    assert(all.map(_._1) == Set("top.xml", "a/x.xml", "a/deep/x.xml", "a/plus+one.xml",
+      "a/with space.xml", "a/packed.xml.gz"))
+    assert(all.exists(_._2.contains("GzipBooks")))
+    // Spark's plain reader keeps only the directory's own files
+    assert(viaWholetext(tree.toString) == all.filterNot(_._1.contains("/")))
+    // a glob of files reads what Spark's plain reader reads
+    assert(viaCorpus(s"$tree/a/*.xml*") == viaWholetext(s"$tree/a/*.xml*"))
+    // a glob of directories: Spark reads below a matched `_temporary/` or `.hidden/`, the
+    // lister skips them as it skips them below a directory
+    assert(viaCorpus(s"$tree/*") == viaWholetext(s"$tree/*", recursive = true)
+      .filterNot(d => d._1.startsWith("_") || d._1.startsWith(".")))
+    // a hidden directory named outright is read
+    assert(viaCorpus(s"$tree/_temporary") == viaWholetext(s"$tree/_temporary"))
+    assert(viaCorpus(s"$tree/_temporary").map(_._1) == Set("y.xml"))
+  }
+
+  test("packFiles: contiguous groups, at least minGroups, none above maxBytes unless alone") {
+    val rnd = new scala.util.Random(7)
+    for (_ <- 0 until 500) {
+      val n = rnd.nextInt(40)
+      val files = (0 until n).map { i =>
+        XmlFile(f"f$i%03d", if (rnd.nextInt(8) == 0) rnd.nextInt(2000).toLong else rnd.nextInt(100).toLong, "")
+      }
+      val minGroups = 1 + rnd.nextInt(8)
+      val maxBytes = 50L + rnd.nextInt(500)
+      val groups = XmlExtraction.packFiles(files, minGroups, maxBytes)
+      val shown = s"min $minGroups max $maxBytes: ${groups.map(_.map(_.length))}"
+      assert(groups.flatten == files, shown)
+      assert(groups.forall(_.nonEmpty), shown)
+      assert(groups.size >= math.min(minGroups, n), shown)
+      assert(groups.forall(g => g.size == 1 || g.map(_.length).sum <= maxBytes), shown)
+    }
+    // equal files spread evenly; the byte budget adds groups beyond the core count
+    val equal = (0 until 1000).map(i => XmlFile(f"f$i%04d", 7000L, ""))
+    assert(XmlExtraction.packFiles(equal, 4, 128L << 20).map(_.size) == Seq.fill(4)(250))
+    assert(XmlExtraction.packFiles(equal, 4, 700000L).map(_.size) == Seq.fill(10)(100))
+  }
 }
