@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions
 import graft.operators.Dedup
 
 /**
@@ -54,7 +55,7 @@ object PipelineScaleSmoke {
       Dedup.exact(docs, col("id"), col("text")).count()
     }
     val shingled = docs.select(col("id"),
-      call_function("word_ngrams", col("text"), lit(2)).as("shingles"))
+      TextFunctions.shingles(col("text"), 2).as("shingles"))
     // checkpoint the candidate set so the verify timing measures ONLY the
     // verification join, not a second candidate-generation run
     var candidates: org.apache.spark.sql.DataFrame = null

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions
 import graft.operators.{Bpe, CorpusOps, Dedup, Ivf, Similarity}
 
 /**
@@ -115,7 +116,7 @@ object TrainingScaleSmoke {
     //    contains every planted dup), the rest is the standing corpus. Bands
     //    join new×corpus only; exact Jaccard verifies the candidates.
     val (shingled, shingledIds) = checkpointTracked(docs.select(col("id"),
-      call_function("word_ngrams", col("text"), lit(2)).as("shingles")))
+      TextFunctions.shingles(col("text"), 2).as("shingles")))
     val newDocs = shingled.where(col("id") % 10 === 1)
     val oldDocs = shingled.where(col("id") % 10 =!= 1)
     var candidates: org.apache.spark.sql.DataFrame = null
@@ -191,7 +192,7 @@ object TrainingScaleSmoke {
     //     A planted pair shares 48 of its 49 bigrams → must surface ≥ 0.9.
     def bigramToks(pred: org.apache.spark.sql.Column) = docs.where(pred)
       .select(col("id"),
-        explode(call_function("word_ngrams", col("text"), lit(2))).as("term"))
+        explode(TextFunctions.shingles(col("text"), 2)).as("term"))
     timed(s"postings index write (${nDocs - nDocs / 10} docs)") {
       Similarity.writeTfidfPostingsIndex(bigramToks(col("id") % 10 =!= 1),
         "smoke_postings")

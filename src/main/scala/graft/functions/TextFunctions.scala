@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
  * tokenization, quality scoring, language-ID, shingling, and the md5-derived
  * 60-bit hash that underpins MinHash / SimHash / fingerprinting.
  *
- * Everything here is pure `org.apache.spark.sql.functions` composition — codegen'd
- * built-in expressions, no UDFs — so plans stay inside WholeStageCodegen and the
- * same computation is expressible verbatim in the DuckDB oracle SQL (md5 + integer
- * casts + list lambdas exist in both engines and produce identical values).
+ * Everything here is codegen'd Catalyst expressions, no UDFs: built-in
+ * `org.apache.spark.sql.functions` composition, plus the native shingling
+ * kernel — so plans stay inside WholeStageCodegen and the same computation
+ * is expressible verbatim in the DuckDB oracle SQL (md5 + integer casts +
+ * list lambdas exist in both engines and produce identical values).
  */
 object TextFunctions {
 
@@ -74,17 +75,17 @@ object TextFunctions {
     }.reduce(_ bitwiseXOR _)
 
   /**
-   * Distinct word n-gram shingles of `text`. Documents shorter than `n` words
-   * yield a single shingle (the whole text) so every document has a non-empty
-   * feature set.
+   * Distinct word n-gram shingles of `text` (single-space words, first
+   * occurrence order). Documents shorter than `n` words yield a single
+   * shingle (the whole text) so every document has a non-empty feature set;
+   * a null text yields null. This is the codegen'd
+   * [[graft.plans.WordNgramsExpr]], one pass per row, reached by the name
+   * [[graft.plans.GraftExtensions]] registers (every `graft.Sessions`
+   * session installs it; Spark keeps Column-from-Expression internal). A
+   * session without the extension fails at analysis naming `word_ngrams`.
    */
-  def shingles(text: Column, n: Int): Column = {
-    val w = tokens(text)
-    val grams = transform(
-      sequence(lit(0), size(w) - n),
-      i => array_join(slice(w, i + 1, lit(n)), " "))
-    array_distinct(when(size(w) >= n, grams).otherwise(array(text)))
-  }
+  def shingles(text: Column, n: Int): Column =
+    call_function("word_ngrams", text, lit(n))
 
   /** Mersenne prime modulus for the double-hashing MinHash family — keeps all
    * intermediate products < 2^36, so the arithmetic can't overflow in either

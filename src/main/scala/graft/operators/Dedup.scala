@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -67,8 +67,9 @@ object Dedup {
 
   /**
    * MinHash-LSH candidate pairs: signature → `bands` bands of `k/bands` rows →
-   * equi-join on (band index, band slice). Input must have columns `id` and
-   * `shingles` (distinct feature array). Output: distinct (a, b) with a < b.
+   * equi-join on (band index, band slice). Input must have columns `id`
+   * (one row per id: the [[bucketedPairs]] contract) and `shingles` (distinct
+   * feature array). Output: distinct (a, b) with a < b.
    *
    * The band bucket join is the scale path: corpus-size shuffle on the band
    * key, pair enumeration only inside buckets.
@@ -101,29 +102,37 @@ object Dedup {
    * preserves the connected component a dedup pass needs, while normal
    * buckets keep the exact all-pairs enumeration. Bounded-candidate behavior
    * on a planted mega-bucket is pinned in ScaleOpsSpec.
+   *
+   * CONTRACT: `banded` has at most one row per `(id, band)`, so a bucket's
+   * row count is its size. Every caller bands a table with one row per id
+   * through a generator that emits each band index once per row
+   * ([[bandedKeys]]' posexplode, the block-pair/triple/quad bands, the
+   * simhash chunks, the hyperplane words). A duplicated row would only
+   * overstate `n`: a bucket near the cap could take the star shape early.
+   *
+   * Plan: ONE `(band, band_key) → (n, rep)` census — a map-side-combinable
+   * count/min, so a mega-bucket never materializes as one in-memory array
+   * just to be sliced back down — joined back to the banded rows once, and
+   * ONE grouping of that joined frame emits both shapes. A small bucket
+   * (2..maxBucket) is one group: its sorted ids enumerate all pairs. A hot
+   * bucket groups by `star` = the member id, one row per group, which
+   * emits the star pair (rep, id); its rows spread over the reducers by id
+   * and never collect into one array.
    */
   def bucketedPairs(banded: DataFrame, maxBucket: Int = 10000): DataFrame = {
-    // Count-based pre-filter FIRST: bucket sizes come from a cheap
-    // map-side-combinable count/min aggregate, and collect_set only ever runs
-    // on buckets already known to be under the cap — a mega-bucket never
-    // materializes as one in-memory array on one reducer just to be sliced
-    // back down. Hot buckets take the star shape straight from the banded
-    // rows (id vs the bucket minimum), O(bucket) with no array at all.
-    val sizes = banded.groupBy(col("band"), col("band_key"))
-      .agg(countDistinct(col("id")).as("n"), min(col("id")).as("rep"))
-    val small = banded
-      .join(sizes.where(col("n").between(2, maxBucket))
-        .select(col("band"), col("band_key")), Seq("band", "band_key"))
-      .groupBy(col("band"), col("band_key"))
+    val census = banded.groupBy(col("band"), col("band_key"))
+      .agg(count(lit(1)).as("n"), min(col("id")).as("rep"))
+      .where(col("n") >= 2)
+    val hot = col("n") > maxBucket
+    banded.join(census, Seq("band", "band_key"))
+      .where(!hot || col("id") =!= col("rep"))
+      .groupBy(col("band"), col("band_key"), col("rep"),
+        when(hot, col("id")).as("star"))
       .agg(array_sort(collect_set(col("id"))).as("ids"))
-      .select(explode(pairsOf(col("ids"))).as("p"))
+      .select(explode(when(col("star").isNull, pairsOf(col("ids")))
+        .otherwise(array(struct(col("rep").as("a"), col("star").as("b"))))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
-    val hot = banded
-      .join(sizes.where(col("n") > maxBucket)
-        .select(col("band"), col("band_key"), col("rep")), Seq("band", "band_key"))
-      .where(col("id") =!= col("rep"))
-      .select(col("rep").as("a"), col("id").as("b"))
-    small.unionByName(hot).distinct()
+      .distinct()
   }
 
   /**
@@ -812,6 +821,15 @@ object Dedup {
    * exact stage decides — collision flukes die there (the r18
    * pigeonhole argument, pinned in GatedVerifySpec).
    *
+   * Each side is broadcast once per slice, not once per role: the a- and
+   * b-role broadcasts of one slice (and the exact stage's two docs sides)
+   * differ only in column aliases, which plan canonicalization erases, so
+   * AQE runs one broadcast and reuses it for the other role (pinned in
+   * GatedVerifySpec). At K > 1 the hashed side is checkpointed once, as in
+   * [[pigeonholeJaccard]], so the K slice broadcasts do not each re-hash
+   * the corpus; construction is then EAGER (the [[minhashCandidates]]
+   * caller contract).
+   *
    * NOT used by [[countingJaccard]]'s star channel (usually empty — the
    * gate's two extra corpus scans would be pure overhead) or by the
    * pigeonhole paths (their candidates are already gated).
@@ -823,9 +841,11 @@ object Dedup {
     // exact verify is the honest fallback (the gate is an optimization,
     // never a requirement)
     if (k > maxGateChunks) verifyJaccard(candidates, docs, threshold)
-    else verifyJaccard(
-      hashGateJac(candidates, hashedSide(docs), threshold, chunks = k),
-      docs, threshold)
+    else {
+      val hashed = if (k > 1) hashedSide(docs).localCheckpoint() else hashedSide(docs)
+      verifyJaccard(hashGateJac(candidates, hashed, threshold, chunks = k),
+        docs, threshold)
+    }
   }
 
   /** Postings (id, sz, sh) split at the df cap: (cold, hot). The census
@@ -1631,25 +1651,6 @@ object Dedup {
     CorpusOps.coalesceSpans(hits)
   }
 
-  /**
-   * Connected components of a near-dup pair graph — the clustering step a
-   * dedup pipeline ends with: near-dup PAIRS (from any of the detectors
-   * above) become disjoint CLUSTERS, each keeping one canonical survivor.
-   * Input: (a, b) edges; output: (id, component) with component = the
-   * minimum id reachable from `id` (so the component label IS the survivor).
-   *
-   * Algorithm: distributed min-label propagation to fixpoint — each round,
-   * every vertex takes the min of its own label and its neighbors' labels
-   * (one equi-join + one groupBy per round, both hash-partitioned on id; no
-   * vertex state ever leaves the executors). The driver loop only CONTROLS
-   * iteration (a converged? check per round, the Pregel pattern) — rounds
-   * needed = graph diameter, and near-dup graphs are overwhelmingly tiny
-   * star/clique clusters (diameter ≤ ~3). `localCheckpoint` truncates the
-   * growing lineage each round. For adversarial long-chain graphs at corpus
-   * scale, the standard fix is alternating large-star/small-star rounds
-   * (O(log n) convergence) — same join shape, not needed for dedup-cluster
-   * topologies.
-   */
   /** Eager localCheckpoint plus the persistent-RDD ids it registered, so the
    * iterative loops below can free each SUPERSEDED round's blocks the moment
    * the next round materializes — without this a 1M-vertex chain run pins
@@ -1681,30 +1682,60 @@ object Dedup {
       sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
   }
 
+  /**
+   * Connected components of a near-dup pair graph — the clustering step a
+   * dedup pipeline ends with: near-dup PAIRS (from any of the detectors
+   * above) become disjoint CLUSTERS, each keeping one canonical survivor.
+   * Input: (a, b) edges; output: (id, component) with component = the
+   * minimum id reachable from `id` (so the component label IS the survivor).
+   *
+   * Algorithm: distributed min-label propagation to fixpoint — each round,
+   * every vertex takes the min of its own label and its neighbors' labels
+   * (one equi-join + one groupBy per round, both hash-partitioned on id; no
+   * vertex state ever leaves the executors). The driver loop only CONTROLS
+   * iteration — rounds needed = graph diameter, and near-dup graphs are
+   * overwhelmingly tiny star/clique clusters (diameter ≤ ~3). For
+   * adversarial long-chain graphs use [[componentsStar]] (O(log n) rounds).
+   *
+   * Round shape:
+   *  - the symmetric edge set is checkpointed once (both directions; a
+   *    duplicate edge cannot change a minimum, so no distinct);
+   *  - the labels are SEEDED with the first propagation step from identity
+   *    labels, `label(v) = least(v, min N(v))`, one groupBy;
+   *  - each checked round joins the labels to the edges once, unions each
+   *    vertex's own label in as `old`, and takes one groupBy-min per vertex
+   *    (three exchanges: edges, labels, offers). The number of labels that
+   *    dropped rides that checkpoint's job as an observed metric, so the
+   *    convergence test costs no job of its own. A round in which no label
+   *    dropped is the fixpoint.
+   * So a clique or a star around its minimum converges in one checked
+   * round, and a graph of diameter d in at most d. `localCheckpoint`
+   * truncates the lineage each round.
+   */
   def components(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     val edges = pairs.select(col("a"), col("b"))
-    val (sym, symIds) = trackedCheckpoint(edges
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct())
+    val (sym, symIds) = trackedCheckpoint(
+      edges.unionAll(edges.select(col("b").as("a"), col("a").as("b"))))
     var (labels, labelIds) = trackedCheckpoint(
-      sym.select(col("a").as("id")).distinct().withColumn("label", col("id")))
+      sym.groupBy(col("a")).agg(least(col("a"), min(col("b"))).as("label"))
+        .select(col("a").as("id"), col("label")))
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
-      val nbrMin = sym
-        .join(labels.withColumnRenamed("id", "nid"), col("b") === col("nid"))
-        .groupBy(col("a").as("id"))
-        .agg(min(col("label")).as("nlabel"))
-      // old and new label ride the same row, so convergence is a filter over
-      // the checkpointed frame — no extra join-with-previous-labels per round
+      // each vertex's offers: every neighbor's label, and its own as `old`
+      val offers = sym.join(labels.select(col("id").as("b"), col("label")), "b")
+        .select(col("a").as("id"), col("label"), lit(null).as("old"))
+        .unionByName(labels.select(col("id"), col("label"), col("label").as("old")))
+      val dropped = new Observation()
       val (updated, updatedIds) = trackedCheckpoint(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("label").as("old"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label")))
-      converged = updated.where(col("label") < col("old")).isEmpty
+        offers.groupBy(col("id"))
+          .agg(min(col("label")).as("label"), min(col("old")).as("old"))
+          .observe(dropped, count_if(col("label") < col("old")).as("n"))
+          .select(col("id"), col("label")))
+      converged = dropped.get("n") == 0L
       // the new round is materialized — the previous labels' blocks are dead
       freeBlocks(updated, labelIds)
-      labels = updated.select(col("id"), col("label"))
+      labels = updated
       labelIds = updatedIds
       it += 1
     }

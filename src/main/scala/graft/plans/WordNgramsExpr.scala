@@ -9,16 +9,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native distinct word-n-gram shingling — the codegen'd replacement for the
- * `transform(sequence(...), i -> array_join(slice(...)))` + `array_distinct`
- * HOF chain in [[graft.functions.TextFunctions.shingles]]. The HOF stack
- * evaluates interpreted with per-gram boxing and builds each gram through a
- * generic array slice; this kernel makes one pass over the split words with
- * an insertion-ordered hash set. Shingling feeds EVERY dedup/similarity
- * query (q29/q31/q32/q41/q44/q51/q56), so this is hot-path work.
+ * Native distinct word-n-gram shingling, the one shingling implementation:
+ * [[graft.functions.TextFunctions.shingles]] always plans it. It replaces
+ * the `transform(sequence(...), i -> array_join(slice(...)))` +
+ * `array_distinct` HOF chain, which evaluated interpreted with per-gram
+ * boxing; this kernel makes one pass over the split words with an
+ * insertion-ordered hash set. Shingling feeds EVERY dedup/similarity query
+ * (q29/q31/q32/q41/q44/q51/q56), so this is hot-path work.
  *
- * Value-identical to the HOF twin by construction (asserted in ScaleOpsSpec,
- * and every consumer is oracle-gated):
+ * Value-identical to that HOF chain on non-null text (ScaleOpsSpec keeps
+ * it as the test reference, and every consumer is oracle-gated):
  *  - words = single-space split KEEPING empty strings (Spark's
  *    `split(text, " ")` = `Pattern.split(limit = -1)` semantics);
  *  - >= n words → the `len - n + 1` space-joined n-grams, first-occurrence

@@ -18,20 +18,11 @@ object PipelineQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Distinct word n-gram shingles: the native codegen'd `word_ngrams`
-   * kernel when GraftExtensions is installed, the value-identical HOF chain
-   * otherwise — shingling feeds every dedup/similarity query, so the fused
-   * single-pass kernel is the hot-path default. */
-  private def shingleExpr(s: SparkSession, text: Column, n: Int): Column =
-    if (s.catalog.functionExists("word_ngrams"))
-      call_function("word_ngrams", text, lit(n))
-    else T.shingles(text, n)
-
   /** documents → (id, shingles) with distinct word n-gram features. */
   private def docShingles(s: SparkSession, d: String, n: Int,
                           pred: Column = lit(true)): DataFrame =
     Tables.documents(s, d).where(pred)
-      .select(col("doc_id").as("id"), shingleExpr(s, col("text"), n).as("shingles"))
+      .select(col("doc_id").as("id"), T.shingles(col("text"), n).as("shingles"))
 
   /** Deterministic 5-annotator labeling of the documents table (the q59
    * in-query derivation pattern, so the DuckDB oracle rebuilds the SAME
@@ -413,7 +404,7 @@ object PipelineQueries {
         // native min-hash kernel when registered (the HOF transform+md5 runs
         // interpreted); value-identical either way
         (if (s.catalog.functionExists("min_hash60"))
-          call_function("min_hash60", shingleExpr(s, col("text"), 3))
+          call_function("min_hash60", T.shingles(col("text"), 3))
         else T.fingerprint(col("text"))).as("shingle_fp"))
         .orderBy(col("doc_id"))
     }),
@@ -1877,7 +1868,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), substring(col("text"), 1, 128).as("t"))
       val cands = Dedup.minhashCandidates(
-        docs.select(col("id"), shingleExpr(s, col("t"), 2).as("shingles")),
+        docs.select(col("id"), T.shingles(col("t"), 2).as("shingles")),
         k = 36, bands = 12)
       // threshold form: the DP early-exits once distance must exceed 20
       // (O(threshold·len) per pair, not O(len²)) and returns -1 for misses;

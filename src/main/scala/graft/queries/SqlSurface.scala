@@ -66,9 +66,10 @@ object SqlSurface {
    *    (q137's cluster-density diagnostic, degree-oriented listing) —
    *    OPT-IN via `withTriangles`, see below.
    *
-   * COST AND LIFETIME NOTE: most views are lazy, but the near-dup pair
-   * pipeline materializes its LSH band table eagerly at registration (the
-   * [[Dedup.minhashCandidates]] localCheckpoint contract), and
+   * COST AND LIFETIME NOTE: most views are lazy, but `doc_shingles` and the
+   * near-dup pair pipeline's LSH band table materialize eagerly at
+   * registration (the [[Dedup.minhashCandidates]] localCheckpoint
+   * contract), and
    * `neardup_triangles` would additionally run the WHOLE LSH + verify
    * pipeline plus two more checkpoint jobs up front even if the view is
    * never queried — so it is gated behind `withTriangles = true`.
@@ -84,8 +85,10 @@ object SqlSurface {
                             withTriangles: Boolean = false): Unit = {
     registerTables(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
+    // materialized once: the view, the candidate generator and both verify
+    // stages read it (the minhashCandidates localCheckpoint caller contract)
     val shingled = docs.select(col("doc_id").as("id"),
-      T.shingles(col("text"), 2).as("shingles"))
+      T.shingles(col("text"), 2).as("shingles")).localCheckpoint()
     shingled.createOrReplaceTempView("doc_shingles")
     Dedup.exact(docs, col("doc_id"), col("text"))
       .createOrReplaceTempView("dedup_exact")

@@ -41,10 +41,11 @@ import graft.xml.{FragmentScanner, XmlExtraction, XmlFile}
  *    walked with `listStatus`, names starting with `_` or `.` are skipped with
  *    everything below them, and a missing path fails with `PATH_NOT_FOUND`;
  *  - a document is the indivisible unit (the reference's `isSplitable = false`):
- *    whole files are packed in path order into partitions of at most
- *    `spark.sql.files.maxPartitionBytes`, each file counted with
- *    `spark.sql.files.openCostInBytes` on top of its length; each file is read
- *    whole by [[XmlExtraction.readXmlFile]] (one open, codecs by extension);
+ *    whole files are packed by [[XmlExtraction.packFiles]], the packing of
+ *    [[XmlExtraction.corpusFromXmlFiles]] — contiguous groups in path order, at
+ *    least one per core, none above `spark.sql.files.maxPartitionBytes` unless
+ *    one file is alone; each file is read whole by [[XmlExtraction.readXmlFile]]
+ *    (one open, codecs by extension);
  *  - `docId` is the file's path relative to the deepest glob-free directory of
  *    the load path, the rule [[XmlExtraction.corpusFromXmlFiles]] uses;
  *  - column pruning ([[SupportsPushDownRequiredColumns]]): e.g. a count over
@@ -120,38 +121,17 @@ private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[Extractio
       (if (ruleEqs.nonEmpty) s" pushedRules=${ruleEqs.mkString(",")}" else "")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // Driver-side listing with the session's Hadoop conf, the rule of
-    // XmlExtraction.listXmlFiles. Files are packed into shared partitions up to
-    // spark.sql.files.maxPartitionBytes (with the standard openCostInBytes
-    // padding per file), so a 100 TB layout of millions of small documents
-    // doesn't produce millions of partitions — but a file is never split (the
-    // document is the indivisible unit, the reference's `isSplitable = false`).
+    // Driver-side listing and packing, the rules of corpusFromXmlFiles: a file
+    // is never split (the document is the indivisible unit, the reference's
+    // `isSplitable = false`), and small files share partitions, so millions of
+    // small documents never plan millions of partitions.
     val session = SparkSession.active
-    val files = XmlExtraction.listXmlFiles(path, session.sparkContext.hadoopConfiguration)
-
-    import org.apache.spark.network.util.JavaUtils.byteStringAsBytes
-    val maxBytes =
-      byteStringAsBytes(session.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val openCost =
-      byteStringAsBytes(session.conf.get("spark.sql.files.openCostInBytes", "4m"))
-
-    val partitions = Array.newBuilder[InputPartition]
-    val current = Array.newBuilder[XmlFile]
-    var currentBytes = 0L
-    var currentN = 0
-    def flush(): Unit = if (currentN > 0) {
-      partitions += XmlFilesPartition(current.result())
-      current.clear(); currentBytes = 0L; currentN = 0
-    }
-    files.foreach { f =>
-      val cost = f.length + openCost
-      if (currentN > 0 && currentBytes + cost > maxBytes) flush()
-      current += f
-      currentBytes += cost
-      currentN += 1
-    }
-    flush()
-    partitions.result()
+    val sc = session.sparkContext
+    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      session.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    XmlExtraction.packFiles(XmlExtraction.listXmlFiles(path, sc.hadoopConfiguration),
+        sc.defaultParallelism, maxBytes)
+      .map(group => XmlFilesPartition(group.toArray): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

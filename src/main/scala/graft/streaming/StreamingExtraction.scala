@@ -43,12 +43,15 @@ object StreamingExtraction {
 
   /**
    * Streaming variant of [[XmlExtraction.corpusFromXmlFiles]]: every file that
-   * lands in `dir` becomes one document row, with the same docId rule. Only the
-   * directory's own files are read; the batch reader also walks its subdirectories.
+   * lands in `dir` or below it becomes one document row, with the same docId
+   * rule. Subdirectories are walked like the batch reader walks them
+   * (`recursiveFileLookup`); names starting with `_` or `.` are skipped with
+   * everything below them.
    */
   def streamingCorpus(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .option("wholetext", true)
+      .option("recursiveFileLookup", true)
       .option("maxFilesPerTrigger", 1000)
       .text(dir)
       .select(

@@ -42,15 +42,10 @@ object DfCapSweep {
 
     val spark = graft.Sessions.get("graft-df-cap-sweep")
 
-    // the exact q92/q112 input: distinct word-2-gram shingles of the %3
-    // draw, via the same fused kernel the queries use when installed
-    def dsh(): DataFrame = {
-      val sh = if (spark.catalog.functionExists("word_ngrams"))
-        call_function("word_ngrams", col("text"), lit(2))
-      else T.shingles(col("text"), 2)
+    // the exact q92/q112 input: distinct word-2-gram shingles of the %3 draw
+    def dsh(): DataFrame =
       Tables.documents(spark, sfDir).where(col("doc_id") % 3 === 0)
-        .select(col("doc_id").as("id"), sh.as("shingles"))
-    }
+        .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
 
     // df census once per corpus: does each cap bind, and by how much
     val dfs = dsh().select(explode(col("shingles")).as("sh"))

@@ -33,10 +33,7 @@ object GatedVerifyAB {
     val spark = graft.Sessions.get("graft-gated-verify-ab")
 
     def lazyDocs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").as("id"),
-        (if (spark.catalog.functionExists("word_ngrams"))
-          call_function("word_ngrams", col("text"), lit(2))
-        else T.shingles(col("text"), 2)).as("shingles"))
+      .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
 
     def time(tag: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()

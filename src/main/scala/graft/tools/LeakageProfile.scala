@@ -39,10 +39,7 @@ object LeakageProfile {
     val spark = graft.Sessions.get("graft-leakage-profile")
 
     def docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").as("id"),
-        (if (spark.catalog.functionExists("word_ngrams"))
-          call_function("word_ngrams", col("text"), lit(2))
-        else T.shingles(col("text"), 2)).as("shingles"))
+      .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
 
     def clear(): Unit = spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

@@ -51,4 +51,28 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(wholetext.isEmpty, wholetext.mkString("\n", "\n", ""))
     assert(lines.exists(_._3.contains("\"wholetext\"")))
   }
+
+  test("one shingling implementation: word_ngrams, planned only by TextFunctions.shingles") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val lines = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    } yield (f, s"$f:${i + 1}", line)
+    // a registration probe means a fallback path, i.e. a second implementation
+    val probes = lines.collect { case (_, at, l) if l.contains("functionExists(\"word_ngrams\")") => at }
+    assert(probes.isEmpty, probes.mkString("\n", "\n", ""))
+    val named = lines.collect {
+      case (f, at, l) if l.contains("\"word_ngrams\"") && !f.endsWith("plans/WordNgramsExpr.scala") => at
+    }
+    assert(named.size == 1 && named.head.contains("functions/TextFunctions.scala"),
+      named.mkString("\n", "\n", ""))
+    val defs = lines.collect {
+      case (f, at, l) if l.contains("def shingles(") && !f.endsWith("plans/WordNgramsExpr.scala") => at
+    }
+    assert(defs.size == 1, defs.mkString("\n", "\n", ""))
+    // the deleted HOF chain's shape: distinct space-joined windows, whole text below n
+    val hof = lines.collect { case (_, at, l) if l.contains("array_distinct(when(size(") => at }
+    assert(hof.isEmpty, hof.mkString("\n", "\n", ""))
+  }
 }

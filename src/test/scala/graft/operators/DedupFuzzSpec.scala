@@ -299,4 +299,104 @@ class DedupFuzzSpec extends SparkSpec {
           "the 1% bound — the hot-only concession is not negligible")
     }
   }
+
+  /** Brute-force bucketedPairs: per (band, band_key) bucket of distinct ids,
+   * every pair a < b when 2 <= size <= maxBucket, else (min, other) stars. */
+  private def referenceBucketed(rows: Seq[(Long, Int, Long)],
+                                maxBucket: Int): Set[(Long, Long)] =
+    rows.groupBy(r => (r._2, r._3)).values.flatMap { bucket =>
+      val ids = bucket.map(_._1).distinct.sorted
+      if (ids.size > maxBucket) ids.tail.map(ids.head -> _)
+      else for (i <- ids.indices; j <- i + 1 until ids.size) yield (ids(i), ids(j))
+    }.toSet
+
+  test("bucketedPairs equals the brute-force buckets at the maxBucket boundaries") {
+    import spark.implicits._
+    val rnd = new Random(20261018L)
+    val sizes = scala.collection.mutable.Set[(Int, Int)]() // (maxBucket, size)
+    for (trial <- 1 to 10) {
+      val maxBucket = 2 + trial % 2
+      val (nIds, bands) = (40, 4)
+      // one row per (id, band): random keys from a small space make buckets
+      // of sizes 1..6; band 0 also plants a bucket of exactly maxBucket and
+      // of maxBucket + 1 ids, and band 1 alone a hot bucket
+      val keyOf = Array.tabulate(nIds, bands)((_, _) => rnd.nextInt(12).toLong)
+      for (i <- 0 until maxBucket) keyOf(i)(0) = 100L
+      for (i <- maxBucket until 2 * maxBucket + 1) keyOf(i)(0) = 101L
+      for (i <- 0 until maxBucket + 4) keyOf(nIds - 1 - 2 * i)(1) = 200L
+      val ids = rnd.shuffle((0 until nIds).map(_ * 7L + 3L))
+      val rows = for (i <- 0 until nIds; b <- 0 until bands) yield (ids(i), b, keyOf(i)(b))
+      rows.groupBy(r => (r._2, r._3)).values.foreach(g => sizes += ((maxBucket, g.size)))
+      val expected = referenceBucketed(rows, maxBucket)
+      // the operator takes any key type: minhash bands are arrays, phash bands longs
+      val banded =
+        if (trial % 3 == 0) rows.map(r => (r._1, r._2, Seq(r._3, r._3 % 5))).toDF("id", "band", "band_key")
+        else rows.toDF("id", "band", "band_key")
+      val got = Dedup.bucketedPairs(banded, maxBucket)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got.size == got.distinct.size, s"trial $trial: duplicate pairs")
+      assert(got.toSet == expected,
+        s"trial $trial (maxBucket $maxBucket): missing ${(expected -- got).toSeq.sorted}, " +
+          s"extra ${(got.toSet -- expected).toSeq.sorted}")
+    }
+    // non-vacuity: singletons, both boundaries and hot buckets all occurred
+    for (m <- Seq(2, 3); size <- Seq(1, m, m + 1, m + 4))
+      assert(sizes.contains((m, size)), s"no bucket of $size ids at maxBucket $m")
+  }
+
+  /** Union-find reference for components: every vertex of an edge, labelled
+   * with the minimum id of its connected component. */
+  private def referenceComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("components equals union-find on random graphs: chains, reversed and duplicate edges") {
+    import spark.implicits._
+    val rnd = new Random(18102026L)
+    for (trial <- 1 to 6) {
+      val pool = rnd.shuffle((1L to 200L).toVector)
+      // two scrambled chains of diameter 4..7, a clique, disjoint pairs and
+      // sparse random edges, each edge possibly reversed and/or repeated
+      val chains = Seq(pool.slice(0, 5 + rnd.nextInt(4)), pool.slice(20, 25 + rnd.nextInt(4)))
+        .flatMap(_.sliding(2).map(p => (p(0), p(1))))
+      val clique = for (a <- pool.slice(40, 45); b <- pool.slice(40, 45) if a < b) yield (a, b)
+      val disjoint = pool.slice(50, 60).grouped(2).map(p => (p(0), p(1))).toSeq
+      val random = Seq.fill(15)((pool(60 + rnd.nextInt(40)), pool(60 + rnd.nextInt(40))))
+        .filter(e => e._1 != e._2)
+      val edges = (chains ++ clique ++ disjoint ++ random).flatMap { case (a, b) =>
+        val e = if (rnd.nextBoolean()) (b, a) else (a, b)
+        if (rnd.nextInt(4) == 0) Seq(e, e, (e._2, e._1)) else Seq(e)
+      }
+      val got = Dedup.components(rnd.shuffle(edges).toDF("a", "b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got.size == got.map(_._1).distinct.size, s"trial $trial: a vertex labelled twice")
+      assert(got.toMap == referenceComponents(edges), s"trial $trial")
+    }
+  }
+
+  test("components: a clique converges in one checked round, a chain of diameter d in d") {
+    import spark.implicits._
+    // seeded labels already hold min(self, neighbours), so a clique (and a
+    // star around its minimum) is at its fixpoint after the seed: one
+    // checked round confirms it
+    val clique = (for (a <- 10L to 14L; b <- 10L to 14L if a != b) yield (a, b)).toDF("a", "b")
+    assert(Dedup.components(clique, maxIters = 1).collect()
+      .map(r => r.getLong(1)).toSet == Set(10L))
+    // a path 1-2-3-4-5 with its minimum at one end (diameter 4): the seed
+    // covers distance 1, each round one more, the 4th round changes nothing
+    val chain = Seq((5L, 4L), (3L, 4L), (2L, 3L), (1L, 2L)).toDF("a", "b")
+    assert(Dedup.components(chain, maxIters = 4).collect()
+      .map(r => r.getLong(1)).toSet == Set(1L))
+    val e = intercept[IllegalStateException](Dedup.components(chain, maxIters = 3))
+    assert(e.getMessage.contains("did not converge in 3 rounds"))
+  }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -55,5 +57,37 @@ class GatedVerifySpec extends SparkSpec {
     assert(gated.exists(p => p._1 == 1L && p._2 == 2L))
     assert(gated.exists(p => p._1 == 5L && p._2 == 6L && p._3 == 1.0))
     assert(!gated.exists(p => p._1 == 3L || p._1 == 7L))
+  }
+
+  test("each side broadcasts once: the b role reuses the a role's exchange") {
+    val docs = docShingles.localCheckpoint()
+    val cands = Dedup.minhashCandidates(docs, 36, 12).localCheckpoint()
+    val gated = Dedup.verifyJaccardGated(cands, docs, 0.8)
+    assert(gated.collect().nonEmpty)
+    val plan = gated.queryExecution.executedPlan
+    // the helper's traversal descends into the final plan's query stages
+    val broadcasts = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case s: BroadcastQueryStageExec => s.plan
+    }
+    // the hashed gate side and the exact stage's docs side, once each
+    assert(broadcasts.count(_.isInstanceOf[BroadcastExchangeExec]) == 2, plan)
+    assert(broadcasts.count(_.isInstanceOf[ReusedExchangeExec]) == 2, plan)
+  }
+
+  test("two gate slices equal plain verify, and hash the corpus once") {
+    val docs = docShingles.localCheckpoint()
+    val cands = Dedup.minhashCandidates(docs, 36, 12).localCheckpoint()
+    val plain = asSet(Dedup.verifyJaccard(cands, docs, 0.8))
+    val postings = docs.agg(sum(size(col("shingles")))).head().getLong(0)
+    // a budget of half the corpus census forces K = 2 slices
+    sys.props("graft.inline.verify.max.postings") = ((postings + 1) / 2).toString
+    try {
+      val gated = Dedup.verifyJaccardGated(cands, docs, 0.8)
+      val plan = gated.queryExecution.optimizedPlan.toString
+      assert(plan.contains("pmod(xxhash64(id"), s"not sliced: $plan")
+      // the four slice broadcasts read one checkpoint of the hashed side
+      assert(!plan.contains("xxhash64(lambda"), plan)
+      assert(plain.nonEmpty && asSet(gated) == plain)
+    } finally sys.props -= "graft.inline.verify.max.postings"
   }
 }

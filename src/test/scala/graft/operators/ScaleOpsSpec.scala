@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -357,6 +358,17 @@ class ScaleOpsSpec extends SparkSpec {
     assert(!mulGt(ts / 32 - 1, n, ts, cn) && mulGt(ts / 32 + 32, n, ts, cn))
   }
 
+  /** The reference shingling: the built-in HOF chain the native kernel
+   * replaced (single-space split, space-joined windows, array_distinct,
+   * the whole text below `n` words). */
+  private def hofShingles(text: Column, n: Int): Column = {
+    val w = split(text, " ")
+    val grams = transform(
+      sequence(lit(0), size(w) - n),
+      i => array_join(slice(w, i + 1, lit(n)), " "))
+    array_distinct(when(size(w) >= n, grams).otherwise(array(text)))
+  }
+
   test("native word_ngrams equals the HOF shingle chain on adversarial inputs") {
     import spark.implicits._
     val texts = Seq(
@@ -365,11 +377,13 @@ class ScaleOpsSpec extends SparkSpec {
       ("word " * 50).trim)
     for (n <- Seq(1, 2, 3, 5)) {
       val df = texts.toDF("text")
-      val native = df.select(call_function("word_ngrams", col("text"), lit(n)))
-        .collect().map(_.getSeq[String](0).toList)
-      val hof = df.select(T.shingles(col("text"), n))
-        .collect().map(_.getSeq[String](0).toList)
-      assert(native.toList == hof.toList, s"n=$n")
+      val reference = df.select(hofShingles(col("text"), n))
+        .collect().map(_.getSeq[String](0).toList).toList
+      // both surfaces: the registered SQL function and the column builder
+      for (native <- Seq(call_function("word_ngrams", col("text"), lit(n)),
+                         T.shingles(col("text"), n)))
+        assert(df.select(native).collect().map(_.getSeq[String](0).toList).toList ==
+          reference, s"n=$n, $native")
     }
   }
 

@@ -53,6 +53,11 @@ class SqlSurfaceSpec extends SparkSpec {
         Dedup.minhashCandidates(shingled, 36, 12), shingled, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(sqlPairs.nonEmpty && sqlPairs == apiPairs)
+    // the pair view reads the shingle table materialized at registration:
+    // no shingling left in its plan (the candidate generator, both gate
+    // sides and the exact verify would each shingle again)
+    val pairPlan = spark.table("neardup_pairs").queryExecution.optimizedPlan.toString
+    assert(!pairPlan.contains("word_ngrams"), pairPlan)
 
     // 3. native Catalyst expressions compose with views in one statement
     val sigs = spark.sql(

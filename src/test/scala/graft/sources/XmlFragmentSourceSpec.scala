@@ -86,13 +86,24 @@ class XmlFragmentSourceSpec extends SparkSpec {
     val all = readPath(root.toString)
     val docs = all.select("docId").distinct().collect().map(_.getString(0)).toSet
     assert(docs == Set("a/InventorySoho.xml", "a/deep/InventoryBanks.xml", "b/InventorySoho2.xml"))
-    // three small files fit one maxPartitionBytes budget → packed together
-    assert(all.rdd.getNumPartitions == 1)
+    // the packFiles rule: at least one partition per core, never more than files
+    assert(all.rdd.getNumPartitions == math.min(3, spark.sparkContext.defaultParallelism))
 
     // glob limits to the matching subtree (a/* = the direct file + deep/, recursed)
     val globbed = readPath(s"$root/a/*")
     val globbedDocs = globbed.select("docId").distinct().collect().map(_.getString(0)).toSet
     assert(globbedDocs == Set("InventorySoho.xml", "deep/InventoryBanks.xml"))
+  }
+
+  test("1000 small files plan as one partition per core, every document once") {
+    val root = Files.createTempDirectory("graft-dsv2-small")
+    val doc = resourceText("InventorySoho.xml")
+    // about 7 KB each: padded past the document with a comment
+    val text = doc + "<!--" + "x" * (7000 - doc.length - 7) + "-->"
+    for (i <- 0 until 1000) Files.writeString(root.resolve(f"d$i%04d.xml"), text)
+    val df = spark.read.format("graft-xml").option("config", configPath).load(root.toString)
+    assert(df.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(df.select("docId").distinct().count() == 1000)
   }
 
   test("conflicting pushed rule equalities yield the empty intersection") {

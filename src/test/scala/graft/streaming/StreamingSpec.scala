@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.config.ExtractionConfig
-import graft.xml.XmlExtraction
+import graft.xml.{NestedXmlTree, XmlExtraction}
 
 /** Structured Streaming: the batch extraction DAG under a file-source stream
  * must equal the batch result; windowed aggregation must respect watermarks. */
@@ -38,6 +38,31 @@ class StreamingSpec extends SparkSpec {
       .orderBy("docId", "seq").collect().map(_.toSeq).toSeq
     assert(streamed == batch)
     assert(streamed.nonEmpty)
+  }
+
+  test("file-source streaming reads a nested tree like the batch reader") {
+    val tree = NestedXmlTree.write(resourceText("InventorySoho.xml"), resourceText("InventoryBanks.xml"))
+    val ckDir = Files.createTempDirectory("graft-stream-nested-ck").toFile
+    val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
+    val query = StreamingExtraction.streamingExtract(spark, tree.toString, config)
+      .writeStream
+      .format("memory")
+      .queryName("stream_nested")
+      .option("checkpointLocation", ckDir.getAbsolutePath)
+      .outputMode("append")
+      .start()
+    try query.processAllAvailable()
+    finally query.stop()
+
+    val streamed = spark.table("stream_nested")
+    val batch = XmlExtraction.extractRows(
+      XmlExtraction.corpusFromXmlFiles(spark, tree.toString), config)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("docId", "seq").collect().map(_.toSeq).toSeq
+    assert(rows(streamed) == rows(batch))
+    // every document below the root, none of the hidden ones
+    assert(streamed.select("docId").distinct().collect().map(_.getString(0)).toSet ==
+      NestedXmlTree.docIds)
   }
 
   test("incremental arrival: delimited file sink accumulates across micro-batches " +

@@ -187,30 +187,8 @@ class XmlExtractionGoldenSpec extends SparkSpec {
   }
 
   test("file listing and codecs match Spark's wholetext reader, for a directory and a glob") {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.col
-    val tree = Files.createTempDirectory("graft-list-parity")
-    def put(rel: String, text: String): Unit = {
-      val f = tree.resolve(rel)
-      Files.createDirectories(f.getParent)
-      Files.writeString(f, text)
-    }
-    val soho = resourceText("InventorySoho.xml")
-    val banks = resourceText("InventoryBanks.xml")
-    put("top.xml", soho)
-    put("a/x.xml", banks)
-    put("a/deep/x.xml", soho.replace("SohoBooks", "DeepBooks"))
-    put("a/plus+one.xml", banks.replace("BanksBooks", "PlusBooks"))
-    put("a/with space.xml", soho.replace("SohoBooks", "SpaceBooks"))
-    put("_SUCCESS", "")
-    put("a/_SUCCESS", "")
-    put(".x.xml.crc", "crc")
-    put("_temporary/y.xml", soho)
-    put("a/_temporary/y.xml", soho)
-    put(".hidden/z.xml", banks)
-    put("a/.hidden/z.xml", banks)
-    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(tree.resolve("a/packed.xml.gz")))
-    try gz.write(banks.replace("BanksBooks", "GzipBooks").getBytes("UTF-8")) finally gz.close()
+    val tree = NestedXmlTree.write(resourceText("InventorySoho.xml"), resourceText("InventoryBanks.xml"))
 
     def viaWholetext(p: String, recursive: Boolean = false): Set[(String, String)] =
       spark.read.option("wholetext", true).option("recursiveFileLookup", recursive).text(p)
@@ -224,8 +202,7 @@ class XmlExtractionGoldenSpec extends SparkSpec {
     // below it are skipped, `+` and spaces survive in docIds, `.gz` is decompressed
     val all = viaCorpus(tree.toString)
     assert(all == viaWholetext(tree.toString, recursive = true))
-    assert(all.map(_._1) == Set("top.xml", "a/x.xml", "a/deep/x.xml", "a/plus+one.xml",
-      "a/with space.xml", "a/packed.xml.gz"))
+    assert(all.map(_._1) == NestedXmlTree.docIds)
     assert(all.exists(_._2.contains("GzipBooks")))
     // Spark's plain reader keeps only the directory's own files
     assert(viaWholetext(tree.toString) == all.filterNot(_._1.contains("/")))
