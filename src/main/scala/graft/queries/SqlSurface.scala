@@ -154,10 +154,8 @@ object SqlSurface {
   def registerXmlExtraction(spark: SparkSession, xmlDir: String,
                             config: ExtractionConfig,
                             prefix: String = "xml"): Unit = {
-    val rows = XmlExtraction.extractRows(
-      XmlExtraction.corpusFromXmlFiles(spark, xmlDir), config)
-    rows.createOrReplaceTempView(s"${prefix}_rows")
-    XmlExtraction.formatLines(rows, config)
-      .createOrReplaceTempView(s"${prefix}_lines")
+    val corpus = XmlExtraction.corpusFromXmlFiles(spark, xmlDir)
+    XmlExtraction.extractRows(corpus, config).createOrReplaceTempView(s"${prefix}_rows")
+    XmlExtraction.run(corpus, config).createOrReplaceTempView(s"${prefix}_lines")
   }
 }

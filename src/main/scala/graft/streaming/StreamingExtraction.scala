@@ -66,9 +66,10 @@ object StreamingExtraction {
   def streamingExtract(spark: SparkSession, dir: String, config: ExtractionConfig): DataFrame =
     XmlExtraction.extractRows(streamingCorpus(spark, dir), config)
 
-  /** Formatted-line variant (the reference's delimited text output). */
+  /** Formatted-line variant (the reference's delimited text output): the batch
+   * line path, [[XmlExtraction.run]], over the stream. */
   def streamingExtractLines(spark: SparkSession, dir: String, config: ExtractionConfig): DataFrame =
-    XmlExtraction.formatLines(streamingExtract(spark, dir, config), config)
+    XmlExtraction.run(streamingCorpus(spark, dir), config)
 
   /**
    * Event-time tumbling-window aggregation with a watermark: per (window,

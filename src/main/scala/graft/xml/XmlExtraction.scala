@@ -10,9 +10,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.Text
 import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.mapred.{FileSplit, SequenceFileRecordReader}
+import org.apache.spark.TaskContext
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.w3c.dom.NodeList
@@ -40,6 +43,8 @@ final class ExtractionKernel(config: ExtractionConfig) {
   private val rules = config.rules.toIndexedSeq
   private val eval = new XPathEvaluator(rules)
   private val trigger = config.triggerOrder
+  private val delimiter = config.outputDelimiter
+  private val line = new java.lang.StringBuilder
 
   /** A document's fragments, in document order. */
   def scan(xml: String): Iterator[Fragment] = FragmentScanner.scan(xml, rules).iterator
@@ -49,16 +54,63 @@ final class ExtractionKernel(config: ExtractionConfig) {
   def tuples(docId: String, frag: Fragment): Iterator[ExtractedTuple] =
     eval.tuples(frag).iterator.map { case (o, v) => ExtractedTuple(docId, frag.seq, o, v) }
 
-  /** Scan → evaluate → fold: the column array is never cleared within a document
-   * (fill-down); each `config.triggerOrder` tuple emits (docId, its seq, the columns). */
-  def rows(docId: String, xml: String): Iterator[(String, Long, Seq[String])] = {
+  /** Scan → evaluate → fold: each `config.triggerOrder` tuple emits (docId, its seq,
+   * the columns). */
+  def rows(docId: String, xml: String): Iterator[(String, Long, Seq[String])] =
+    fold(xml)((seq, columns) => (docId, seq, columns.toSeq))
+
+  /** [[rows]] as the reference's output lines, rendered straight from the fold's
+   * columns by [[XmlExtraction.delimitedLines]]' rule: every column followed by the
+   * output delimiter, null or empty written as one space. */
+  def lines(xml: String): Iterator[String] =
+    fold(xml) { (_, columns) =>
+      line.setLength(0)
+      var i = 0
+      while (i < columns.length) {
+        val v = columns(i)
+        line.append(if (v == null || v.isEmpty) " " else v).append(delimiter)
+        i += 1
+      }
+      line.toString
+    }
+
+  /** Fragments dropped whole because no engine could parse them, and single XPath
+   * results dropped because their expression failed, so far. The reference drops both
+   * without a trace (`XmlExtractor.java:114-117`); the kernel keeps those semantics but
+   * counts them. */
+  def unparseableFragments: Long = eval.unparseable
+  def failedExpressions: Long = eval.failed
+
+  /** The fill-down fold: the column array is never cleared within a document, and
+   * each trigger tuple calls `emit(its seq, the columns)`. The array is live, so
+   * `emit` copies what it keeps. */
+  private def fold[R](xml: String)(emit: (Long, Array[String]) => R): Iterator[R] = {
     val columns = new Array[String](config.nrOfColumns)
     scan(xml).flatMap { frag =>
       eval.tuples(frag).flatMap { case (order, value) =>
         columns(order) = value
-        if (order == trigger) Some((docId, frag.seq, columns.toSeq)) else None
+        if (order == trigger) Some(emit(frag.seq, columns)) else None
       }
     }
+  }
+}
+
+object ExtractionKernel {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[ExtractionKernel])
+
+  /** The kernel of the running task: when the task ends, a WARN names what it
+   * dropped, if anything ([[ExtractionKernel.unparseableFragments]],
+   * [[ExtractionKernel.failedExpressions]]). */
+  def forTask(config: ExtractionConfig): ExtractionKernel = {
+    val kernel = new ExtractionKernel(config)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { ctx =>
+      val (frags, exprs) = (kernel.unparseableFragments, kernel.failedExpressions)
+      if (frags > 0 || exprs > 0)
+        log.warn(s"XML extraction, stage ${ctx.stageId()} partition ${ctx.partitionId()}: " +
+          s"dropped $frags unparseable fragment(s) and $exprs failed XPath result(s), " +
+          "as the reference does")
+    })
+    kernel
   }
 }
 
@@ -141,6 +193,13 @@ object XmlExtraction {
    * name is hidden. A path that does not exist, or a glob that matches nothing, fails
    * with `PATH_NOT_FOUND`. */
   def listXmlFiles(path: String, conf: Configuration): IndexedSeq[XmlFile] = {
+    val base = docIdBase(path, conf)
+    listInputs(path, conf).map(st => XmlFile(st.getPath.toString, st.getLen, docId(st.getPath, base)))
+  }
+
+  /** The lister behind [[listXmlFiles]] and [[corpusFromSequenceFile]]: the input
+   * files' statuses, sorted by path, by [[listXmlFiles]]' rules. */
+  private def listInputs(path: String, conf: Configuration): IndexedSeq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val roots = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
@@ -153,9 +212,7 @@ object XmlExtraction {
       else if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk(_, named = false))
       else Iterator(st)
     val literal = !path.exists(GlobChars.contains(_))
-    val base = docIdBase(path, conf)
     roots.iterator.flatMap(walk(_, literal)).toIndexedSeq.sortBy(_.getPath.toString)
-      .map(st => XmlFile(st.getPath.toString, st.getLen, docId(st.getPath, base)))
   }
 
   /** Whole files → contiguous groups in path order, balanced by bytes: at least
@@ -186,17 +243,69 @@ object XmlExtraction {
   }
 
   /** Read a reference-format SequenceFile corpus (`Text` uuid → `Text` xml document,
-   * `CreateSequenceFile.java:37-51`). The read asks for at least `defaultParallelism`
-   * splits, so a single corpus file feeds every core; splits start and end at sync
-   * markers, so every document lands in exactly one split. Input of at least
-   * cores × block size already splits by block, and there the request changes nothing. */
+   * `CreateSequenceFile.java:37-51`): a file, a directory of parts or a glob, listed by
+   * [[listXmlFiles]]' rules (hidden names such as `_SUCCESS` skipped, directories
+   * walked, a missing path fails with `PATH_NOT_FOUND`).
+   *
+   * [[sequenceFileSplits]] cuts the files into byte ranges of min(block size,
+   * ⌈total bytes ÷ `defaultParallelism`⌉), so a single corpus file feeds every core,
+   * and input of at least cores × block size splits by block. Each range is one
+   * partition, read with Hadoop's `SequenceFileRecordReader`, which starts at the
+   * first sync marker inside its range and reads on to the first one past its end,
+   * so every document lands in exactly one split. Ranges carry no host preference,
+   * as the XML file reader's groups do not. */
   def corpusFromSequenceFile(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.io.Text
-    import spark.implicits._
-    spark.sparkContext
-      .sequenceFile(path, classOf[Text], classOf[Text], spark.sparkContext.defaultParallelism)
-      .map { case (k, v) => (k.toString, v.toString) }
-      .toDF("docId", "xml")
+    val sc = spark.sparkContext
+    val splits = sequenceFileSplits(listInputs(path, sc.hadoopConfiguration), sc.defaultParallelism)
+    val props = confProps(sc.hadoopConfiguration)
+    val docs = sc.parallelize(splits, splits.size.max(1)).mapPartitions { ranges =>
+      val conf = confFrom(props)
+      ranges.flatMap(readSequenceFile(_, conf))
+    }
+    spark.createDataset(docs)(Encoders.tuple(Encoders.STRING, Encoders.STRING)).toDF("docId", "xml")
+  }
+
+  /** A byte range of one file: the fields of a Hadoop `FileSplit`. */
+  final case class FileRange(path: String, start: Long, length: Long)
+
+  /** `FileInputFormat`'s split rule: each file is cut into ranges of min(its block
+   * size, ⌈total bytes of `files` ÷ `minSplits`⌉), and a last range up to 10% longer
+   * than that (`SPLIT_SLOP`) is not cut again. An empty file holds no record and gets
+   * no range. */
+  def sequenceFileSplits(files: IndexedSeq[FileStatus], minSplits: Int): IndexedSeq[FileRange] = {
+    val n = minSplits.max(1)
+    val goal = ((files.iterator.map(_.getLen).sum + n - 1) / n).max(1L)
+    files.flatMap { f =>
+      val size = if (f.getBlockSize > 0) math.min(goal, f.getBlockSize) else goal
+      val (path, len) = (f.getPath.toString, f.getLen)
+      var left = len
+      val ranges = IndexedSeq.newBuilder[FileRange]
+      while (left.toDouble / size > 1.1) { ranges += FileRange(path, len - left, size); left -= size }
+      if (left > 0) ranges += FileRange(path, len - left, left)
+      ranges.result()
+    }
+  }
+
+  /** The (key, value) records of a reference-format SequenceFile whose sync-marked
+   * blocks start inside `range`, as Strings; the reader closes at the end. */
+  private def readSequenceFile(range: FileRange, conf: Configuration): Iterator[(String, String)] = {
+    val split = new FileSplit(new Path(range.path), range.start, range.length, Array.empty[String])
+    val reader = new SequenceFileRecordReader[Text, Text](conf, split)
+    val (key, value) = (reader.createKey(), reader.createValue())
+    new Iterator[(String, String)] {
+      private var ahead = advance()
+      private def advance(): Boolean = {
+        val more = reader.next(key, value)
+        if (!more) reader.close()
+        more
+      }
+      def hasNext: Boolean = ahead
+      def next(): (String, String) = {
+        val record = (key.toString, value.toString)
+        ahead = advance()
+        record
+      }
+    }
   }
 
   /** Write a (docId, xml) corpus as a reference-format SequenceFile — the ingest
@@ -248,7 +357,7 @@ object XmlExtraction {
     val spark = corpus.sparkSession
     import spark.implicits._
     val rows = corpus.select("docId", "xml").as[(String, String)].mapPartitions { docs =>
-      val kernel = new ExtractionKernel(config)
+      val kernel = ExtractionKernel.forTask(config)
       docs.flatMap { case (docId, xml) => kernel.rows(docId, xml) }
     }.toDF("docId", "seq", "cols")
     val cols = columnNames(config).zipWithIndex.map { case (c, i) => col("cols").getItem(i).as(c) }
@@ -265,7 +374,7 @@ object XmlExtraction {
     val spark = corpus.sparkSession
     import spark.implicits._
     corpus.select("docId", "xml").as[(String, String)].mapPartitions { docs =>
-      val kernel = new ExtractionKernel(config)
+      val kernel = ExtractionKernel.forTask(config)
       docs.flatMap { case (docId, xml) => kernel.scan(xml).flatMap(kernel.tuples(docId, _)) }
     }
   }
@@ -279,7 +388,7 @@ object XmlExtraction {
     val idxByElement = config.rules.map(_.element).zipWithIndex.toMap
     fragments.select("docId", "seq", "rule", "xml")
       .as[(String, Long, String, String)].mapPartitions { rows =>
-        val kernel = new ExtractionKernel(config)
+        val kernel = ExtractionKernel.forTask(config)
         rows.flatMap { case (docId, seq, rule, xml) =>
           idxByElement.get(rule).iterator.flatMap(ri => kernel.tuples(docId, Fragment(ri, seq, xml)))
         }
@@ -323,9 +432,17 @@ object XmlExtraction {
   def formatLines(rows: DataFrame, config: ExtractionConfig): DataFrame =
     delimitedLines(rows.select(columnNames(config).map(col): _*), config.outputDelimiter)
 
-  /** End-to-end convenience: corpus → extracted, formatted lines. */
+  /** End to end: a (docId, xml) corpus → the reference's output lines, one `line`
+   * column, equal to `formatLines(extractRows(corpus, config), config)`. One narrow
+   * pass: each task renders its rows with [[ExtractionKernel.lines]] straight from the
+   * fold's columns into the line, so no typed row, `Seq` or per-column expression is
+   * built in between. The CLI, the SQL `<prefix>_lines` view and streaming lines all
+   * run this. */
   def run(corpus: DataFrame, config: ExtractionConfig): DataFrame =
-    formatLines(extractRows(corpus, config), config)
+    corpus.select("xml").as(Encoders.STRING).mapPartitions { docs =>
+      val kernel = ExtractionKernel.forTask(config)
+      docs.flatMap(kernel.lines)
+    }(Encoders.STRING).toDF("line")
 }
 
 /**
@@ -337,7 +454,10 @@ object XmlExtraction {
  *  - **DOM fallback**: full XPath — DOM parse the fragment, evaluate each expression
  *    as NODESET, concatenate the matched nodes' `getNodeValue` with no separator
  *    (`XmlExtractor.java:97-117`); no match emits nothing, and per-expression errors
- *    are swallowed (reference prints + drops, `:114-117`).
+ *    drop that result (reference prints + drops, `:114-117`).
+ *
+ * A fragment neither engine can parse yields no tuples. Both kinds of drop are
+ * counted (`unparseable`, `failed`) for [[ExtractionKernel.forTask]]'s WARN.
  */
 private[xml] final class XPathEvaluator(rules: IndexedSeq[ExtractionRule]) {
   // per rule: Right(stax) when the whole rule compiles to the subset
@@ -352,6 +472,9 @@ private[xml] final class XPathEvaluator(rules: IndexedSeq[ExtractionRule]) {
         Left(rule.xpaths.toIndexedSeq.sortBy(_.order).map(p => (p.order, xpath.compile(p.xpath))))
     }
   }
+  // drops so far: whole fragments no engine could parse, single failed expressions
+  var unparseable = 0L
+  var failed = 0L
   private lazy val builder = {
     val f = DocumentBuilderFactory.newInstance()
     f.setNamespaceAware(true)
@@ -380,9 +503,9 @@ private[xml] final class XPathEvaluator(rules: IndexedSeq[ExtractionRule]) {
                 while (i < nodes.getLength) { sb.append(nodes.item(i).getNodeValue); i += 1 }
                 Some((order, sb.toString))
               } else None
-            } catch { case _: Exception => None }
+            } catch { case _: Exception => failed += 1; None }
           }
       }
-    } catch { case _: Exception => Seq.empty } // unparseable fragment: all tuples dropped
+    } catch { case _: Exception => unparseable += 1; Seq.empty } // all tuples dropped
   }
 }

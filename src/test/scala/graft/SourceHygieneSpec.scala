@@ -45,6 +45,9 @@ class SourceHygieneSpec extends AnyFunSuite {
     // on the local filesystem both build a LocatedFileStatus per file, which forks `ls`
     val forking = lines.collect { case (_, at, l) if l.contains("listFiles(") || l.contains("listLocatedStatus(") => at }
     assert(forking.isEmpty, forking.mkString("\n", "\n", ""))
+    // Spark's Hadoop-format readers list through FileInputFormat, which does the same
+    val formats = lines.collect { case (_, at, l) if l.contains("sequenceFile(") || l.contains("hadoopFile(") => at }
+    assert(formats.isEmpty, formats.mkString("\n", "\n", ""))
     val wholetext = lines.collect {
       case (f, at, l) if l.contains("\"wholetext\"") && !f.endsWith("streaming/StreamingExtraction.scala") => at
     }

@@ -70,6 +70,8 @@ class ExtractionPropertySpec extends SparkSpec {
       val rows = extractLocal(render(d))
       assert(rows.length == d.sections.map(_._2.length).sum)
       assert(rows == expectedRows(d))
+      // the line path renders the same rows
+      assert(new ExtractionKernel(config).lines(render(d)).toSeq == rows.map { case (a, i) => s"$a;$i;" })
     }
   }
 

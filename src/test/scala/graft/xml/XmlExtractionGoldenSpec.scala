@@ -159,6 +159,97 @@ class XmlExtractionGoldenSpec extends SparkSpec {
     val inMemory = extracted(docs.toDF("docId", "xml"))
     assert(inMemory.size == 64 * 19)
     assert(extracted(back) == inMemory)
+
+    // a directory of parts as Spark writes it (`_SUCCESS`, `.crc` files) plus one
+    // block-compressed part of small compression blocks, each behind a sync marker,
+    // holding documents of random text, so its ranges split inside the file
+    import org.apache.hadoop.io.SequenceFile
+    val parts = s"${dir.getAbsolutePath}/parts"
+    spark.sparkContext.parallelize(docs, 3)
+      .map { case (k, v) => (new Text(k), new Text(v)) }
+      .saveAsSequenceFile(parts)
+    val rnd = new scala.util.Random(11)
+    val noisy = (0 until 64).map { i =>
+      (f"blk$i%02d", resourceText("InventorySoho.xml").replace("SohoBooks", s"Soho$i-" + rnd.alphanumeric.take(6000).mkString))
+    }
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.setInt("io.seqfile.compress.blocksize", 16384)
+    val block = new org.apache.hadoop.fs.Path(s"$parts/part-00009")
+    val writer = SequenceFile.createWriter(conf, SequenceFile.Writer.file(block),
+      SequenceFile.Writer.keyClass(classOf[Text]), SequenceFile.Writer.valueClass(classOf[Text]),
+      SequenceFile.Writer.compression(SequenceFile.CompressionType.BLOCK))
+    try noisy.foreach { case (k, v) => writer.append(new Text(k), new Text(v)) } finally writer.close()
+    assert(new java.io.File(s"$parts/_SUCCESS").exists)
+    val fs = block.getFileSystem(conf)
+    val listed = fs.listStatus(new org.apache.hadoop.fs.Path(parts)).filter(_.getPath.getName.startsWith("part-"))
+    val ranges = XmlExtraction.sequenceFileSplits(listed.sortBy(_.getPath.toString).toIndexedSeq,
+      spark.sparkContext.defaultParallelism)
+    assert(ranges.count(_.path.endsWith("part-00009")) > 1, ranges.mkString("\n"))
+
+    val fromDir = XmlExtraction.corpusFromSequenceFile(spark, parts)
+    assert(fromDir.rdd.getNumPartitions == ranges.size)
+    assert(fromDir.select("docId").as[String].collect().sorted.toSeq == (docs ++ noisy).map(_._1).sorted)
+    assert(extracted(fromDir) == (inMemory ++ extracted(noisy.toDF("docId", "xml"))).sorted)
+
+    val missing = intercept[org.apache.spark.sql.AnalysisException](
+      XmlExtraction.corpusFromSequenceFile(spark, s"${dir.getAbsolutePath}/missing"))
+    assert(missing.getCondition == "PATH_NOT_FOUND" && missing.getMessage.contains("missing"), missing.getMessage)
+  }
+
+  test("sequenceFileSplits: FileInputFormat's split count and block cap; every byte in one range") {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    def file(i: Int, length: Long, block: Long) = new FileStatus(length, false, 1, block, 0L, new Path(s"file:/f$i"))
+    def sizes(files: IndexedSeq[FileStatus], minSplits: Int) =
+      XmlExtraction.sequenceFileSplits(files, minSplits).map(_.length)
+    // one file: ⌈total ÷ minSplits⌉ per range
+    assert(sizes(IndexedSeq(file(0, 1000, 1L << 20)), 4) == Seq(250, 250, 250, 250))
+    assert(sizes(IndexedSeq(file(0, 1001, 1L << 20)), 4) == Seq(251, 251, 251, 248))
+    // the block size caps a range; a last range within 10% of it is not cut again
+    assert(sizes(IndexedSeq(file(0, 1000, 100)), 4) == Seq.fill(10)(100))
+    assert(sizes(IndexedSeq(file(0, 1005, 100)), 4) == Seq.fill(9)(100) :+ 105)
+    // the goal is over all files; an empty file has no range
+    assert(sizes(IndexedSeq(file(0, 600, 1L << 20), file(1, 0, 1L << 20), file(2, 200, 1L << 20)), 4) ==
+      Seq(200, 200, 200, 200))
+
+    val rnd = new scala.util.Random(5)
+    for (_ <- 0 until 500) {
+      val files = (0 until rnd.nextInt(6)).map(i => file(i, rnd.nextInt(5000).toLong, 1L + rnd.nextInt(3000)))
+      val minSplits = 1 + rnd.nextInt(8)
+      val ranges = XmlExtraction.sequenceFileSplits(files, minSplits)
+      val goal = (files.map(_.getLen).sum + minSplits - 1) / minSplits
+      for (f <- files) {
+        val own = ranges.filter(_.path == f.getPath.toString)
+        val size = math.min(goal, f.getBlockSize)
+        val shown = s"$f min $minSplits: $own"
+        // contiguous from 0 to the end: every byte once
+        assert(own.map(_.start) == own.scanLeft(0L)(_ + _.length).init, shown)
+        assert(own.map(_.length).sum == f.getLen, shown)
+        assert(own.forall(_.length > 0), shown)
+        assert(own.dropRight(1).forall(_.length == size), shown)
+        assert(own.lastOption.forall(_.length <= size * 1.1), shown)
+      }
+      assert(ranges.map(_.path).distinct == files.filter(_.getLen > 0).map(_.getPath.toString))
+    }
+  }
+
+  test("a malformed fragment or a failing expression is dropped as the reference does, and counted") {
+    import spark.implicits._
+    val config = ExtractionConfig.fromProperties(Map(
+      ExtractionConfig.DelimiterKey -> ";",
+      ExtractionConfig.SortOrderDelimiterKey -> "#",
+      ExtractionConfig.OutputDelimiterKey -> "|",
+      ExtractionConfig.NodesKey -> "b;c;",
+      ExtractionConfig.NrOfColumnsKey -> "2",
+      // `count(..)` is outside the StAX subset and is no node-set: it fails on DOM
+      "c" -> "c;true;true; ;0#count(//c);",
+      "b" -> "b;true;true; ;1#//b/@x;"))
+    // the second <b> holds an unclosed <i>: no engine parses it
+    val xml = "<r><c n=\"1\"></c><b x=\"1\"></b><b x=\"2\"><i></b><b x=\"3\"></b></r>"
+    val kernel = new ExtractionKernel(config)
+    assert(kernel.lines(xml).toSeq == Seq(" |1|", " |3|"))
+    assert(kernel.unparseableFragments == 1 && kernel.failedExpressions == 1)
+    assert(XmlExtraction.run(Seq(("d", xml)).toDF("docId", "xml"), config)
+      .collect().map(_.getString(0)).toSeq == Seq(" |1|", " |3|"))
   }
 
   test("small XML files pack to the core count: whole documents, every docId once") {
