@@ -21,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * whole fixpoint. Old round files are reclaimed by Spark's context cleaner
  * when `spark.cleaner.referenceTracking.cleanCheckpoints=true`, or by
  * deleting the checkpoint dir after the job. Both modes produce identical
- * results (IterativeCheckpointSpec; the 1M-chain equality runs in
- * TrainingScaleSmoke).
+ * results (IterativeCheckpointSpec; at 1M vertices both gave identical labels
+ * in 21 rounds, PLANS.md "Round-10 changes").
  */
 private[graft] object Checkpoints {
 

@@ -84,7 +84,7 @@ object Dedup {
     // CALLER CONTRACT (the localCheckpoint trade): construction is EAGER —
     // a Spark job runs before this returns (plan-only/explain callers pay
     // it too), and the band-table blocks stay pinned in the block manager
-    // until the caller clears them (Bench/Verify/the smokes run
+    // until the caller clears them (Bench and Verify run
     // `sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))`
     // between queries). Long-lived sessions should instead persist the band
     // table once with [[writeBandIndex]] and probe it via
@@ -297,9 +297,9 @@ object Dedup {
    * pigeonhole theorem and the path x–rep_x–rep_y–y connects. One-hop
    * check, no transitive closure needed: (x, y) is connected iff
    * `rep_x == rep_y` (same class: both star to one rep) or
-   * `(rep_x, rep_y)` is an emitted candidate. ThirdDecadeSpec pins the
-   * contract; the sf100 measurement rides `tools.ThirdDecade`'s
-   * `-collapsed` modes.
+   * `(rep_x, rep_y)` is an emitted candidate. BlockPairBandsSpec and
+   * BandCanonicalSpec pin the contract; the sf100 measurement is recorded
+   * in PLANS.md, Round-17 §3 and §7.
    *
    * `bandFn` maps (id, hash) → (id, band, band_key) — one of
    * [[blockPairBands]]/[[blockTripleBands]]/[[blockQuadBands]]. Returns
@@ -641,10 +641,10 @@ object Dedup {
    *
    * The corpus band table is materialized once (localCheckpoint) before the
    * size aggregate and the join both read it — otherwise the minhash of the
-   * ENTIRE existing corpus recomputes for each branch (a measured 5× at 1M
-   * docs in TrainingScaleSmoke). In production this table is the persisted,
-   * bucketed artifact the docstring above assumes; here the checkpoint is
-   * its in-session stand-in.
+   * ENTIRE existing corpus recomputes for each branch (42 s against 19.3 s
+   * at 1M docs, PLANS.md "Training-ops scale smoke"). In production this
+   * table is the persisted, bucketed artifact the docstring above assumes;
+   * here the checkpoint is its in-session stand-in.
    */
   def incrementalCandidates(newDocs: DataFrame, oldDocs: DataFrame,
                             k: Int, bands: Int,
@@ -1084,7 +1084,7 @@ object Dedup {
   //    the single-token prefix equi-join complete. A doc small enough to
   //    qualify through c = 1 has ⌈θ'·sz⌉ = 1, i.e. its "prefix" IS the
   //    whole doc — tiny docs need no separate channel.
-  //    Measured on this corpus (PostingsProfile, sf10): Σ df_p² = 358M
+  //    Measured on this corpus (sf10, PLANS.md Round-18 §1): Σ df_p² = 358M
   //    join rows at θ=0.5 (vs 822M for counting) and 713M at θ=0.1, halved
   //    again by the a<b orientation — with zero aggregate state. A k=2
   //    token-PAIR pigeonhole was measured too and rejected: it shrinks the
@@ -1774,8 +1774,9 @@ object Dedup {
     componentsStarWithRounds(pairs, maxIters)._1
 
   /** [[componentsStar]] plus the number of large-star/small-star rounds it
-   * took — the O(log n) convergence claim made observable (the 1M-vertex
-   * chain smoke in TrainingScaleSmoke records this against its bound). */
+   * took — the O(log n) convergence claim made observable (ScaleOpsSpec
+   * asserts the bound on a scrambled 64-vertex chain; a 1M-vertex chain took
+   * 21 rounds, PLANS.md "Training-ops scale smoke"). */
   def componentsStarWithRounds(pairs: DataFrame,
                                maxIters: Int = 40): (DataFrame, Int) = {
     // checkpoint the INPUT once — vertices and edges both derive from it, and

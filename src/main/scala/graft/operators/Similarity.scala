@@ -423,7 +423,7 @@ object Similarity {
     // r18 (VERDICT r17 #4): the count-per-pair core accumulates one
     // hash-agg key per distinct co-occurring pair — ~290M keys at sf100 on
     // q126's corpus, the measured dec3 ~20× spill — but BELOW that scale it
-    // is the cheaper plan (CosineProfile sf10: counting 23.9 s vs
+    // is the cheaper plan (sf10, PLANS.md Round-18 §4: counting 23.9 s vs
     // merge-dot 37.4 s — the state only hurts once it spills). Dispatch on
     // ONE bounded census over the kept-term dfs: the STATE-FREE merge-dot
     // path takes over when Σ df² (the proxy for pair state — distinct

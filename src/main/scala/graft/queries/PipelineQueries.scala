@@ -3378,12 +3378,12 @@ object PipelineQueries {
         // localCheckpoint'ed WITHOUT the repartition, so each pass
         // re-EXCHANGED the full feature table — ~16 corpus-sized shuffles
         // at sf100 were the measured dec3 ~31×. localCheckpoint cannot
-        // carry the partitioning into its LogicalRDD (PerceptronProfile
-        // measured it: still one exchange per round), so this materializes
+        // carry the partitioning into its LogicalRDD (measured: still one
+        // exchange per round, PLANS.md Round-18 §3), so this materializes
         // via persist(): the InMemoryRelation advertises the cached plan's
         // hashpartitioning(doc_id) and every per-round aggregate and join
-        // plans EXCHANGE-FREE — PerceptronProfile: rounds 1.0-1.3 s
-        // (legacy) → 0.4-0.5 s (cached) at sf1.0, matrices identical.
+        // plans EXCHANGE-FREE — same section: rounds 1.0-1.3 s (legacy)
+        // → 0.4-0.5 s (cached) at sf1.0, matrices identical.
         // persist() also KEEPS lineage (better executor-loss behavior than
         // the old localCheckpoint); PlanShapeSpec pins the final plan on
         // the InMemoryTableScan.

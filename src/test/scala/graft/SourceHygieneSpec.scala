@@ -78,4 +78,27 @@ class SourceHygieneSpec extends AnyFunSuite {
     val hof = lines.collect { case (_, at, l) if l.contains("array_distinct(when(size(") => at }
     assert(hof.isEmpty, hof.mkString("\n", "\n", ""))
   }
+
+  test("every main under src/main/scala is named in README's entry-point list") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val mains = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      src = new String(Files.readAllBytes(f), "UTF-8")
+      at = src.indexOf("def main(")
+      if at >= 0
+    } yield {
+      val pkg = "(?m)^package ([\\w.]+)".r.findAllMatchIn(src).map(_.group(1)).mkString(".")
+      val obj = "\\bobject (\\w+)".r.findAllMatchIn(src.substring(0, at)).toSeq.last.group(1)
+      s"$pkg.$obj"
+    }
+    assert(mains.contains("graft.ExtractorCli"))
+    // the bullet list that follows "Entry points" under "## Verify / test"
+    val readme = Files.readAllLines(Paths.get("README.md")).asScala.toSeq
+    val section = readme.dropWhile(_ != "## Verify / test").drop(1).takeWhile(!_.startsWith("## "))
+    val list = section.dropWhile(!_.startsWith("Entry points")).drop(1)
+      .dropWhile(_.trim.isEmpty).takeWhile(_.trim.nonEmpty).mkString("\n")
+    val unnamed = mains.filterNot(m => list.contains(s"`$m`") || list.contains(s"`$m "))
+    assert(unnamed.isEmpty, unnamed.sorted.mkString("\n", "\n", ""))
+  }
 }

@@ -13,7 +13,8 @@ import graft.SparkSpec
  * pinning local blocks — identical results, and the round state survives the
  * blanket unpersist sweep that permanently breaks localCheckpoint-backed
  * frames (the stand-in for executor loss that local mode can exhibit).
- * The 1M-vertex-chain equality of both modes runs in TrainingScaleSmoke.
+ * Both modes are compared here on a scrambled 64-vertex chain; the
+ * O(log n) round bound of star contraction is asserted in ScaleOpsSpec.
  */
 class IterativeCheckpointSpec extends SparkSpec {
 

@@ -564,10 +564,13 @@ class ScaleOpsSpec extends SparkSpec {
     // long chain with SCRAMBLED ids (the component min sits mid-chain, so
     // star contraction must move labels against the edge direction too);
     // diameter 63 — min-label propagation needs 64 rounds, star contraction
-    // converges inside its default O(log n) cap of 40
+    // must converge in O(log n): at most 2·⌈log₂ 64⌉ = 12 rounds
     val ids = new scala.util.Random(7).shuffle((100L to 163L).toVector)
     val chain = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
-    val star = toMap(Dedup.componentsStar(chain))
+    val (starDf, rounds) = Dedup.componentsStarWithRounds(chain)
+    info(s"star contraction: $rounds rounds on the 64-vertex chain")
+    assert(rounds <= 12, s"star contraction took $rounds rounds on a 64-vertex chain")
+    val star = toMap(starDf)
     assert(star.values.toSet == Set(100L), "single component labeled by its min")
     assert(star.keySet == (100L to 163L).toSet)
     assert(star == toMap(Dedup.components(chain, maxIters = 100)))

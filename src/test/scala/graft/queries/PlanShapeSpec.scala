@@ -479,7 +479,7 @@ class PlanShapeSpec extends SparkSpec {
       }
     // q113 materializes via persist() instead (r18): the cached feature
     // table carries its doc_id co-partitioning into every training round
-    // (localCheckpoint cannot — PerceptronProfile), so the final plan must
+    // (localCheckpoint cannot — PLANS.md Round-18 §3), so the final plan must
     // read the InMemoryTableScan; the parquet scan text appearing INSIDE
     // the InMemoryRelation's displayed build plan executes once at cache
     // time, so only the scan-above-the-cache is asserted against.
