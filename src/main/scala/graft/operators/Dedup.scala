@@ -136,146 +136,63 @@ object Dedup {
   }
 
   /**
-   * Block-PAIR band keys for a bit-sampled hash (phash/simhash family) —
-   * the parameterized form of q90's banding, making the NEXT corpus decade
-   * a config change instead of a redesign (VERDICT r12 #7).
+   * Block band keys for a 64-bit bit-sampled hash (the phash/simhash
+   * family), feeding [[bucketedPairs]]. The hash splits into 8 blocks of
+   * 8 bits, little-endian (block b is bits [8b, 8b + 8)), and each band
+   * keys one unordered block `order`-subset i < j (< k): `band` is the
+   * block indices as base-8 digits (i·8 + j, or (i·8 + j)·8 + k) and
+   * `band_key` is their bytes concatenated (256·block_i + block_j, or
+   * 65536·block_i + 256·block_j + block_k). Input `(id, hash: bigint)`;
+   * output `(id, band, band_key)` plus the `carry` columns, one row per
+   * band.
    *
-   * Input: `(id, hash)` with `hash: array<long>` holding `blocks/8` words,
-   * 8 consecutive 8-bit blocks per word little-endian (block b lives at
-   * bits [8(b mod 8), 8(b mod 8)+8) of word b div 8; a 64-bit hash is
-   * `array(phash)`). Output: `(id, band, band_key)` — one row per
-   * UNORDERED block pair i < j, `band = i·blocks + j`, `band_key =
-   * 256·block_i + block_j` (16 bits → 65536 buckets per band), feeding
-   * [[bucketedPairs]].
+   * RECALL THEOREM (the pigeonhole argument, property-proven in
+   * BlockPairBandsSpec): a pair within Hamming distance `8 − order`
+   * damages at most `8 − order` blocks, leaving ≥ `order` blocks clean —
+   * and those clean blocks are an identical `band_key` in an identical
+   * `band`, so every true pair collides in some bucket. Budgets: ham ≤ 6
+   * for pairs, ham ≤ 5 for triples.
    *
-   * RECALL THEOREM (the pigeonhole argument, property-proven at both
-   * settings in BlockPairBandsSpec): a pair within Hamming distance
-   * `blocks − 2` damages at most `blocks − 2` blocks, leaving ≥ 2 blocks
-   * clean — and that pair of clean blocks is an identical `band_key` in an
-   * identical `band`, so every true pair collides in some bucket. Budgets:
-   * ham ≤ 6 of 64 at `blocks = 8`, ham ≤ 14 of 128 at `blocks = 16`.
-   *
-   * KEY-SPACE DOCTRINE (measured twice by the ScaleUp sweeps — q90 r11 at
-   * sf1.0, its 256-key successor at sf10): a FIXED key space fills
+   * KEY-SPACE DOCTRINE (measured by the ScaleUp sweeps — q90 r11 at
+   * sf1.0, its 256-key successor at sf10): a fixed key space fills
    * linearly while in-bucket pairs grow quadratically, so each corpus
-   * decade needs ~2× the key BITS. `blocks = 8` gives C(8,2) = 28 bands ×
-   * 2^16 keys (measured exponent 0.44 at sf10); `blocks = 16` (a 128-bit
-   * hash) gives C(16,2) = 120 bands × 2^16 keys — the third-decade
-   * setting, now code, held by the same theorem.
+   * decade needs more key bits PER BAND. Pairs give C(8,2) = 28 bands ×
+   * 2^16 keys (q90, q169; measured exponent 0.44 at sf10). Triples give
+   * C(8,3) = 56 bands × 2^24 keys, ~256× fewer background collisions per
+   * band for one Hamming unit of recall; collapsed triples ran sf100 in
+   * 81.4 s (PLANS.md Round-17 §7). No other setting has a regime where
+   * it wins, so none is offered: 16 blocks over a 128-bit hash multiply
+   * bands without widening any key and were worse at every scale (111.5M
+   * candidates against 10.4M at sf10, PLANS.md Round-14), and block
+   * quadruples lost to triples at sf100 (476 s against 347 s, PLANS.md
+   * Round-16 §6).
    */
-  def blockPairBands(hashes: DataFrame, blocks: Int): DataFrame = {
-    require(blocks == 8 || blocks == 16,
-      s"blockPairBands supports blocks = 8 (64-bit hash) or 16 (128-bit), got $blocks")
-    val words = blocks / 8
-    // the word-count contract is enforced IN PLAN (construction runs no
-    // job): a short hash array would silently band on missing blocks
-    val checked = when(size(col("hash")) === words, col("hash"))
-      .otherwise(raise_error(concat(
-        lit(s"blockPairBands: hash must carry $words long words for " +
-          s"$blocks blocks, got "), size(col("hash")).cast("string"),
-        lit(" (id "), col("id").cast("string"), lit(")")))
-        .cast("array<bigint>"))
-    hashes.select(col("id"), checked.as("hash"))
-      .select(col("id"), explode(expr(
-        s"""flatten(transform(sequence(0, ${blocks - 2}), i ->
-              transform(sequence(i + 1, ${blocks - 1}), j ->
-                struct(i * $blocks + j AS band,
-                  (shiftright(element_at(hash, cast(i div 8 as int) + 1), (i % 8) * 8) & 255) * 256 +
-                  (shiftright(element_at(hash, cast(j div 8 as int) + 1), (j % 8) * 8) & 255) AS band_key))))"""
-      )).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.band_key").as("band_key"))
+  def blockBands(hashes: DataFrame, order: Int,
+                 carry: Seq[String] = Nil): DataFrame = {
+    requireOrder("blockBands", order)
+    val vs = Seq("i", "j", "k").take(order)
+    def digits(base: Int)(term: String => String): String =
+      vs.zipWithIndex.map { case (v, t) =>
+        s"${term(v)} * ${math.pow(base, order - 1 - t).toInt}"
+      }.mkString(" + ")
+    // i < j (< k) over 0..7: the innermost loop builds the band structs,
+    // each outer loop flattens one level
+    val gen = vs.indices.foldRight(
+      s"struct(${digits(8)(v => v)} AS band, " +
+        s"${digits(256)(v => s"(shiftright(hash, $v * 8) & 255)")} AS band_key)") {
+      (t, inner) =>
+        val lo = if (t == 0) "0" else s"${vs(t - 1)} + 1"
+        val loop = s"transform(sequence($lo, ${8 - order + t}), ${vs(t)} -> $inner)"
+        if (t == order - 1) loop else s"flatten($loop)"
+    }
+    hashes.select(Seq(col("id"), explode(expr(gen)).as("bb")) ++ carry.map(col): _*)
+      .select(Seq(col("id"), col("bb.band").as("band"),
+        col("bb.band_key").as("band_key")) ++ carry.map(col): _*)
   }
 
-  /**
-   * Block-TRIPLE band keys — the key-bits-per-BAND doctrine's third-decade
-   * form (VERDICT r14 #5/#6: the sf100 measurement REFUTED "more blocks";
-   * `blocks = 16` multiplies bands — C(16,2) = 120 — without widening any
-   * band's key, so candidates grow; what must grow per decade is the key
-   * bits PER BAND). Triples keep the SAME 64-bit hash and the SAME number
-   * of blocks but key each band on THREE clean blocks: C(8,3) = 56 bands ×
-   * 24-bit keys (2^24 buckets per band — 256× the pair form's 2^16), so
-   * the background collision rate per band drops by ~256× while the band
-   * count only doubles.
-   *
-   * RECALL THEOREM (pigeonhole, property-proven in BlockPairBandsSpec): a
-   * pair within Hamming distance `blocks − 3` damages at most `blocks − 3`
-   * blocks, leaving ≥ 3 clean — an identical 24-bit `band_key` in an
-   * identical `band`. Budgets: ham ≤ 5 of 64 at `blocks = 8`, ham ≤ 13 of
-   * 128 at `blocks = 16`. One fewer Hamming unit of guaranteed recall than
-   * [[blockPairBands]] — the price of the decade.
-   *
-   * Output: `(id, band, band_key)` with `band = (i·blocks + j)·blocks + k`
-   * over block triples i < j < k, `band_key = 65536·block_i + 256·block_j
-   * + block_k`, feeding [[bucketedPairs]] exactly like the pair form.
-   */
-  def blockTripleBands(hashes: DataFrame, blocks: Int): DataFrame = {
-    require(blocks == 8 || blocks == 16,
-      s"blockTripleBands supports blocks = 8 (64-bit hash) or 16 (128-bit), got $blocks")
-    val words = blocks / 8
-    val checked = when(size(col("hash")) === words, col("hash"))
-      .otherwise(raise_error(concat(
-        lit(s"blockTripleBands: hash must carry $words long words for " +
-          s"$blocks blocks, got "), size(col("hash")).cast("string"),
-        lit(" (id "), col("id").cast("string"), lit(")")))
-        .cast("array<bigint>"))
-    def blk(v: String) =
-      s"(shiftright(element_at(hash, cast($v div 8 as int) + 1), ($v % 8) * 8) & 255)"
-    hashes.select(col("id"), checked.as("hash"))
-      .select(col("id"), explode(expr(
-        s"""flatten(transform(sequence(0, ${blocks - 3}), i ->
-              flatten(transform(sequence(i + 1, ${blocks - 2}), j ->
-                transform(sequence(j + 1, ${blocks - 1}), k ->
-                  struct((i * $blocks + j) * $blocks + k AS band,
-                    (${blk("i")} * 256 + ${blk("j")}) * 256 + ${blk("k")} AS band_key))))))"""
-      )).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.band_key").as("band_key"))
-  }
-
-  /**
-   * Block-QUADRUPLE band keys — the FOURTH-decade form PLANS.md §10 names
-   * (spec'd before it's needed, VERDICT r15 #6): same 64-bit hash, same 8
-   * blocks, but each band keys on FOUR clean blocks — C(8,4) = 70 bands ×
-   * 32-bit keys (2^32 buckets per band, 256× the triple form's 2^24), so
-   * the per-band background collision rate drops another ~256× while the
-   * band count grows only 70/56 = 1.25×. The doctrine's decade ladder in
-   * one line: 16-bit pairs → 24-bit triples → 32-bit quadruples, one
-   * key-width step per decade, each buying ~256× fewer accidental
-   * collisions for ONE less guaranteed Hamming unit.
-   *
-   * RECALL THEOREM (pigeonhole, property-proven in BlockPairBandsSpec): a
-   * pair within Hamming distance `blocks − 4` damages at most `blocks − 4`
-   * blocks, leaving ≥ 4 clean — an identical 32-bit `band_key` in an
-   * identical `band`. Budgets: ham ≤ 4 of 64 at `blocks = 8`, ham ≤ 12 of
-   * 128 at `blocks = 16`.
-   *
-   * Output: `(id, band, band_key)` with
-   * `band = ((i·blocks + j)·blocks + k)·blocks + l` over block quadruples
-   * i < j < k < l and the 4-byte concatenation as `band_key`, feeding
-   * [[bucketedPairs]] exactly like the pair/triple forms.
-   */
-  def blockQuadBands(hashes: DataFrame, blocks: Int): DataFrame = {
-    require(blocks == 8 || blocks == 16,
-      s"blockQuadBands supports blocks = 8 (64-bit hash) or 16 (128-bit), got $blocks")
-    val words = blocks / 8
-    val checked = when(size(col("hash")) === words, col("hash"))
-      .otherwise(raise_error(concat(
-        lit(s"blockQuadBands: hash must carry $words long words for " +
-          s"$blocks blocks, got "), size(col("hash")).cast("string"),
-        lit(" (id "), col("id").cast("string"), lit(")")))
-        .cast("array<bigint>"))
-    def blk(v: String) =
-      s"(shiftright(element_at(hash, cast($v div 8 as int) + 1), ($v % 8) * 8) & 255)"
-    hashes.select(col("id"), checked.as("hash"))
-      .select(col("id"), explode(expr(
-        s"""flatten(transform(sequence(0, ${blocks - 4}), i ->
-              flatten(transform(sequence(i + 1, ${blocks - 3}), j ->
-                flatten(transform(sequence(j + 1, ${blocks - 2}), k ->
-                  transform(sequence(k + 1, ${blocks - 1}), l ->
-                    struct(((i * $blocks + j) * $blocks + k) * $blocks + l AS band,
-                      ((${blk("i")} * 256 + ${blk("j")}) * 256 + ${blk("k")}) * 256 + ${blk("l")} AS band_key))))))))"""
-      )).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.band_key").as("band_key"))
-  }
+  private def requireOrder(op: String, order: Int): Unit =
+    require(order == 2 || order == 3,
+      s"$op: order must be 2 (block pairs) or 3 (block triples), got $order")
 
   /**
    * Clique-collapsed banded candidates — identical full hashes collapse to
@@ -301,15 +218,13 @@ object Dedup {
    * BandCanonicalSpec pin the contract; the sf100 measurement is recorded
    * in PLANS.md, Round-17 §3 and §7.
    *
-   * `bandFn` maps (id, hash) → (id, band, band_key) — one of
-   * [[blockPairBands]]/[[blockTripleBands]]/[[blockQuadBands]]. Returns
-   * (a, b) with a < b: star edges ∪ rep-level banded pairs, distinct. The
-   * class table materializes once (localCheckpoint — the
-   * [[minhashCandidates]] trade): the star join and the rep banding both
-   * read it, and construction is EAGER.
+   * Reps band through [[blockBands]] at `order`. Returns (a, b) with
+   * a < b: star edges ∪ rep-level banded pairs, distinct. The class table
+   * materializes once (localCheckpoint — the [[minhashCandidates]] trade):
+   * the star join and the rep banding both read it, and construction is
+   * EAGER.
    */
-  def collapsedBandCandidates(hashes: DataFrame,
-                              bandFn: DataFrame => DataFrame,
+  def collapsedBandCandidates(hashes: DataFrame, order: Int,
                               maxBucket: Int = 10000): DataFrame = {
     val classes = hashes.groupBy(col("hash")).agg(min(col("id")).as("rep"))
       .localCheckpoint()
@@ -318,75 +233,14 @@ object Dedup {
       .select(least(col("rep"), col("id")).as("a"),
         greatest(col("rep"), col("id")).as("b"))
     val reps = classes.select(col("rep").as("id"), col("hash"))
-    bucketedPairs(bandFn(reps), maxBucket)
+    bucketedPairs(blockBands(reps, order), maxBucket)
       .unionByName(stars).distinct()
-  }
-
-  /** (id, h1[, h2]) — the hash array flattened to PLAIN LONG columns, with
-   * the word-count contract enforced in plan. The fused enumeration works
-   * on flat longs throughout: nested-array payloads in pair structs and
-   * higher-order-function expressions in the per-pair hot path are
-   * INTERPRETED by Spark (HOFs are CodegenFallback), and the r17 sf100
-   * first-attempt measurement caught exactly that — executor stacks parked
-   * in SimpleHigherOrderFunction.eval at ~50× the codegen cost per pair. */
-  private def flatHash(hashes: DataFrame, words: Int): DataFrame = {
-    val checked = when(size(col("hash")) === words, col("hash"))
-      .otherwise(raise_error(concat(
-        lit(s"bandCanonicalPairs: hash must carry $words long words, got "),
-        size(col("hash")).cast("string"),
-        lit(" (id "), col("id").cast("string"), lit(")")))
-        .cast("array<bigint>"))
-    hashes.select(col("id") +:
-      (0 until words).map(w => element_at(checked, w + 1).as(s"h${w + 1}")): _*)
-  }
-
-  /** Byte `v` (a runtime SQL variable) of the flattened hash columns. */
-  private def blkFlat(blocks: Int)(v: String): String =
-    if (blocks == 8) s"(shiftright(h1, ($v) * 8) & 255)"
-    else s"(shiftright(CASE WHEN ($v) < 8 THEN h1 ELSE h2 END, (($v) % 8) * 8) & 255)"
-
-  /** All order-subset band structs over the FLAT hash columns — the
-   * [[blockPairBands]]/[[blockTripleBands]]/[[blockQuadBands]] encodings
-   * exactly (band = base-`blocks` digits of the block indices, band_key =
-   * the concatenated block bytes). Runs once per ID (not per pair), so the
-   * interpreted lambda cost is corpus-linear and small. */
-  private def bandsFlat(flat: DataFrame, blocks: Int, order: Int,
-                        carry: Seq[String] = Nil): DataFrame = {
-    require(blocks == 8 || blocks == 16, s"blocks must be 8 or 16, got $blocks")
-    require(order >= 2 && order <= 4, s"order must be 2..4, got $order")
-    val blk = blkFlat(blocks) _
-    val bands = order match {
-      case 2 =>
-        s"""flatten(transform(sequence(0, ${blocks - 2}), i ->
-              transform(sequence(i + 1, ${blocks - 1}), j ->
-                struct(i * $blocks + j AS band,
-                  ${blk("i")} * 256 + ${blk("j")} AS band_key))))"""
-      case 3 =>
-        s"""flatten(transform(sequence(0, ${blocks - 3}), i ->
-              flatten(transform(sequence(i + 1, ${blocks - 2}), j ->
-                transform(sequence(j + 1, ${blocks - 1}), k ->
-                  struct((i * $blocks + j) * $blocks + k AS band,
-                    (${blk("i")} * 256 + ${blk("j")}) * 256 + ${blk("k")} AS band_key))))))"""
-      case _ =>
-        s"""flatten(transform(sequence(0, ${blocks - 4}), i ->
-              flatten(transform(sequence(i + 1, ${blocks - 3}), j ->
-                flatten(transform(sequence(j + 1, ${blocks - 2}), k ->
-                  transform(sequence(k + 1, ${blocks - 1}), l ->
-                    struct(((i * $blocks + j) * $blocks + k) * $blocks + l AS band,
-                      ((${blk("i")} * 256 + ${blk("j")}) * 256 + ${blk("k")}) * 256 + ${blk("l")} AS band_key))))))))"""
-    }
-    val hcols = (1 to blocks / 8).map(w => s"h$w")
-    flat.select(Seq(col("id")) ++ hcols.map(col) ++
-        Seq(explode(expr(bands)).as("bb")) ++ carry.map(col): _*)
-      .select(Seq(col("id")) ++ hcols.map(col) ++
-        Seq(col("bb.band").as("band"), col("bb.band_key").as("band_key")) ++
-        carry.map(col): _*)
   }
 
   /**
    * Banded colliding pairs with CANONICAL-BAND emission and INLINE Hamming —
    * the fused third-decade enumeration (r17). Pair-set-identical to
-   * `bucketedPairs(block<Order>Bands(hashes))` annotated with each pair's
+   * `bucketedPairs(blockBands(hashes, order))` annotated with each pair's
    * Hamming distance (BandCanonicalSpec), but the PLAN removes the two
    * scale-killers the r16 sf100 measurement exposed:
    *
@@ -408,19 +262,35 @@ object Dedup {
    * emissions and each other) — a shuffle of the OUTPUT, not of the
    * enumeration. Returns (a, b, ham), a < b, one row per pair sharing at
    * least one band bucket. Callers keep pairs at their pigeonhole budget
-   * (`ham <= blocks - order` guarantees presence; larger ham values are
+   * (`ham <= 8 - order` guarantees presence; larger ham values are
    * background collisions to filter).
    */
-  def bandCanonicalPairs(hashes: DataFrame, blocks: Int, order: Int,
+  def bandCanonicalPairs(hashes: DataFrame, order: Int,
                          maxBucket: Int = 10000): DataFrame = {
-    val words = blocks / 8
-    val hcols = (1 to words).map(w => s"h$w")
-    val f = flatHash(hashes, words)
-    val banded = bandsFlat(f, blocks, order)
+    val banded = blockBands(hashes, order, carry = Seq("hash"))
     val sizes = banded.groupBy(col("band"), col("band_key"))
-      .agg(count(lit(1)).as("n"),
-        min(struct(col("id") +: hcols.map(col): _*)).as("rep"))
+      .agg(count(lit(1)).as("n"), min(struct(col("id"), col("hash"))).as("rep"))
       .localCheckpoint()
+
+    // pair enumeration: (a, b, hash xor, `extra` of a) for i < j over the
+    // id-sorted bucket members, kept where `test` holds — plain longs
+    // only; the lambda is interpreted (HOFs are CodegenFallback) but does
+    // nothing beyond field copies, and EVERYTHING per-pair downstream is
+    // codegen'd integer arithmetic
+    def emitted(rows: DataFrame, extra: Seq[String], test: Column): DataFrame = {
+      val fields = extra.map(e => s", x.$e AS $e").mkString
+      rows.groupBy(col("band"), col("band_key"))
+        .agg(array_sort(collect_list(
+          struct((Seq("id", "hash") ++ extra).map(col): _*))).as("m"))
+        .select(col("band"), explode(expr(
+          s"""flatten(transform(m, (x, i) ->
+               transform(slice(m, i + 2, size(m)), y ->
+                 struct(x.id AS a, y.id AS b, x.hash ^ y.hash AS xh$fields))))""")).as("p"))
+        .select(col("band"), col("p.*"))
+        .withColumn("_cm", cleanMask)
+        .where(test)
+        .select(col("a"), col("b"), expr("bit_count(xh)").cast("long").as("ham"))
+    }
 
     // Per-id HOT-BAND sets, so canonicality can skip hot buckets: a pair
     // whose first clean band lands in a hot bucket is enumerated by its
@@ -438,7 +308,7 @@ object Dedup {
     val hotKeys = Audits.observeLoudly(
       sizes.where(col("n") > maxBucket), "graft.dedup.hot_buckets",
       Seq(count(lit(1)).as("n_hot"), max(col("n")).as("max_bucket_seen"),
-        lit(maxBucket).as("max_bucket_cap")),
+        lit(maxBucket.toLong).as("max_bucket_cap")),
       "graft.operators.Dedup",
       shouldWarn = _.getLong(0) > 0,
       render = row =>
@@ -452,121 +322,58 @@ object Dedup {
     // the second banding below would scan the full band table for nothing
     // — enumerate straight off the first banding with the maskTest-only
     // canonical filter instead.
-    val hasHot = !hotKeys.isEmpty
-    if (!hasHot) {
-      return banded
-        .groupBy(col("band"), col("band_key"))
-        .agg(array_sort(collect_list(
-          struct(col("id") +: hcols.map(col): _*))).as("m"))
-        .select(col("band"), explode(expr(
-          s"""flatten(transform(m, (x, i) ->
-               transform(slice(m, i + 2, size(m)), y ->
-                 struct(x.id AS a, y.id AS b, ${hcols
-            .map(h => s"x.$h ^ y.$h AS x$h").mkString(", ")}))))""")).as("p"))
-        .select(Seq(col("band"), col("p.a").as("a"), col("p.b").as("b")) ++
-          hcols.map(h => col(s"p.x$h").as(s"x$h")): _*)
-        .withColumn("_cm", cleanMaskOf(blocks))
-        .where(canonicalMaskTest(blocks, order))
-        .select(col("a"), col("b"), hcols
-          .map(h => expr(s"bit_count(x$h)").cast("long"))
-          .reduce(_ + _).as("ham"))
-    }
+    if (hotKeys.isEmpty) return emitted(banded, Nil, canonicalMaskTest(order))
+
     val hotmap = banded
       .join(broadcast(hotKeys), Seq("band", "band_key"), "left_semi")
       .groupBy(col("id"))
       .agg(sort_array(collect_set(col("band"))).as("hotbands"))
-    val members = f
+    val members = hashes.select(col("id"), col("hash"))
       .join(hotmap, Seq("id"), "left")
-      .select(Seq(col("id")) ++ hcols.map(col) ++ Seq(
-        coalesce(col("hotbands"), array().cast("array<int>")).as("hotbands")): _*)
+      .select(col("id"), col("hash"),
+        coalesce(col("hotbands"), array().cast("array<int>")).as("hotbands"))
     // re-band with the hot sets carried; a row whose own bucket is hot
     // (band ∈ hotbands(id)) leaves the small path right here — no second
     // size join
-    val banded2 = bandsFlat(members, blocks, order, carry = Seq("hotbands"))
+    val banded2 = blockBands(members, order, carry = Seq("hash", "hotbands"))
       .where(!array_contains(col("hotbands"), col("band")))
 
-    // pair enumeration: (a, b, word xors, a's hot set) for i < j over the
-    // id-sorted bucket members — flat longs only; the lambda is
-    // interpreted (HOFs are CodegenFallback) but does nothing beyond
-    // field copies, and EVERYTHING per-pair downstream is codegen'd
-    // integer arithmetic
-    val xorFields = hcols.map(h => s"x.$h ^ y.$h AS x$h").mkString(", ")
-    val pairStructs = expr(
-      s"""flatten(transform(m, (x, i) ->
-           transform(slice(m, i + 2, size(m)), y ->
-             struct(x.id AS a, y.id AS b, $xorFields,
-                    x.hotbands AS hba))))""")
-
-    // general test for the RARE hot-carrying pairs: first colliding band
-    // not in the hot set — higher-order functions, interpreted, but only
-    // evaluated on rows whose hot set is non-empty (the when() branches
-    // lazily), so the interpreted cost is proportional to hot-adjacent
-    // pairs, not the enumeration
-    val cleanArr =
-      s"filter(sequence(0, ${blocks - 1}), b -> ${blkXorByte(blocks)("b")} = 0)"
-    val collideBands = order match {
-      case 2 =>
-        s"""flatten(transform($cleanArr, (i, pi) ->
-              transform(slice($cleanArr, pi + 2, $blocks), j ->
-                i * $blocks + j)))"""
-      case 3 =>
-        s"""flatten(transform($cleanArr, (i, pi) ->
-              flatten(transform(slice($cleanArr, pi + 2, $blocks), (j, pj) ->
-                transform(slice($cleanArr, pi + pj + 3, $blocks), k ->
-                  (i * $blocks + j) * $blocks + k)))))"""
-      case _ =>
-        s"""flatten(transform($cleanArr, (i, pi) ->
-              flatten(transform(slice($cleanArr, pi + 2, $blocks), (j, pj) ->
-                flatten(transform(slice($cleanArr, pi + pj + 3, $blocks), (k, pk) ->
-                  transform(slice($cleanArr, pi + pj + pk + 4, $blocks), l ->
-                    ((i * $blocks + j) * $blocks + k) * $blocks + l)))))))"""
-    }
-    val hotAwareTest = col("band") === element_at(
-      expr(s"filter($collideBands, t -> NOT array_contains(hba, t))"), 1)
-
-    val emitted = banded2
-      .groupBy(col("band"), col("band_key"))
-      .agg(array_sort(collect_list(
-        struct(Seq(col("id")) ++ hcols.map(col) ++
-          Seq(col("hotbands")): _*))).as("m"))
-      .select(col("band"), explode(pairStructs).as("p"))
-      .select(Seq(col("band"), col("p.a").as("a"), col("p.b").as("b"),
-        col("p.hba").as("hba")) ++
-        hcols.map(h => col(s"p.x$h").as(s"x$h")): _*)
-      .withColumn("_cm", cleanMaskOf(blocks))
-      .where(when(size(col("hba")) === 0, canonicalMaskTest(blocks, order))
-        .otherwise(hotAwareTest))
-      .select(col("a"), col("b"), hcols
-        .map(h => expr(s"bit_count(x$h)").cast("long"))
-        .reduce(_ + _).as("ham"))
+    // general test for the RARE hot-carrying pairs: this band is the first
+    // clean band (in band order, which is lexicographic block order) not in
+    // a's hot set, found by one filter over the constant (band, block mask)
+    // list — a higher-order function, interpreted, but only evaluated on
+    // rows whose hot set is non-empty (the when() below branches lazily)
+    val bandMasks = typedLit((0 until 8).combinations(order).toSeq
+      .map(bs => (bs.foldLeft(0)(_ * 8 + _), bs.map(1 << _).sum)).sortBy(_._1))
+    val hotAwareTest = col("band") === element_at(filter(bandMasks, t =>
+      col("_cm").bitwiseAND(t("_2")) === t("_2") &&
+        !array_contains(col("hotbands"), t("_1"))), 1)("_1")
     val hot = banded
       .join(sizes.where(col("n") > maxBucket)
         .select(col("band"), col("band_key"), col("rep")),
         Seq("band", "band_key"))
       .where(col("id") =!= col("rep.id"))
-      .select(col("rep.id").as("a"), col("id").as("b"), hcols
-        .map(h => expr(s"bit_count($h ^ rep.$h)").cast("long"))
-        .reduce(_ + _).as("ham"))
+      .select(col("rep.id").as("a"), col("id").as("b"),
+        expr("bit_count(hash ^ rep.hash)").cast("long").as("ham"))
     // canonical emission is already duplicate-free; the closing distinct
     // exists ONLY to merge the hot-star channel (stars repeat across hot
     // bands, and a star pair can also be a small-bucket emission). The
     // no-hot case — one cheap probe of the checkpointed census, taken
     // above BEFORE any hot machinery is built (ADVICE r17) — skipped the
     // hotmap scan, the re-banding AND this output-sized dedup shuffle.
-    emitted.unionByName(hot).distinct()
+    emitted(banded2, Seq("hotbands"),
+      when(size(col("hotbands")) === 0, canonicalMaskTest(order))
+        .otherwise(hotAwareTest))
+      .unionByName(hot).distinct()
   }
 
-  /** Clean-block bitmask of the per-pair XOR columns xh1[, xh2]: bit b set
-   * iff byte b is zero — a flat 8/16-term codegen'd sum, no arrays. */
-  private def cleanMaskOf(blocks: Int): Column = {
-    def xByte(b: Int): String = {
-      val wordCol = s"xh${b / 8 + 1}"
-      s"(shiftright($wordCol, ${(b % 8) * 8}) & 255)"
-    }
-    (0 until blocks)
-      .map(b => when(expr(s"${xByte(b)} = 0"), lit(1 << b)).otherwise(lit(0)))
+  /** Clean-block bitmask of the per-pair XOR column `xh`: bit b set iff
+   * byte b is zero — a flat 8-term codegen'd sum, no arrays. */
+  private def cleanMask: Column =
+    (0 until 8)
+      .map(b => when(shiftright(col("xh"), b * 8).bitwiseAND(255) === 0, lit(1 << b))
+        .otherwise(lit(0)))
       .reduce(_ + _)
-  }
 
   /** Canonical-without-hotness test over `_cm` and the `band` column: this
    * band's blocks are the `order` SMALLEST clean blocks ⟺ no clean block
@@ -574,39 +381,39 @@ object Dedup {
    * cleanMask ∧ (bits below last − own) = 0. (The band's own blocks are
    * clean by bucket membership, so the subtraction removes exactly those
    * distinct bits.) Band block indices decode with integer div/mod. */
-  private def canonicalMaskTest(blocks: Int, order: Int): Column = {
-    def idxExpr(t: Int): String = {
-      val div = math.pow(blocks.toDouble, (order - 1 - t).toDouble).toLong
-      s"cast((band div $div) % $blocks as int)"
-    }
+  private def canonicalMaskTest(order: Int): Column = {
+    def idxExpr(t: Int): String =
+      s"cast((band div ${1 << (3 * (order - 1 - t))}) % 8 as int)"
     val ownLow = (0 until order - 1)
       .map(t => s"shiftleft(1, ${idxExpr(t)})").mkString(" + ")
     expr(s"(_cm & ((shiftleft(1, ${idxExpr(order - 1)}) - 1) - ($ownLow))) = 0")
   }
 
-  /** Byte `b` (runtime variable) of the per-pair XOR columns xh1[, xh2]. */
-  private def blkXorByte(blocks: Int)(b: String): String =
-    if (blocks == 8) s"(shiftright(xh1, ($b) * 8) & 255)"
-    else s"(shiftright(CASE WHEN ($b) < 8 THEN xh1 ELSE xh2 END, (($b) % 8) * 8) & 255)"
-
   /**
    * [[collapsedBandCandidates]] FUSED end to end: identical-hash classes
    * collapse to reps (star edges at ham 0), reps enumerate through
    * [[bandCanonicalPairs]], and the budget filter keeps the verified
-   * pairs — (a, b, ham) with every true pair within `blocks − order`
-   * present (pigeonhole over reps + the collapse theorem) and nothing
-   * else, PROVIDED the `maxBucket` cap does not bind (ADVICE r17): a
-   * distinct-hash bucket above the cap degrades its pairs to star
-   * connectivity, so a true pair whose EVERY colliding band is hot would
-   * drop from the exact-pair set. A binding cap WARNs through the shared
-   * hot-bucket audit in [[bandCanonicalPairs]]; q169's oracle equality is
-   * claimed only on corpora whose census stays under the cap (true at
-   * every oracle scale by construction, and verified loud at sf100 —
-   * max distinct-hash class 668 ≪ 10000). The q169 query semantics in one
-   * operator, with zero candidate distinct and zero verify joins.
+   * pairs — (a, b, ham) with every true pair within `budget` present
+   * (pigeonhole over reps + the collapse theorem) and nothing else. The
+   * theorem covers `budget ≤ 8 − order` only (a pair at ham 7 can damage
+   * 7 blocks and collide in no pair band), so a larger budget fails by
+   * name instead of silently missing pairs. The exactness also needs the
+   * `maxBucket` cap not to bind (ADVICE r17): a distinct-hash bucket
+   * above the cap degrades its pairs to star connectivity, so a true pair
+   * whose EVERY colliding band is hot would drop from the exact-pair set.
+   * A binding cap WARNs through the shared hot-bucket audit in
+   * [[bandCanonicalPairs]]; q169's oracle equality is claimed only on
+   * corpora whose census stays under the cap (true at every oracle scale
+   * by construction, and verified loud at sf100 — max distinct-hash class
+   * 668 ≪ 10000). The q169 query semantics in one operator, with zero
+   * candidate distinct and zero verify joins.
    */
-  def collapsedVerifiedPairs(hashes: DataFrame, blocks: Int, order: Int,
+  def collapsedVerifiedPairs(hashes: DataFrame, order: Int,
                              budget: Int, maxBucket: Int = 10000): DataFrame = {
+    requireOrder("collapsedVerifiedPairs", order)
+    require(budget >= 0 && budget <= 8 - order,
+      s"collapsedVerifiedPairs: budget must be in [0, ${8 - order}] at order " +
+        s"$order (the pigeonhole recall bound), got $budget")
     val classes = hashes.groupBy(col("hash")).agg(min(col("id")).as("rep"))
       .localCheckpoint()
     val stars = hashes.join(classes, Seq("hash"))
@@ -614,7 +421,7 @@ object Dedup {
       .select(least(col("rep"), col("id")).as("a"),
         greatest(col("rep"), col("id")).as("b"), lit(0L).as("ham"))
     val reps = classes.select(col("rep").as("id"), col("hash"))
-    bandCanonicalPairs(reps, blocks, order, maxBucket)
+    bandCanonicalPairs(reps, order, maxBucket)
       .where(col("ham") <= budget)
       .unionByName(stars)
   }
@@ -1408,44 +1215,6 @@ object Dedup {
     if (k <= maxGateChunks)
       pigeonholeContainment(docs, thresholdFp, maxDf, k)
     else countingContainment(docs, thresholdFp, maxDf)
-  }
-
-  /**
-   * Exact all-pairs Jaccard with PREFIX FILTERING — the candidate-pruned
-   * twin of [[allPairsJaccard]], value-identical by the prefix-filter
-   * theorem: order every shingle set by a global canonical order (document
-   * frequency ascending, shingle as tie-break) and index only each doc's
-   * PREFIX of `|A| - ceil(t*|A|) + 1` rarest shingles. For any pair with
-   * `jac >= t`, `|A∩B| >= t*|A∪B| >= t*|A|`, so the smallest common shingle
-   * sits within both prefixes (pigeonhole on the shared order) — the prefix
-   * equi-join cannot miss a qualifying pair, and the exact verification
-   * decides. The join cost drops from Σ df² over ALL shingles to Σ df_p²
-   * over prefix postings only — high-df (boilerplate) shingles sort LAST and
-   * fall out of every prefix, which is exactly where the quadratic blowup
-   * lived.
-   *
-   * WHEN TO USE: Zipfian vocabularies (real text), where most df mass sits in
-   * a few common shingles that prefixes exclude. On a flat/tiny vocabulary
-   * (like the synthetic test corpus) prefixes prune nothing, the candidate
-   * set approaches all-pairs, and the per-pair verification costs more than
-   * [[allPairsJaccard]]'s count-only join — measured 49 s vs 6 s at sf0.1,
-   * which is why q31 keeps the count formulation. Both are exact; pick by
-   * corpus shape. Pair-identity across thresholds is pinned in ScaleOpsSpec.
-   */
-  def prefixJaccard(docs: DataFrame, threshold: Double): DataFrame = {
-    val posts = docs.select(col("id"), size(col("shingles")).as("sz"),
-      explode(col("shingles")).as("sh"))
-    val dfreq = posts.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df"), col("sh"))
-    val prefix = posts.join(dfreq, "sh")
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
-    val a = prefix.select(col("id").as("a"), col("sh"))
-    val b = prefix.select(col("id").as("b"), col("sh"))
-    val candidates = a.join(b, "sh").where(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    verifyJaccard(candidates, docs, threshold)
   }
 
   /**

@@ -422,12 +422,12 @@ object PipelineQueries {
     }),
 
     "q31_dedup_jaccard" -> ((s, d) => {
-      // exact n-gram Jaccard via the postings co-occurrence join (jac from
-      // counts, no per-pair array work). NOT the prefix-filtered variant:
-      // this corpus's vocabulary is tiny and uniformly common, so prefixes
-      // prune nothing and the candidate verify costs more than counting —
-      // measured 6s vs 49s at sf0.1 (prefixJaccard wins on Zipfian text,
-      // where high-df boilerplate falls out of every prefix).
+      // exact n-gram Jaccard through Dedup.allPairsJaccard, which picks
+      // the plan from the postings census: the counting co-occurrence join
+      // (jac from counts, no per-pair array work) below 2M postings, where
+      // its constant factors win, and the prefix-filtered pigeonhole join
+      // above it, where high-df shingles fall out of every prefix.
+      // PrefixPigeonholeSpec pins both plans to the same pairs.
       // Df-cap vs oracle: the DuckDB twin stays the unguarded quadratic, so
       // the hash gate holds only while no shingle's df exceeds the 10k cap —
       // true at every oracle scale factor by construction (≤5000 docs). A
@@ -2736,14 +2736,14 @@ object PipelineQueries {
       // space by 256: with ≤ 6 differing bits at most 6 of the 8 blocks are
       // damaged, so ≥ 2 blocks are clean and their PAIR is an identical
       // 16-bit key — every true pair still collides, exactly as the
-      // quadratic oracle demands. The third decade is CODE, not prose:
-      // Dedup.blockPairBands(blocks = 16) bands a 128-bit hash (two words)
-      // under the same theorem with ham budget ≤ 14 — property-proven at
-      // both settings in BlockPairBandsSpec, so the decade is a config
-      // change. Strictness: the base corpus has no accidental matches
-      // at 6/64, so detection is non-vacuous by PLANTED twins (the q143
-      // derived-snapshot discipline): every %5 image doc gains a copy with
-      // its first character edited (id + 999999 — ≡ 0 mod 3, so the twin
+      // quadratic oracle demands (Dedup.blockBands, property-proven in
+      // BlockPairBandsSpec). The next decade is block TRIPLES of the same
+      // hash (order = 3: 24-bit keys, ham budget ≤ 5), the setting that
+      // ran sf100 (PLANS.md Round-17 §7). Strictness: the base corpus has
+      // no accidental matches at 6/64, so detection is non-vacuous by
+      // PLANTED twins (the q143 derived-snapshot discipline): every %5
+      // image doc gains a copy with its first character edited
+      // (id + 999999 — ≡ 0 mod 3, so the twin
       // synthesizes as an image too); each twin pair lands at ham 0-4 and
       // must be recalled exactly. The hash table is checkpointed once (it
       // feeds both the bands and the verification).
@@ -2769,9 +2769,8 @@ object PipelineQueries {
       val ph = graft.multimodal.Multimodal.imagePhash(
         graft.multimodal.Multimodal.synthesizeReal(corpus))
         .localCheckpoint()
-      val bands = Dedup.blockPairBands(
-        ph.select(col("doc_id").as("id"), array(col("phash")).as("hash")),
-        blocks = 8)
+      val bands = Dedup.blockBands(
+        ph.select(col("doc_id").as("id"), col("phash").as("hash")), order = 2)
       Dedup.bucketedPairs(bands)
         .join(ph.select(col("doc_id").as("a"), col("phash").as("pa")), "a")
         .join(ph.select(col("doc_id").as("b"), col("phash").as("pb")), "b")
@@ -2824,8 +2823,8 @@ object PipelineQueries {
       // BandCanonicalSpec pins set-equality with the composite
       // bucketedPairs + verify path)
       Dedup.collapsedVerifiedPairs(
-          ph.select(col("doc_id").as("id"), array(col("phash")).as("hash")),
-          blocks = 8, order = 2, budget = 6)
+          ph.select(col("doc_id").as("id"), col("phash").as("hash")),
+          order = 2, budget = 6)
         .select(col("a").as("id_a"), col("b").as("id_b"), col("ham"))
         .orderBy(col("id_a"), col("id_b"))
     }),

@@ -35,6 +35,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(hits.size == 1, hits.mkString("\n", "\n", ""))
   }
 
+  test("AS band_key appears once under src/main/scala: one band encoder") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val hits = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("AS band_key")
+    } yield s"$f:${i + 1}"
+    assert(hits.size == 1, hits.mkString("\n", "\n", ""))
+  }
+
   test("file readers list with listStatus, and only streaming reads wholetext") {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repository root ($main)")

@@ -8,15 +8,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /**
- * The block-pair banding recall THEOREM, property-proven at BOTH settings
- * (VERDICT r12 #7 — the third decade as code): for `blocks` 8-bit blocks, a
- * pair within Hamming distance `blocks − 2` damages at most `blocks − 2`
- * blocks, leaving ≥ 2 clean — and that clean pair is an identical
- * `(band, band_key)` bucket, so every true pair collides. The test is
- * corpus-free: random hashes with a random ≤-budget bit-flip set, the exact
- * pigeonhole adversary (no corpus data could be stronger than arbitrary
- * flips), evaluated through the REAL Spark expression in one batch per
- * setting.
+ * The block-band recall THEOREM, property-proven at both orders: for the
+ * 8 8-bit blocks of a 64-bit hash, a pair within Hamming distance
+ * `8 − order` damages at most `8 − order` blocks, leaving ≥ `order` clean —
+ * and those clean blocks are an identical `(band, band_key)` bucket, so
+ * every true pair collides. The test is corpus-free: random hashes with a
+ * random ≤-budget bit-flip set, the exact pigeonhole adversary (no corpus
+ * data could be stronger than arbitrary flips), evaluated through the REAL
+ * Spark expression in one batch per order.
  */
 class BlockPairBandsSpec extends SparkSpec {
 
@@ -24,51 +23,39 @@ class BlockPairBandsSpec extends SparkSpec {
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
 
-  /** (original words, damaged words, nFlips) for a given block count. */
-  private def caseGen(blocks: Int): Gen[(Seq[Long], Seq[Long], Int)] = {
-    val words = blocks / 8
-    val bits = blocks * 8
-    for {
-      ws <- Gen.listOfN(words, Gen.choose(Long.MinValue, Long.MaxValue))
-      h <- Gen.choose(0, blocks - 2) // the full budget, 0 included
-      flips <- Gen.pick(h, 0 until bits)
-    } yield {
-      val damaged = ws.toArray
-      flips.foreach(p => damaged(p / 64) ^= (1L << (p % 64)))
-      (ws, damaged.toSeq, h)
-    }
-  }
-
-  private def collide(blocks: Int): Unit = {
+  /** 120 random (hash, hash with ≤ 8 − order bits flipped) pairs must share
+   * a bucket; every id gets C(8, order) distinct bands of 8·order-bit keys. */
+  private def collide(order: Int): Unit = {
     import spark.implicits._
-    val cases = samples(caseGen(blocks), 120)
+    val gen = for {
+      h <- Gen.choose(Long.MinValue, Long.MaxValue)
+      n <- Gen.choose(0, 8 - order) // the full budget, 0 included
+      flips <- Gen.pick(n, 0 until 64)
+    } yield (h, flips.foldLeft(h)((d, p) => d ^ (1L << p)), n)
+    val cases = samples(gen, 120)
     val rows = cases.zipWithIndex.flatMap { case ((orig, dam, _), i) =>
       Seq((i.toLong * 2, orig), (i.toLong * 2 + 1, dam))
     }.toDF("id", "hash")
-    val keys = Dedup.blockPairBands(rows, blocks)
+    val keys = Dedup.blockBands(rows, order)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (id, rs) =>
         id -> rs.map(r => (r.getInt(1), r.getLong(2))).toSet
       }
-    val nBands = blocks * (blocks - 1) / 2
+    val nBands = (0 until 8).combinations(order).size
     cases.indices.foreach { i =>
       val a = keys(i.toLong * 2); val b = keys(i.toLong * 2 + 1)
       assert(a.map(_._1).size == nBands && b.map(_._1).size == nBands,
-        s"case $i: expected $nBands distinct bands per id")
-      val h = cases(i)._3
+        s"case $i: expected C(8,$order) = $nBands distinct bands per id")
+      assert(b.forall(_._2 < (1L << (8 * order))), s"keys are ${8 * order}-bit")
       assert((a intersect b).nonEmpty,
-        s"case $i (blocks=$blocks, ham=$h): no shared (band, band_key) — " +
-          "the pigeonhole recall theorem is violated")
+        s"case $i (order=$order, ham=${cases(i)._3}): no shared " +
+          "(band, band_key) — the pigeonhole recall theorem is violated")
     }
   }
 
   test("blocks = 8: every pair within ham 6 of 64 shares a band bucket") {
-    collide(8)
-  }
-
-  test("blocks = 16: every pair within ham 14 of 128 shares a band bucket") {
-    collide(16)
+    collide(2)
   }
 
   test("blocks = 8 reproduces q90's inline banding exactly") {
@@ -84,115 +71,13 @@ class BlockPairBandsSpec extends SparkSpec {
         "(shiftright(phash, i * 8) & 255) * 256 + (shiftright(phash, j * 8) & 255) AS band_key))))")).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.band_key").as("band_key"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val nu = Dedup.blockPairBands(
-      df.select(col("id"), array(col("phash")).as("hash")), 8)
+    val nu = Dedup.blockBands(df.select(col("id"), col("phash").as("hash")), 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(nu == legacy, "parameterized banding diverged from q90's inline formula")
   }
 
-  /** Triple-band twin of [[collide]]: budget blocks − 3, C(blocks,3) bands. */
-  private def collideTriples(blocks: Int): Unit = {
-    import spark.implicits._
-    val words = blocks / 8
-    val bits = blocks * 8
-    val gen = for {
-      ws <- Gen.listOfN(words, Gen.choose(Long.MinValue, Long.MaxValue))
-      h <- Gen.choose(0, blocks - 3) // the triple budget, 0 included
-      flips <- Gen.pick(h, 0 until bits)
-    } yield {
-      val damaged = ws.toArray
-      flips.foreach(p => damaged(p / 64) ^= (1L << (p % 64)))
-      (ws, damaged.toSeq, h)
-    }
-    val cases = samples(gen, 120)
-    val rows = cases.zipWithIndex.flatMap { case ((orig, dam, _), i) =>
-      Seq((i.toLong * 2, orig), (i.toLong * 2 + 1, dam))
-    }.toDF("id", "hash")
-    val keys = Dedup.blockTripleBands(rows, blocks)
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (id, rs) =>
-        id -> rs.map(r => (r.getInt(1), r.getLong(2))).toSet
-      }
-    val nBands = blocks * (blocks - 1) * (blocks - 2) / 6
-    cases.indices.foreach { i =>
-      val a = keys(i.toLong * 2); val b = keys(i.toLong * 2 + 1)
-      assert(a.map(_._1).size == nBands && b.map(_._1).size == nBands,
-        s"case $i: expected C($blocks,3) = $nBands distinct bands per id")
-      assert(b.forall(_._2 < (1L << 24)), "triple keys are 24-bit")
-      val h = cases(i)._3
-      assert((a intersect b).nonEmpty,
-        s"case $i (blocks=$blocks, ham=$h): no shared (band, band_key) — " +
-          "the triple pigeonhole recall theorem is violated")
-    }
-  }
-
   test("triples, blocks = 8: every pair within ham 5 of 64 shares a 24-bit band bucket") {
-    collideTriples(8)
-  }
-
-  test("triples, blocks = 16: every pair within ham 13 of 128 shares a 24-bit band bucket") {
-    collideTriples(16)
-  }
-
-  /** Quad-band twin of [[collide]]: budget blocks − 4, C(blocks,4) bands —
-   * the fourth-decade form. */
-  private def collideQuads(blocks: Int): Unit = {
-    import spark.implicits._
-    val words = blocks / 8
-    val bits = blocks * 8
-    val gen = for {
-      ws <- Gen.listOfN(words, Gen.choose(Long.MinValue, Long.MaxValue))
-      h <- Gen.choose(0, blocks - 4) // the quadruple budget, 0 included
-      flips <- Gen.pick(h, 0 until bits)
-    } yield {
-      val damaged = ws.toArray
-      flips.foreach(p => damaged(p / 64) ^= (1L << (p % 64)))
-      (ws, damaged.toSeq, h)
-    }
-    val cases = samples(gen, 120)
-    val rows = cases.zipWithIndex.flatMap { case ((orig, dam, _), i) =>
-      Seq((i.toLong * 2, orig), (i.toLong * 2 + 1, dam))
-    }.toDF("id", "hash")
-    val keys = Dedup.blockQuadBands(rows, blocks)
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (id, rs) =>
-        id -> rs.map(r => (r.getInt(1), r.getLong(2))).toSet
-      }
-    val nBands = blocks * (blocks - 1) * (blocks - 2) * (blocks - 3) / 24
-    cases.indices.foreach { i =>
-      val a = keys(i.toLong * 2); val b = keys(i.toLong * 2 + 1)
-      assert(a.map(_._1).size == nBands && b.map(_._1).size == nBands,
-        s"case $i: expected C($blocks,4) = $nBands distinct bands per id")
-      assert(b.forall(_._2 < (1L << 32)), "quad keys are 32-bit")
-      val h = cases(i)._3
-      assert((a intersect b).nonEmpty,
-        s"case $i (blocks=$blocks, ham=$h): no shared (band, band_key) — " +
-          "the quadruple pigeonhole recall theorem is violated")
-    }
-  }
-
-  test("quads, blocks = 8: every pair within ham 4 of 64 shares a 32-bit band bucket") {
-    collideQuads(8)
-  }
-
-  test("quads, blocks = 16: every pair within ham 12 of 128 shares a 32-bit band bucket") {
-    collideQuads(16)
-  }
-
-  test("quad band keys are the exact block quadruple (spot formula check)") {
-    import spark.implicits._
-    val h = (0 until 8).map(b => (b + 1).toLong << (8 * b)).sum
-    val rows = Seq((1L, Seq(h))).toDF("id", "hash")
-    val got = Dedup.blockQuadBands(rows, 8)
-      .collect().map(r => (r.getInt(1), r.getLong(2))).toMap
-    assert(got.size == 70)
-    for (i <- 0 until 8; j <- i + 1 until 8; k <- j + 1 until 8; l <- k + 1 until 8) {
-      val band = ((i * 8 + j) * 8 + k) * 8 + l
-      val key = (((i + 1).toLong * 256 + (j + 1)) * 256 + (k + 1)) * 256 + (l + 1)
-      assert(got(band) == key, s"band ($i,$j,$k,$l)")
-    }
+    collide(3)
   }
 
   test("triple band keys are the exact block triple (spot formula check)") {
@@ -200,8 +85,8 @@ class BlockPairBandsSpec extends SparkSpec {
     // hash with block b holding value b+1 (blocks 0..7 little-endian):
     // band (i,j,k) must key (i+1)<<16 | (j+1)<<8 | (k+1)
     val h = (0 until 8).map(b => (b + 1).toLong << (8 * b)).sum
-    val rows = Seq((1L, Seq(h))).toDF("id", "hash")
-    val got = Dedup.blockTripleBands(rows, 8)
+    val rows = Seq((1L, h)).toDF("id", "hash")
+    val got = Dedup.blockBands(rows, 3)
       .collect().map(r => (r.getInt(1), r.getLong(2))).toMap
     assert(got.size == 56)
     for (i <- 0 until 8; j <- i + 1 until 8; k <- j + 1 until 8) {
@@ -209,19 +94,6 @@ class BlockPairBandsSpec extends SparkSpec {
       val key = ((i + 1).toLong * 256 + (j + 1)) * 256 + (k + 1)
       assert(got(band) == key, s"band ($i,$j,$k)")
     }
-  }
-
-  test("the in-plan word-count guard raises on a malformed hash array") {
-    import spark.implicits._
-    val bad = Seq((1L, Seq(1L, 2L))).toDF("id", "hash") // 2 words, blocks = 8
-    val ex = intercept[Exception] {
-      Dedup.blockPairBands(bad, 8).collect()
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(ex).exists(_.contains("blockPairBands")),
-      s"expected the domain message, got: $ex")
   }
 
   test("collapsedBandCandidates: identical-hash cliques cost star edges, " +
@@ -235,13 +107,13 @@ class BlockPairBandsSpec extends SparkSpec {
     val h2 = h1 ^ 0x0700000000000000L // 3 bits flipped in one block
     val h3 = h1 ^ 0x0000000000000003L // 2 bits flipped
     val far = h1 ^ -1L                // every bit flipped
-    val rows: Seq[(Long, Seq[Long])] =
-      (0L until 60L).map(i => (i, Seq(h1))) ++
-        (100L until 140L).map(i => (i, Seq(h2))) ++
-        Seq((200L, Seq(far)), (300L, Seq(h3)))
+    val rows: Seq[(Long, Long)] =
+      (0L until 60L).map(i => (i, h1)) ++
+        (100L until 140L).map(i => (i, h2)) ++
+        Seq((200L, far), (300L, h3))
     val df = rows.toDF("id", "hash")
     val cand = Dedup
-      .collapsedBandCandidates(df, Dedup.blockPairBands(_, 8))
+      .collapsedBandCandidates(df, order = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     // the clique CUT: class A contributes exactly its 59 star edges —
@@ -253,8 +125,8 @@ class BlockPairBandsSpec extends SparkSpec {
     // one-hop connectivity at the budget: for EVERY true pair within
     // ham 6, same rep or the rep pair is a candidate (the collapse theorem)
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    val hashOf = rows.map { case (id, h) => id -> h.head }.toMap
-    val repOf = rows.groupBy(_._2.head)
+    val hashOf = rows.toMap
+    val repOf = rows.groupBy(_._2)
       .flatMap { case (_, rs) => rs.map(r => r._1 -> rs.map(_._1).min) }
     val ids = rows.map(_._1)
     for (x <- ids; y <- ids if x < y && ham(hashOf(x), hashOf(y)) <= 6) {

@@ -449,18 +449,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(!optimized.contains("cosine_sim"), optimized)
   }
 
-  test("prefix-filtered Jaccard returns exactly the all-pairs result") {
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val full = Dedup.allPairsJaccard(docs, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pruned = Dedup.prefixJaccard(docs, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(pruned == full, s"threshold $t")
-    }
-  }
-
   test("df-capped postings join bounds a planted hot shingle to star pairs") {
     import spark.implicits._
     // 1000 docs whose EVERY shingle is mass-shared: the unguarded postings
