@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -292,20 +294,19 @@ object Dedup {
         .select(col("a"), col("b"), expr("bit_count(xh)").cast("long").as("ham"))
     }
 
-    // Per-id HOT-BAND sets, so canonicality can skip hot buckets: a pair
-    // whose first clean band lands in a hot bucket is enumerated by its
-    // first NON-hot clean band instead (for a clean band both members
-    // share the bucket, so a's hotness is the pair's hotness) — without
-    // this the pair would silently vanish from the small path while the
-    // composite `bucketedPairs` emits it from the small bucket. Hot
-    // buckets are few (≤ rows/maxBucket), so the key set broadcasts; ids
-    // never touching a hot bucket carry an empty array via the left join.
     // a BINDING bucket cap must be loud, not silent (ADVICE r17): pairs
     // whose every colliding band is hot degrade to star connectivity, so
     // the exactness claims of [[collapsedVerifiedPairs]]/q169 hold only
     // while this census stays empty — WARN through the shared audit
     // listener whenever it doesn't (the loudWhenCapBinds discipline).
-    val hotKeys = Audits.observeLoudly(
+    // The hot keys are collected once, and that read of the CHECKPOINTED
+    // census is the one observed: a `limit` probe would report a partial
+    // count, and an observation left inside the pair plan is lost when
+    // adaptive execution prunes an empty small path. In the common no-hot
+    // case the hotmap aggregation and the second banding below would scan
+    // the full band table for nothing — enumerate straight off the first
+    // banding with the maskTest-only canonical filter instead.
+    val census = Audits.observeLoudly(
       sizes.where(col("n") > maxBucket), "graft.dedup.hot_buckets",
       Seq(count(lit(1)).as("n_hot"), max(col("n")).as("max_bucket_seen"),
         lit(maxBucket.toLong).as("max_bucket_cap")),
@@ -317,13 +318,18 @@ object Dedup {
           "degraded to star connectivity - a pair whose every colliding " +
           "band is hot is represented by its bucket star, not an exact pair")
       .select(col("band"), col("band_key"))
-    // probe the CHECKPOINTED census before building any hot machinery
-    // (ADVICE r17): in the common no-hot case the hotmap aggregation and
-    // the second banding below would scan the full band table for nothing
-    // — enumerate straight off the first banding with the maskTest-only
-    // canonical filter instead.
-    if (hotKeys.isEmpty) return emitted(banded, Nil, canonicalMaskTest(order))
+    val hotRows = census.collect()
+    if (hotRows.isEmpty) return emitted(banded, Nil, canonicalMaskTest(order))
+    val hotKeys = hashes.sparkSession.createDataFrame(hotRows.toSeq.asJava, census.schema)
 
+    // Per-id HOT-BAND sets, so canonicality can skip hot buckets: a pair
+    // whose first clean band lands in a hot bucket is enumerated by its
+    // first NON-hot clean band instead (for a clean band both members
+    // share the bucket, so a's hotness is the pair's hotness) — without
+    // this the pair would silently vanish from the small path while the
+    // composite `bucketedPairs` emits it from the small bucket. Hot
+    // buckets are few (≤ rows/maxBucket), so the key set broadcasts; ids
+    // never touching a hot bucket carry an empty array via the left join.
     val hotmap = banded
       .join(broadcast(hotKeys), Seq("band", "band_key"), "left_semi")
       .groupBy(col("id"))

@@ -37,15 +37,20 @@ import graft.xml.{FragmentScanner, XmlExtraction, XmlFile}
  *
  * Scan-level optimizations, in the DSv2 contract:
  *  - the files are those of [[XmlExtraction.listXmlFiles]], the lister of
- *    [[XmlExtraction.corpusFromXmlFiles]]: a glob is expanded, directories are
- *    walked with `listStatus`, names starting with `_` or `.` are skipped with
- *    everything below them, and a missing path fails with `PATH_NOT_FOUND`;
+ *    [[XmlExtraction.corpusFromXmlFiles]]: a glob is expanded by Hadoop's
+ *    `globStatus`, directories are walked (one `java.nio` walk on Hadoop's
+ *    `LocalFileSystem`, `listStatus` on any other filesystem), names starting
+ *    with `_` or `.` are skipped with everything below them, and a missing path
+ *    fails with `PATH_NOT_FOUND`;
  *  - a document is the indivisible unit (the reference's `isSplitable = false`):
  *    whole files are packed by [[XmlExtraction.packFiles]], the packing of
  *    [[XmlExtraction.corpusFromXmlFiles]] — contiguous groups in path order, at
  *    least one per core, none above `spark.sql.files.maxPartitionBytes` unless
- *    one file is alone; each file is read whole by [[XmlExtraction.readXmlFile]]
- *    (one open, codecs by extension);
+ *    one file is alone; each file is read whole by [[XmlExtraction.readXmlFile]]:
+ *    a plain local file with no `.crc` sibling with one `Files.readAllBytes`,
+ *    anything else (other filesystems, codecs by extension, files whose
+ *    checksum Hadoop verifies) with one Hadoop `open`. On a 4-vCPU box a local
+ *    7 KB file costs about 17 µs that way and about 63 µs through Hadoop;
  *  - `docId` is the file's path relative to the deepest glob-free directory of
  *    the load path, the rule [[XmlExtraction.corpusFromXmlFiles]] uses;
  *  - column pruning ([[SupportsPushDownRequiredColumns]]): e.g. a count over

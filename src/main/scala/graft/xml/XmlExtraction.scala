@@ -1,7 +1,9 @@
 package graft.xml
 
-import java.io.{ByteArrayInputStream, InputStream}
+import java.io.{ByteArrayInputStream, IOException, InputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{FileVisitOption, FileVisitResult, Files, NoSuchFileException, Paths, SimpleFileVisitor, Path => NioPath}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.regex.Pattern
 import javax.xml.parsers.DocumentBuilderFactory
 import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
@@ -9,7 +11,7 @@ import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapred.{FileSplit, SequenceFileRecordReader}
@@ -147,17 +149,24 @@ object XmlExtraction {
    * The files are those of [[listXmlFiles]] (a missing path fails naming it), packed
    * by [[packFiles]] into at least `defaultParallelism` partitions of whole files, so
    * a directory of small documents still feeds every core. A task reads each of its
-   * files with [[readXmlFile]]. */
-  def corpusFromXmlFiles(spark: SparkSession, path: String): DataFrame = {
+   * files with [[readXmlFile]]. On the local filesystem both go through `java.nio`
+   * (see [[listXmlFiles]] and [[readXmlFile]] for what still takes Hadoop's calls):
+   * `extract_sparse`, 1000 files of about 7 KB, is the regime where that pays. */
+  def corpusFromXmlFiles(spark: SparkSession, path: String): DataFrame =
+    corpusFromXmlFiles(spark, path, viaHadoop = false)
+
+  /** [[corpusFromXmlFiles]]; `viaHadoop` lists and reads a local path with Hadoop's
+   * calls, as every other filesystem is, so the two branches can be compared. */
+  private[xml] def corpusFromXmlFiles(spark: SparkSession, path: String, viaHadoop: Boolean): DataFrame = {
     import spark.implicits._
     val sc = spark.sparkContext
     val maxBytes = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val groups = packFiles(listXmlFiles(path, sc.hadoopConfiguration), sc.defaultParallelism, maxBytes)
+    val groups = packFiles(listXmlFiles(path, sc.hadoopConfiguration, viaHadoop), sc.defaultParallelism, maxBytes)
     val props = confProps(sc.hadoopConfiguration)
     sc.parallelize(groups, groups.size.max(1)).mapPartitions { group =>
       val conf = confFrom(props)
       val codecs = new CompressionCodecFactory(conf)
-      group.flatten.map(f => (f.docId, readXmlFile(f.path, conf, codecs)))
+      group.flatten.map(f => (f.docId, readXmlFile(f.path, conf, codecs, viaHadoop)))
     }.toDF("docId", "xml")
   }
 
@@ -174,45 +183,112 @@ object XmlExtraction {
     conf
   }
 
-  /** One whole document, decoded as UTF-8, with one `open`: a file whose extension names a
-   * Hadoop codec (`.gz`, `.bz2`, ...) is decompressed, as Spark's `wholetext` reader does.
-   * Both file readers read through it, each task with one codec factory. */
-  def readXmlFile(path: String, conf: Configuration, codecs: CompressionCodecFactory): String = {
+  /** One whole document, decoded as UTF-8: a file whose extension names a Hadoop codec
+   * (`.gz`, `.bz2`, ...) is decompressed, as Spark's `wholetext` reader does. Both file
+   * readers read through it, each task with one codec factory.
+   *
+   * A plain file on Hadoop's `LocalFileSystem` with no `.<name>.crc` sibling is read with
+   * one `Files.readAllBytes`. Everything else takes one Hadoop `open`: other filesystems,
+   * files a codec decompresses, and files with a `.crc` sibling, whose checksum Hadoop
+   * verifies. Measured on a 4-vCPU box over 1000 files of 7 KB, a call costs about 17 µs
+   * on the local branch and about 63 µs through `LocalFileSystem`, which checks the file's
+   * status twice and tries to open the missing checksum file. */
+  def readXmlFile(path: String, conf: Configuration, codecs: CompressionCodecFactory): String =
+    readXmlFile(path, conf, codecs, viaHadoop = false)
+
+  /** [[readXmlFile]]; `viaHadoop` opens a local file with Hadoop's calls too. */
+  private[xml] def readXmlFile(path: String, conf: Configuration, codecs: CompressionCodecFactory,
+                               viaHadoop: Boolean): String = {
     val p = new Path(path)
-    val raw = p.getFileSystem(conf).open(p)
-    val in = Option(codecs.getCodec(p)).fold[InputStream](raw)(_.createInputStream(raw))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    val fs = p.getFileSystem(conf)
+    val codec = codecs.getCodec(p)
+    val local = if (codec != null || viaHadoop || !fs.isInstanceOf[LocalFileSystem]) None
+      else Some(Paths.get(fs.makeQualified(p).toUri.getPath))
+        .filterNot(f => Files.exists(f.resolveSibling(s".${f.getFileName}.crc")))
+    val bytes = local match {
+      case Some(f) => Files.readAllBytes(f)
+      case None =>
+        val raw = fs.open(p)
+        val in: InputStream = if (codec == null) raw else codec.createInputStream(raw)
+        try in.readAllBytes() finally in.close()
+    }
+    new String(bytes, StandardCharsets.UTF_8)
   }
 
   /** The files a whole-document read of `path` covers, sorted by path, each with its
    * [[docId]]. `path` is a file, a directory or a glob; directories are walked
-   * recursively with `listStatus`. Spark's hidden-path rule applies to files and
+   * recursively, following links. Spark's hidden-path rule applies to files and
    * directories alike, wherever the glob or the walk meets them: a name starting with
    * `_` or `.` (`_SUCCESS`, `_temporary/`, `.x.crc`), or ending in `._COPYING_`, is
    * skipped with everything below it. A glob-free `path` is read even when its own
    * name is hidden. A path that does not exist, or a glob that matches nothing, fails
-   * with `PATH_NOT_FOUND`. */
-  def listXmlFiles(path: String, conf: Configuration): IndexedSeq[XmlFile] = {
+   * with `PATH_NOT_FOUND`.
+   *
+   * Hadoop's `globStatus` expands the path on every filesystem. Below each root it
+   * returns, a directory on Hadoop's `LocalFileSystem` is walked with one `java.nio`
+   * `walkFileTree`, which yields the statuses `listStatus` would (same paths, lengths
+   * and block size); any other filesystem is walked with `listStatus`. Measured on a
+   * 4-vCPU box, this lists a directory of 1000 files in about 8 ms, and in about 17 ms
+   * with `listStatus` on `LocalFileSystem`. */
+  def listXmlFiles(path: String, conf: Configuration): IndexedSeq[XmlFile] =
+    listXmlFiles(path, conf, viaHadoop = false)
+
+  /** [[listXmlFiles]]; `viaHadoop` walks a local directory with `listStatus` too. */
+  private[xml] def listXmlFiles(path: String, conf: Configuration, viaHadoop: Boolean): IndexedSeq[XmlFile] = {
     val base = docIdBase(path, conf)
-    listInputs(path, conf).map(st => XmlFile(st.getPath.toString, st.getLen, docId(st.getPath, base)))
+    listInputs(path, conf, viaHadoop).map(st => XmlFile(st.getPath.toString, st.getLen, docId(st.getPath, base)))
   }
 
   /** The lister behind [[listXmlFiles]] and [[corpusFromSequenceFile]]: the input
    * files' statuses, sorted by path, by [[listXmlFiles]]' rules. */
-  private def listInputs(path: String, conf: Configuration): IndexedSeq[FileStatus] = {
+  private[xml] def listInputs(path: String, conf: Configuration, viaHadoop: Boolean = false): IndexedSeq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val roots = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
     if (roots.isEmpty)
       throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(p).toString))
-    def hidden(name: String) =
-      name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
+    val local = !viaHadoop && fs.isInstanceOf[LocalFileSystem]
     def walk(st: FileStatus, named: Boolean): Iterator[FileStatus] =
       if (!named && hidden(st.getPath.getName)) Iterator.empty
-      else if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk(_, named = false))
-      else Iterator(st)
+      else if (!st.isDirectory) Iterator(st)
+      else if (local) walkLocal(fs, st.getPath)
+      else fs.listStatus(st.getPath).iterator.flatMap(walk(_, named = false))
     val literal = !path.exists(GlobChars.contains(_))
-    roots.iterator.flatMap(walk(_, literal)).toIndexedSeq.sortBy(_.getPath.toString)
+    // each key rendered once, not once per comparison
+    roots.iterator.flatMap(walk(_, literal)).map(st => (st.getPath.toString, st)).toIndexedSeq
+      .sortBy(_._1).map(_._2)
+  }
+
+  /** Spark's hidden-path rule for input listing. */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
+
+  /** The files below local directory `dir`, with the statuses `LocalFileSystem`'s
+   * `listStatus` walk gives them: links followed, hidden names skipped below `dir`,
+   * a dangling link or an entry that vanishes during the walk left out, each path
+   * qualified from its file path and each block size the filesystem's default. */
+  private def walkLocal(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
+    val (uri, cwd, blockSize) = (fs.getUri, fs.getWorkingDirectory, fs.getDefaultBlockSize(dir))
+    val root = Paths.get(dir.toUri.getPath)
+    val files = IndexedSeq.newBuilder[FileStatus]
+    Files.walkFileTree(root, java.util.EnumSet.of(FileVisitOption.FOLLOW_LINKS), Int.MaxValue,
+      new SimpleFileVisitor[NioPath] {
+        override def preVisitDirectory(d: NioPath, a: BasicFileAttributes): FileVisitResult =
+          if (d != root && hidden(d.getFileName.toString)) FileVisitResult.SKIP_SUBTREE
+          else FileVisitResult.CONTINUE
+        override def visitFile(f: NioPath, a: BasicFileAttributes): FileVisitResult = {
+          // a link the walk could not follow is dangling
+          if (!a.isSymbolicLink && !hidden(f.getFileName.toString))
+            files += new FileStatus(a.size, false, 1, blockSize, a.lastModifiedTime.toMillis,
+              new Path(f.toString).makeQualified(uri, cwd))
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(f: NioPath, e: IOException): FileVisitResult = e match {
+          case _: NoSuchFileException => FileVisitResult.CONTINUE
+          case _ => throw e
+        }
+      })
+    files.result().iterator
   }
 
   /** Whole files → contiguous groups in path order, balanced by bytes: at least

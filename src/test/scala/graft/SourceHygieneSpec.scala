@@ -66,6 +66,24 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(lines.exists(_._3.contains("\"wholetext\"")))
   }
 
+  test("java.nio input listing and reading appear only in XmlExtraction.scala: one lister, one reader") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val lines = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    } yield (f, s"$f:${i + 1}", line)
+    // writes (Bench's artifact, Verify's oracle SQL) are not input and do not count
+    val calls = Seq("walkFileTree(", "newDirectoryStream(", "readAllBytes(", "newInputStream(",
+      "Files.walk(", "Files.list(", "Files.lines(", "Files.readString(", "Files.readAllLines(",
+      "newBufferedReader(")
+    val reads = lines.filter { case (_, _, l) => calls.exists(l.contains) }
+    val elsewhere = reads.collect { case (f, at, _) if !f.endsWith("graft/xml/XmlExtraction.scala") => at }
+    assert(elsewhere.isEmpty, elsewhere.mkString("\n", "\n", ""))
+    for (call <- Seq("walkFileTree(", "Files.readAllBytes("))
+      assert(reads.exists(_._3.contains(call)), s"the local branch of the lister and reader uses $call")
+  }
+
   test("one shingling implementation: word_ngrams, planned only by TextFunctions.shingles") {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repository root ($main)")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -93,14 +95,18 @@ class BandCanonicalSpec extends SparkSpec {
 
   test("a binding hot-bucket cap is observed with its counts (the WARN renders)") {
     import spark.implicits._
-    @volatile var seen: Option[(Long, Long, Long)] = None
+    val readings = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
+    val marker = s"graft.test.marker.${System.nanoTime()}"
+    @volatile var drained = false
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
         qe.observedMetrics.foreach { case (name, row) =>
-          if (name.startsWith("graft.dedup.hot_buckets.") && row.getLong(0) > 0)
-            seen = Some((row.getLong(0), row.getLong(1), row.getLong(2)))
+          // cap 4 is this test's; an earlier test's late event carries its own cap
+          if (name.startsWith("graft.dedup.hot_buckets.") && row.getLong(2) == 4L)
+            readings.add((row.getLong(0), row.getLong(1), row.getLong(2)))
+          if (name == marker) drained = true
         }
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
@@ -111,12 +117,15 @@ class BandCanonicalSpec extends SparkSpec {
       // five identical hashes: all 28 pair bands hold one 5-member bucket
       val df = (1L to 5L).map(i => (i, 0x0123456789abcdefL)).toDF("id", "hash")
       assert(fused(df, 2, 4).map(p => (p._1, p._2)) == (2L to 5L).map(i => (1L, i)).toSet)
-      // listener delivery is async; poll briefly
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      // the emptiness probe may stop early, so n_hot is at least 1, not 28
-      assert(seen.exists { case (n, mx, cap) => n >= 1 && n <= 28 && mx == 5 && cap == 4 },
-        s"hot-bucket audit must read (n_hot in 1..28, max=5, cap=4), got $seen")
+      // listener delivery is async but in order: once a later query's event
+      // arrives, every reading of the call above has arrived
+      spark.range(1).observe(marker, count(lit(1))).collect()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(drained, "the marker query's event never arrived")
+      // one reading of the full census: the emptiness probe is not observed
+      assert(readings.asScala.toSeq == Seq((28L, 5L, 4L)),
+        s"hot-bucket audit must read (n_hot=28, max=5, cap=4) once, got $readings")
     } finally spark.listenerManager.unregister(listener)
   }
 
