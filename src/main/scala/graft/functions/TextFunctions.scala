@@ -87,50 +87,6 @@ object TextFunctions {
   def shingles(text: Column, n: Int): Column =
     call_function("word_ngrams", text, lit(n))
 
-  /** Mersenne prime modulus for the double-hashing MinHash family — keeps all
-   * intermediate products < 2^36, so the arithmetic can't overflow in either
-   * engine (DuckDB raises on BIGINT overflow; Spark wraps — both are avoided). */
-  final val MinhashP = 2147483647L
-
-  /** The two base hashes of the Kirsch-Mitzenmacher family: 2 md5 calls per
-   * shingle, from which all k MinHash functions derive as `(b1 + i*b2) mod P`. */
-  def minhashBases(shingleCol: Column): (Column, Column) = (
-    transform(shingleCol, s => hash60(s) % MinhashP),
-    transform(shingleCol, s => hash60(concat(lit("#"), s)) % MinhashP))
-
-  /**
-   * MinHash signature from precomputed base-hash arrays (see [[minhashBases]]):
-   * `sig[i] = min over shingles of (b1 + i*b2) mod P`. Callers must materialize
-   * b1/b2 in their own projection — they are referenced k times here, and
-   * Catalyst's CollapseProject keeps a non-cheap multiply-referenced alias in
-   * its own project, so the 2-md5-per-shingle work runs once per row.
-   */
-  def minhashSignatureFromBases(b1: Column, b2: Column, k: Int): Column =
-    array((0 until k).map(i =>
-      array_min(zip_with(b1, b2, (x, y) => (x + lit(i.toLong) * y) % MinhashP))): _*)
-
-  /**
-   * 62-bit SimHash over a *precomputed* feature-hash array column named by
-   * `hashesField` (produce it once with `transform(shingles, hash60)` — hashing
-   * inside the bit fold would recompute every md5 62 times): bit b of the
-   * signature is set when the majority of feature hashes have bit b set
-   * (+1/-1 vote). Built as one SQL expression because `shiftleft/shiftright`
-   * with a *column* shift amount is only reachable through the SQL parser;
-   * integer sums are order-insensitive so the DuckDB oracle can use `list_sum`
-   * verbatim.
-   */
-  def simhash62(hashesField: String): Column = expr(
-    s"""aggregate(
-          $hashesField,
-          array_repeat(0, 62),
-          (acc, h) -> zip_with(acc, sequence(0, 61),
-                        (v, b) -> v + IF((shiftright(h, b) & 1) = 1, 1, -1)),
-          votes -> aggregate(
-            zip_with(votes, sequence(0, 61),
-              (v, b) -> IF(v > 0, shiftleft(1L, b), 0L)),
-            0L,
-            (s, x) -> s + x))""")
-
   /**
    * Exact set-Jaccard similarity between two (already-distinct) shingle arrays.
    */
@@ -138,44 +94,6 @@ object TextFunctions {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = size(array_union(a, b)).cast("double")
     when(union === 0, 0.0).otherwise(inter / union)
-  }
-
-  /**
-   * Winnowing-style document fingerprint: the minimum 60-bit hash over the
-   * document's word-3-shingles — stable under small edits away from the minimum.
-   */
-  def fingerprint(text: Column): Column =
-    array_min(transform(shingles(text, 3), s => hash60(s)))
-
-  /**
-   * FULL winnowing fingerprint selection (Schleimer et al. 2003, the MOSS
-   * algorithm): hash every word `k`-gram of token array `ws`, then from
-   * every window of `w` consecutive gram hashes keep the minimum (ties →
-   * leftmost position; struct(h, p) ordering makes `array_min` pick it).
-   * Returns the distinct selected array<struct<h: long, p: int>> — position
-   * `p` is the gram's token offset. The guarantee: any two documents sharing
-   * a token run of ≥ w+k-1 tokens share at least one selected fingerprint
-   * (every such run fully contains one selection window on each side, and
-   * both sides pick the same minimum inside it), at ~2/(w+1) the density of
-   * the full gram-hash set. Everything is a scalar array fold — scan-speed,
-   * no shuffle; [[fingerprint]] above is the 1-hash-per-doc degenerate case.
-   * Documents with fewer than k tokens yield no grams: callers filter them.
-   */
-  def winnow(ws: Column, k: Int, w: Int): Column = {
-    val grams = transform(sequence(lit(0), size(ws) - k),
-      i => struct(hash60(array_join(slice(ws, i + 1, lit(k)), " ")).as("h"),
-        i.as("p")))
-    // LET-BIND the gram array once per row (transform over a 1-element
-    // array): the window lambda below references the bound VARIABLE `gs`,
-    // not the gram expression — naively inlining `grams` into the window
-    // lambda re-hashes every k-gram once PER WINDOW (lambda bodies are
-    // re-evaluated per element and subexpression elimination does not cross
-    // lambda boundaries), which measured 70× slower at sf0.01.
-    // ng >= w: windows 0..ng-w of length w; 1 <= ng < w: ONE window of all grams
-    element_at(transform(array(grams), gs =>
-      array_distinct(transform(
-        sequence(lit(0), greatest(size(gs) - w, lit(0))),
-        i => array_min(slice(gs, i + 1, least(lit(w), size(gs))))))), 1)
   }
 
   // ------------------------------------------------------------------ PII scrubbing

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /**
  * Embedding-vector column builders (`Array[Float]` columns): cosine similarity
- * and random-hyperplane LSH signatures, as pure built-in expressions.
+ * and the JL projection as pure built-in expressions, random-hyperplane LSH
+ * signatures through their native kernels.
  *
  * Numeric determinism: everything is computed in DOUBLE with a left fold
  * (`aggregate` with 0.0 init), which is bit-identical to DuckDB's
@@ -42,9 +43,15 @@ object VectorFunctions {
   def cosineNative(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
 
-  /** Native codegen'd hyperplane signature ([[graft.plans.HyperplaneSignatureExpr]],
-   * registered by GraftExtensions) — value-identical to [[hyperplaneSignature]],
-   * one fused loop instead of an nBits×dim-term expression tree. */
+  /**
+   * Random-hyperplane LSH signature (`nBits` sign bits) through the codegen'd
+   * [[graft.plans.HyperplaneSignatureExpr]] (registered by GraftExtensions):
+   * plane j's i-th weight is ±1 from the parity of md5(`"j:i"`)
+   * ([[md5ParityOf]]) — fully deterministic, no stored model, reproducible
+   * on any engine. Vectors with small angles share signatures with high
+   * probability. ScaleOpsSpec pins it to the built-in expression-tree twin
+   * kept in test code.
+   */
   def hyperplaneSignatureNative(v: Column, dim: Int, nBits: Int): Column =
     call_function("hyperplane_sig", v, lit(dim), lit(nBits))
 
@@ -56,32 +63,10 @@ object VectorFunctions {
                                      nWords: Int): Column =
     call_function("hyperplane_sig_words", v, lit(dim), lit(bitsPerWord), lit(nWords))
 
-  /**
-   * Random-hyperplane LSH signature (`nBits` sign bits): plane j's i-th weight is
-   * ±1 derived from the parity of the md5-based [[TextFunctions.hash60]] of
-   * `"j:i"` — fully deterministic, no stored model, reproducible on any engine.
-   * Vectors with small angles share signatures with high probability.
-   */
-  def hyperplaneSignature(v: Column, dim: Int, nBits: Int): Column = {
-    val bits = (0 until nBits).map { j =>
-      // sum_i emb[i] * w(j,i), w = parity of hash60("j:i") mapped to ±1
-      val proj = (0 until dim).map { i =>
-        val w = if ((md5Parity(j, i)) == 1) 1.0 else -1.0
-        element_at(v, i + 1) * lit(w)
-      }.reduce(_ + _)
-      when(proj > 0, shiftleft(lit(1L), j)).otherwise(0L)
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Driver-side deterministic parity of md5("j:i") — same value the oracle
-   * would derive; computed once at plan-build time (plain Scala, not a UDF). */
-  private def md5Parity(j: Int, i: Int): Int = md5ParityOf(s"$j:$i")
-
   /** Parity of the last md5 byte of `s` — the DuckDB twin is
    * `CAST(concat('0x', substr(md5(s), 32, 1)) AS INT) % 2` (hex char 32 is
    * the low nibble of byte 15, so its low bit is the byte's parity). */
-  private def md5ParityOf(s: String): Int = {
+  private[graft] def md5ParityOf(s: String): Int = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
     d(d.length - 1) & 1

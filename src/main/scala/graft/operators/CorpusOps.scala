@@ -48,28 +48,19 @@ object CorpusOps {
    * carries ≈ tasks × strata × quota entries — the window formulation
    * shuffles and sorts EVERY row of the corpus, and a single hot stratum
    * lands whole on one reducer. Output: (stratum, sample_rank, id), rank
-   * 1..quota in draw order.
-   *
-   * Falls back to the value-identical window formulation when the extension
-   * is not installed.
+   * 1..quota in draw order. A session without GraftExtensions fails at
+   * analysis naming `mink_by`.
    */
   def sampleStratifiedBounded(df: DataFrame, idCol: Column, stratum: Column,
                               quota: Int, salt: String): DataFrame = {
     val key = graft.functions.TextFunctions
       .hash60(concat(lit(s"$salt:"), idCol.cast("string")))
     val keyed = df.select(stratum.as("stratum"), key.as("draw"), idCol.as("id"))
-    if (df.sparkSession.catalog.functionExists("mink_by"))
-      keyed.groupBy(col("stratum"))
-        .agg(call_function("mink_by", col("draw"), col("id"), lit(quota)).as("mk"))
-        .select(col("stratum"), posexplode(col("mk")))
-        .select(col("stratum"), (col("pos") + 1).as("sample_rank"),
-          col("col.id").as("id"))
-    else {
-      val w = Window.partitionBy(col("stratum")).orderBy(col("draw"), col("id"))
-      keyed.withColumn("sample_rank", row_number().over(w))
-        .where(col("sample_rank") <= quota)
-        .select(col("stratum"), col("sample_rank"), col("id"))
-    }
+    keyed.groupBy(col("stratum"))
+      .agg(call_function("mink_by", col("draw"), col("id"), lit(quota)).as("mk"))
+      .select(col("stratum"), posexplode(col("mk")))
+      .select(col("stratum"), (col("pos") + 1).as("sample_rank"),
+        col("col.id").as("id"))
   }
 
   /**
@@ -703,12 +694,12 @@ object CorpusOps {
    *     targets; unicode spaces count as regular chars by contract).
    *
    * Every stat is a SCALAR per row — zero shuffles, zero joins; at 100 TB
-   * this runs at scan speed like q26-q29. When the `char_stats` extension
-   * is registered (the q29/q121 native-kernel promotion pattern) all five
-   * raw statistics come from ONE compiled pass over the string's code
-   * points ([[graft.plans.CharStatsExpr]] — 128-slot ASCII count table,
-   * primitives only); otherwise the interpreted HOF twin
-   * ([[hofCharStats]]) computes the identical values.
+   * this runs at scan speed like q26-q29. All five raw statistics come
+   * from ONE compiled pass over the string's code points
+   * ([[graft.plans.CharStatsExpr]] — 128-slot ASCII count table,
+   * primitives only); a session without GraftExtensions fails at analysis
+   * naming `char_stats`. CorpusOpsSpec pins the kernel to an interpreted
+   * HOF twin kept in test code.
    *
    * Overflow domain (exact): len ≤ 1e6 chars — 1e6·len² ≤ 1e18 < 2^63.
    * Pre-chunk pathological documents above that (the same contract as
@@ -717,14 +708,7 @@ object CorpusOps {
    */
   def charDiversity(docs: DataFrame, idCol: Column, textCol: Column): DataFrame = {
     val base = docs.select(idCol.as("id"), coalesce(textCol, lit("")).as("t"))
-    // native one-pass kernel when registered (the q29/q121 promotion
-    // pattern); value-identical HOF fallback otherwise — parity pinned in
-    // CorpusOpsSpec, and q147 is oracle-gated through whichever path runs
-    val stats =
-      if (docs.sparkSession.catalog.functionExists("char_stats"))
-        nativeCharStats(base)
-      else hofCharStats(base)
-    stats
+    nativeCharStats(base)
       .select(
         col("id"),
         col("len").as("n_chars"),
@@ -748,43 +732,4 @@ object CorpusOps {
       .select(col("id"),
         col("st.len").as("len"), col("st.nd").as("nd"), col("st.s2").as("s2"),
         col("st.max_run").as("max_run"), col("st.nsp").as("nsp"))
-
-  /** The HOF twin of [[nativeCharStats]] — interpreted, extension-free.
-   * Both Σ cnt² and the runs come from ONE primitive: the equal-run
-   * BOUNDARY positions of an array (over the in-row-sorted chars, runs ARE
-   * the per-char counts; over the raw chars, runs are the repeats);
-   * consecutive-boundary diffs give run lengths, and `nd` falls out free
-   * as #runs(sorted). */
-  private[operators] def hofCharStats(base: DataFrame): DataFrame = {
-    // 1-based positions i where a maximal equal-run of `a` ends at element i
-    val boundaries = (a: Column) =>
-      when(size(a) >= 2,
-        filter(sequence(lit(1), size(a) - 1),
-          i => !(element_at(a, i + 1) === element_at(a, i))))
-        .otherwise(array().cast("array<int>"))
-    // [0] ++ bnds ++ [n] → adjacent diffs = maximal-run lengths (n=0 → [0])
-    val runLens = (a: Column, bnds: Column) => {
-      val full = concat(array(lit(0)), bnds, array(size(a)))
-      zip_with(slice(full, lit(2), size(full) - 1),
-        slice(full, lit(1), size(full) - 1), (x, y) => x - y)
-    }
-    base
-      .select(
-        col("id"),
-        length(col("t")).cast("long").as("len"),
-        (length(col("t")) - length(translate(col("t"), " \t\n\r", ""))).cast("long").as("nsp"),
-        when(length(col("t")) > 0, split(col("t"), ""))
-          .otherwise(array().cast("array<string>")).as("cs"))
-      .select(col("id"), col("len"), col("nsp"), col("cs"),
-        array_sort(col("cs")).as("sc"))
-      .select(col("id"), col("len"), col("nsp"), col("cs"), col("sc"),
-        boundaries(col("sc")).as("bs"), boundaries(col("cs")).as("bu"))
-      .select(
-        col("id"), col("len"), col("nsp"),
-        when(col("len") > 0, size(col("bs")) + 1).otherwise(0).as("nd"),
-        aggregate(runLens(col("sc"), col("bs")), lit(0L),
-          (acc, x) => acc + x.cast("long") * x.cast("long")).as("s2"),
-        when(col("len") > 0, array_max(runLens(col("cs"), col("bu"))))
-          .otherwise(0).cast("long").as("max_run"))
-  }
 }

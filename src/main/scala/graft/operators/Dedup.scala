@@ -41,23 +41,13 @@ object Dedup {
   private[graft] def bandedKeys(docs: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
-    // Operator boundary: a doc with no features has no signature (the native
-    // kernel returns null, the HOF twin an all-null array) — drop it here so
-    // both paths agree and empty docs never collide into one bucket.
+    // Operator boundary: a doc with no features has no signature (the
+    // kernel returns null) — drop it here so empty docs never collide into
+    // one bucket.
     val nonEmpty = docs.where(size(col("shingles")) > 0)
-    // native codegen'd kernel when GraftExtensions is installed; value-identical
-    // HOF fallback otherwise (two-step projection: the Kirsch-Mitzenmacher base
-    // hashes — 2 md5/shingle — materialize once, then all k functions derive
-    // arithmetically; CollapseProject keeps multiply-referenced aliases)
-    val sigs =
-      if (docs.sparkSession.catalog.functionExists("minhash_signature"))
-        nonEmpty.select(col("id"), expr(s"minhash_signature(shingles, $k)").as("sig"))
-      else {
-        val (b1, b2) = TextFunctions.minhashBases(col("shingles"))
-        nonEmpty.select(col("id"), b1.as("b1"), b2.as("b2"))
-          .select(col("id"),
-            TextFunctions.minhashSignatureFromBases(col("b1"), col("b2"), k).as("sig"))
-      }
+    // the codegen'd graft.plans.MinHashSignatureExpr; a session without
+    // GraftExtensions fails at analysis naming `minhash_signature`
+    val sigs = nonEmpty.select(col("id"), expr(s"minhash_signature(shingles, $k)").as("sig"))
     sigs.select(
       col("id"),
       posexplode(transform(
@@ -1243,17 +1233,14 @@ object Dedup {
   }
 
 
-  /** (id, sig) SimHash signatures: native codegen'd kernel when
-   * GraftExtensions is installed, value-identical HOF fold otherwise; the
-   * feature hashes materialize once either way. */
-  private def simhashSigs(docs: DataFrame): DataFrame = {
-    val hashed = docs.select(col("id"),
-      transform(col("shingles"), s => TextFunctions.hash60(s)).as("hs"))
-    if (docs.sparkSession.catalog.functionExists("simhash62"))
-      hashed.select(col("id"), call_function("simhash62", col("hs")).as("sig"))
-    else
-      hashed.select(col("id"), TextFunctions.simhash62("hs").as("sig"))
-  }
+  /** (id, sig) SimHash signatures through the codegen'd
+   * [[graft.plans.SimHash62Expr]] kernel; the feature hashes materialize
+   * once. A session without GraftExtensions fails at analysis naming
+   * `simhash62`. */
+  private def simhashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("id"),
+        transform(col("shingles"), s => TextFunctions.hash60(s)).as("hs"))
+      .select(col("id"), call_function("simhash62", col("hs")).as("sig"))
 
   /**
    * Scale-safe SimHash pair enumeration via pigeonhole banding: the 62-bit

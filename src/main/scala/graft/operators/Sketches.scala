@@ -34,34 +34,20 @@ object Sketches {
    * count (the sketch is lossless below k — `n_hashes < k` ⟹ every hash is
    * kept).
    *
-   * Uses the native map-side bounded set when GraftExtensions is installed;
-   * falls back to the value-identical distinct + window `row_number`
-   * formulation otherwise (which shuffles every distinct hash — install the
-   * extension at scale).
+   * The bounded set is the native map-side `bottomk_distinct` aggregate; a
+   * session without GraftExtensions fails at analysis naming it.
    */
   def kmvDistinct(df: DataFrame, group: Column, item: Column, k: Int): DataFrame = {
     require(k >= 2, "KMV needs k >= 2")
     // null items are not distinct values: drop them BEFORE hashing, like the
-    // other sketch builders — without this the native branch would crash on
-    // an all-null group (empty bottom-k set -> element_at(.., 0)) and the
-    // two branches would disagree on mixed-null groups (the window fallback
-    // would count the null hash row)
+    // other sketch builders — without this the aggregate would crash on an
+    // all-null group (empty bottom-k set -> element_at(.., 0))
     val hashed = df.where(item.isNotNull)
       .select(group.as("g"), TextFunctions.hash60(item).as("h"))
-    val bottomKAgg =
-      if (df.sparkSession.catalog.functionExists("bottomk_distinct"))
-        hashed.groupBy(col("g"))
-          .agg(call_function("bottomk_distinct", col("h"), lit(k)).as("bk"))
-          .select(col("g"), size(col("bk")).cast("long").as("n_hashes"),
-            element_at(col("bk"), size(col("bk"))).as("kth_min"))
-      else
-        hashed.distinct()
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("g")).orderBy(col("h"))))
-          .where(col("rk") <= k)
-          .groupBy(col("g"))
-          .agg(count(lit(1)).as("n_hashes"), max(col("h")).as("kth_min"))
-    bottomKAgg
+    hashed.groupBy(col("g"))
+      .agg(call_function("bottomk_distinct", col("h"), lit(k)).as("bk"))
+      .select(col("g"), size(col("bk")).cast("long").as("n_hashes"),
+        element_at(col("bk"), size(col("bk"))).as("kth_min"))
       .select(col("g"), col("n_hashes"), col("kth_min"),
         when(col("n_hashes") < k, col("n_hashes").cast("double"))
           .otherwise(lit((k - 1).toDouble) * lit(math.pow(2, 60)) /

@@ -73,7 +73,7 @@ object TextEval {
    * transforms: the downstream expressions reference the array many
    * times, and Catalyst's CollapseProject keeps a non-cheap
    * multiply-referenced alias in its own project — the same contract as
-   * `TextFunctions.minhashSignatureFromBases`. */
+   * the MinHash base-hash arrays of `HofTwins.minhashSignatureFromBases`. */
   private def wordHashes(c: Column): Column =
     transform(toks(c), w => T.hash60(w))
 

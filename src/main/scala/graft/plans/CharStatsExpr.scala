@@ -11,8 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native single-pass character-statistics kernel — the codegen'd replacement
- * for the split + array_sort + boundary-filter + fold HOF chain in
- * [[graft.operators.CorpusOps.charDiversity]]. The HOF stack evaluates
+ * for the split + array_sort + boundary-filter + fold HOF chain behind
+ * [[graft.operators.CorpusOps.charDiversity]] (`HofTwins.charStats`, kept in
+ * test code as CorpusOpsSpec's reference). The HOF stack evaluates
  * interpreted with a per-character string array, an in-row sort, and three
  * lambda sweeps; this kernel makes ONE pass over the string's code points
  * with a 128-slot ASCII count table (hash map only for the non-ASCII tail)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
 /**
  * Native random-hyperplane LSH signature over an `array<double>` embedding —
  * the codegen'd replacement for the `nBits × dim`-term expression tree that
- * [[graft.functions.VectorFunctions.hyperplaneSignature]] builds (thousands
+ * its built-in twin (`HofTwins.hyperplaneSignature`, in test code) builds (thousands
  * of Add/Multiply nodes: slow to codegen, slow to evaluate; the kernel is one
  * fused loop over a cached ±1 weight matrix).
  *

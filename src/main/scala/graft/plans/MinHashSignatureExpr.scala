@@ -12,10 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /**
  * Native Catalyst expression computing the k-function MinHash signature of a
  * shingle array in one tight JVM pass — the codegen'd replacement for the
- * higher-order-function formulation in
- * [[graft.functions.TextFunctions.minhashSignatureFromBases]] (HOFs are
- * interpreted per element with boxing; this runs ~8x faster on the same
- * values).
+ * higher-order-function formulation (`HofTwins.minhashSignatureFromBases`,
+ * kept in test code as PipelineSpec's reference; HOFs are interpreted per
+ * element with boxing; this runs ~8x faster on the same values).
  *
  * Value-compatible with the HOF/DuckDB formulation by construction:
  * `h1 = int(hex(md5(s))[0:15])`, `h2 = int(hex(md5('#' + s))[0:15])`,
@@ -35,7 +34,7 @@ case class MinHashSignatureExpr(child: Expression, k: Int)
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   // null for an empty shingle array (no features → no signature), mirroring
-  // the HOF fallback where array_min over an empty array yields null
+  // the HOF twin, where array_min over an empty array yields null
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_signature"
 

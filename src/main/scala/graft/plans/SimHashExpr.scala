@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /**
  * Native 62-bit SimHash over a precomputed feature-hash array — the codegen'd
- * replacement for [[graft.functions.TextFunctions.simhash62]]'s interpreted
- * HOF fold (62 `zip_with` lambda iterations per feature). Value-identical:
- * bit b is set iff strictly more features have bit b set than clear; a null
+ * replacement for the interpreted HOF fold (`HofTwins.simhash62`, kept in
+ * test code as ScaleOpsSpec's reference: 62 `zip_with` lambda iterations
+ * per feature). Value-identical: bit b is set iff strictly more features have bit b set than clear; a null
  * feature element votes -1 on every bit (what `IF(null..., 1, -1)` does in
  * the HOF form).
  *
@@ -103,8 +103,8 @@ object SimHashKernel {
 
 /**
  * Native minimum 60-bit md5 hash over a shingle array — the winnowing-style
- * document fingerprint ([[graft.functions.TextFunctions.fingerprint]]) without
- * the interpreted `transform(…, md5)` HOF. Value-identical to
+ * document fingerprint of q29, without the interpreted `transform(…, md5)`
+ * HOF. Value-identical to
  * `array_min(transform(shingles, hash60))`: null elements are skipped (as
  * `array_min` skips nulls), an empty/all-null array yields null.
  *

@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /**
- * Native winnowing fingerprint selection — the fused one-pass kernel behind
- * [[graft.functions.TextFunctions.winnow]] (Schleimer et al. 2003). The HOF
- * form hashes every k-gram once (let-bound), then takes `array_min` over
+ * Native winnowing fingerprint selection (Schleimer et al. 2003) — the fused
+ * one-pass kernel of q121. Its HOF twin (`HofTwins.winnow`, in test code)
+ * hashes every k-gram once (let-bound), then takes `array_min` over
  * every w-slice: O(ng·w) interpreted struct comparisons with a slice
  * allocation per window. This kernel computes the gram hashes and the
  * sliding-window minima in ONE pass with a monotonic deque — O(ng) total,

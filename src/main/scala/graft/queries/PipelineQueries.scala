@@ -401,11 +401,9 @@ object PipelineQueries {
       Tables.documents(s, d).select(
         col("doc_id"),
         md5(col("text")).as("content_md5"),
-        // native min-hash kernel when registered (the HOF transform+md5 runs
-        // interpreted); value-identical either way
-        (if (s.catalog.functionExists("min_hash60"))
-          call_function("min_hash60", T.shingles(col("text"), 3))
-        else T.fingerprint(col("text"))).as("shingle_fp"))
+        // the native min-hash kernel (graft.plans.MinHash60Expr); a session
+        // without GraftExtensions fails at analysis naming `min_hash60`
+        call_function("min_hash60", T.shingles(col("text"), 3)).as("shingle_fp"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1213,17 +1211,14 @@ object PipelineQueries {
       // array folds inside the scan, zero shuffles before the ORDER BY — so
       // at 100 TB this runs at scan speed; the fingerprint set (not shown
       // here) would feed the q63 postings shape for cross-doc matching.
-      // struct(h, p) ordering makes array_min pick the leftmost minimum.
-      // Native fused kernel when registered (one O(ng) deque pass vs the
-      // O(ng·w) interpreted slice-argmin HOF); value-identical either way.
-      def winnowExpr(ws: Column): Column =
-        if (s.catalog.functionExists("winnow_select"))
-          call_function("winnow_select", ws, lit(3), lit(4))
-        else T.winnow(ws, 3, 4)
+      // The native fused kernel (graft.plans.WinnowSelectExpr: one O(ng)
+      // deque pass, leftmost minimum on ties); a session without
+      // GraftExtensions fails at analysis naming `winnow_select`.
       Tables.documents(s, d)
         .select(col("doc_id"), T.tokens(col("text")).as("ws"))
         .where(size(col("ws")) >= 3)
-        .select(col("doc_id"), winnowExpr(col("ws")).as("sel"))
+        .select(col("doc_id"),
+          call_function("winnow_select", col("ws"), lit(3), lit(4)).as("sel"))
         .select(col("doc_id"), explode(col("sel")).as("f"))
         .select(col("doc_id"), col("f.p").as("pos"), col("f.h").as("fp"))
         .orderBy(col("doc_id"), col("pos"))
@@ -2266,24 +2261,13 @@ object PipelineQueries {
       // lesson), one chunk-digest aggregation, one join back.
       val L = length(col("text"))
       // boundary detection runs through the native one-pass cdc_bounds
-      // kernel — the value-identical HOF twin (filter + per-position Horner
-      // fold) evaluates interpreted at ~0.25 s PER ROW and exists as the
-      // oracle SQL only; the fallback keeps the query runnable without the
-      // extension installed
-      def rollingHash(i: Column): Column =
-        aggregate(sequence(lit(0), lit(7)), lit(0L), (acc, k) =>
-          pmod(acc * 31 + ascii(col("text").substr(i - 7 + k, lit(1))),
-            lit(1048576L)))
-      val boundsCol =
-        if (s.catalog.functionExists("cdc_bounds"))
-          call_function("cdc_bounds", col("text"))
-        else filter(
-          when(L >= 8, sequence(lit(8L), L.cast("long")))
-            .otherwise(array().cast("array<bigint>")),
-          i => rollingHash(i.cast("int")) % 32 === 0)
+      // kernel (graft.plans.CdcBoundsExpr); its value-identical HOF twin
+      // (filter + per-position Horner fold, ~0.25 s PER ROW interpreted) is
+      // the oracle SQL and ScaleOpsSpec's reference. A session without
+      // GraftExtensions fails at analysis naming `cdc_bounds`.
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("text"))
-        .withColumn("bounds", boundsCol)
+        .withColumn("bounds", call_function("cdc_bounds", col("text")))
         .withColumn("bs", array_sort(array_distinct(concat(
           array(lit(0L)), col("bounds"), array(L.cast("long"))))))
         .withColumn("chunks", transform(sequence(lit(0), size(col("bs")) - 2),
@@ -3319,14 +3303,9 @@ object PipelineQueries {
       // base hashing + 32 k-mins pipeline runs once per join side — the
       // same multi-consumer rule as dsh itself (the r15 "share the
       // derived tables" item, landed where the profile actually pays)
-      val sigs = (
-        if (s.catalog.functionExists("minhash_signature"))
-          nonEmpty.select(col("id"), expr("minhash_signature(shingles, 32)").as("sig"))
-        else {
-          val (b1, b2) = T.minhashBases(col("shingles"))
-          nonEmpty.select(col("id"), b1.as("b1"), b2.as("b2"))
-            .select(col("id"), T.minhashSignatureFromBases(col("b1"), col("b2"), 32).as("sig"))
-        }).localCheckpoint()
+      val sigs = nonEmpty
+        .select(col("id"), expr("minhash_signature(shingles, 32)").as("sig"))
+        .localCheckpoint()
       Dedup.allPairsJaccard(dsh, 0.1)
         .join(sigs.select(col("id").as("a"), col("sig").as("siga")), "a")
         .join(sigs.select(col("id").as("b"), col("sig").as("sigb")), "b")
@@ -3626,7 +3605,7 @@ object PipelineQueries {
            FROM scored)
          WHERE rank <= 10 ORDER BY query_id, rank""",
     // DuckDB twin of [[Similarity.annLsh]]: the hyperplane signature is pure
-    // md5 parity (VectorFunctions.hyperplaneSignature), so the *approximate*
+    // md5 parity (`hyperplane_sig`, VectorFunctions.md5ParityOf), so the *approximate*
     // index is itself deterministic and reproducible in SQL — same signatures,
     // same 1-bit multi-probe buckets, same exact-cosine re-rank.
     "q36_ann_lsh" ->

@@ -4,7 +4,6 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -17,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{ExtractionConfig, ExtractionRule}
-import graft.xml.{FragmentScanner, XmlExtraction, XmlFile}
+import graft.xml.{FragmentScanner, XmlExtraction, XmlFile, XmlFileReader}
 
 /**
  * DataSource V2 file source `graft-xml`: scans XML documents for configured
@@ -46,7 +45,8 @@ import graft.xml.{FragmentScanner, XmlExtraction, XmlFile}
  *    whole files are packed by [[XmlExtraction.packFiles]], the packing of
  *    [[XmlExtraction.corpusFromXmlFiles]] — contiguous groups in path order, at
  *    least one per core, none above `spark.sql.files.maxPartitionBytes` unless
- *    one file is alone; each file is read whole by [[XmlExtraction.readXmlFile]]:
+ *    one file is alone; each file is read whole by the partition's one
+ *    [[XmlFileReader]], which resolves the filesystem once per partition:
  *    a plain local file with no `.crc` sibling with one `Files.readAllBytes`,
  *    anything else (other filesystems, codecs by extension, files whose
  *    checksum Hadoop verifies) with one Hadoop `open`. On a 4-vCPU box a local
@@ -161,12 +161,10 @@ private[sources] class XmlFragmentReader(
     ruleEqs: Set[String], confProps: Array[(String, String)])
     extends PartitionReader[InternalRow] {
 
-  private lazy val hadoopConf = XmlExtraction.confFrom(confProps)
-
-  private lazy val codecs = new CompressionCodecFactory(hadoopConf)
+  private lazy val reader = new XmlFileReader(XmlExtraction.confFrom(confProps))
 
   private def scanFile(file: String): IndexedSeq[graft.xml.Fragment] = {
-    val all = FragmentScanner.scan(XmlExtraction.readXmlFile(file, hadoopConf, codecs), rules)
+    val all = FragmentScanner.scan(reader.read(file), rules)
     if (ruleEqs.isEmpty) all
     // single pushed value: equality; 2+ distinct values: empty intersection
     else if (ruleEqs.size == 1) all.filter(f => rules(f.ruleIndex).element == ruleEqs.head)

@@ -33,6 +33,49 @@ final case class ExtractedTuple(docId: String, seq: Long, order: Int, value: Str
  * its docId ([[XmlExtraction.docId]]). */
 final case class XmlFile(path: String, length: Long, docId: String)
 
+/** Reads whole documents, decoded as UTF-8: a file whose extension names a Hadoop codec
+ * (`.gz`, `.bz2`, ...) is decompressed, as Spark's `wholetext` reader does. Both file
+ * readers read through one per task. Every path a reader is given comes from one
+ * listing, so it resolves the filesystem, and whether that is Hadoop's
+ * `LocalFileSystem`, once, from the first path.
+ *
+ * A plain file on `LocalFileSystem` with no `.<name>.crc` sibling is read with one
+ * `Files.readAllBytes`. Everything else takes one Hadoop `open`: other filesystems,
+ * files a codec decompresses, and files with a `.crc` sibling, whose checksum Hadoop
+ * verifies. Measured on a 4-vCPU box over 1000 files of 7 KB, a file cost about 17 µs
+ * on the local branch with the filesystem resolved per file, about 6 µs of it the
+ * resolution, and about 63 µs through `LocalFileSystem`, which checks the file's status
+ * twice and tries to open the missing checksum file. `viaHadoop` takes Hadoop's branch
+ * on the local filesystem too, so the two can be compared. */
+private[graft] final class XmlFileReader(conf: Configuration, codecs: CompressionCodecFactory,
+                                         viaHadoop: Boolean) {
+  def this(conf: Configuration, viaHadoop: Boolean = false) =
+    this(conf, new CompressionCodecFactory(conf), viaHadoop)
+
+  private var fs: FileSystem = _
+  private var local = false
+
+  def read(path: String): String = {
+    val p = new Path(path)
+    if (fs == null) {
+      fs = p.getFileSystem(conf)
+      local = !viaHadoop && fs.isInstanceOf[LocalFileSystem]
+    }
+    val codec = codecs.getCodec(p)
+    val file = if (codec != null || !local) None
+      else Some(Paths.get((if (p.isUriPathAbsolute) p else fs.makeQualified(p)).toUri.getPath))
+        .filterNot(f => Files.exists(f.resolveSibling(s".${f.getFileName}.crc")))
+    val bytes = file match {
+      case Some(f) => Files.readAllBytes(f)
+      case None =>
+        val raw = fs.open(p)
+        val in: InputStream = if (codec == null) raw else codec.createInputStream(raw)
+        try in.readAllBytes() finally in.close()
+    }
+    new String(bytes, StandardCharsets.UTF_8)
+  }
+}
+
 /**
  * The per-document pipeline, defined once: scan a document into fragments, evaluate
  * their XPaths into `(order, value)` tuples (the reference's mapper,
@@ -149,8 +192,8 @@ object XmlExtraction {
    * The files are those of [[listXmlFiles]] (a missing path fails naming it), packed
    * by [[packFiles]] into at least `defaultParallelism` partitions of whole files, so
    * a directory of small documents still feeds every core. A task reads each of its
-   * files with [[readXmlFile]]. On the local filesystem both go through `java.nio`
-   * (see [[listXmlFiles]] and [[readXmlFile]] for what still takes Hadoop's calls):
+   * files with one [[XmlFileReader]]. On the local filesystem both go through `java.nio`
+   * (see [[listXmlFiles]] and [[XmlFileReader]] for what still takes Hadoop's calls):
    * `extract_sparse`, 1000 files of about 7 KB, is the regime where that pays. */
   def corpusFromXmlFiles(spark: SparkSession, path: String): DataFrame =
     corpusFromXmlFiles(spark, path, viaHadoop = false)
@@ -164,9 +207,8 @@ object XmlExtraction {
     val groups = packFiles(listXmlFiles(path, sc.hadoopConfiguration, viaHadoop), sc.defaultParallelism, maxBytes)
     val props = confProps(sc.hadoopConfiguration)
     sc.parallelize(groups, groups.size.max(1)).mapPartitions { group =>
-      val conf = confFrom(props)
-      val codecs = new CompressionCodecFactory(conf)
-      group.flatten.map(f => (f.docId, readXmlFile(f.path, conf, codecs, viaHadoop)))
+      val reader = new XmlFileReader(confFrom(props), viaHadoop)
+      group.flatten.map(f => (f.docId, reader.read(f.path)))
     }.toDF("docId", "xml")
   }
 
@@ -183,37 +225,14 @@ object XmlExtraction {
     conf
   }
 
-  /** One whole document, decoded as UTF-8: a file whose extension names a Hadoop codec
-   * (`.gz`, `.bz2`, ...) is decompressed, as Spark's `wholetext` reader does. Both file
-   * readers read through it, each task with one codec factory.
-   *
-   * A plain file on Hadoop's `LocalFileSystem` with no `.<name>.crc` sibling is read with
-   * one `Files.readAllBytes`. Everything else takes one Hadoop `open`: other filesystems,
-   * files a codec decompresses, and files with a `.crc` sibling, whose checksum Hadoop
-   * verifies. Measured on a 4-vCPU box over 1000 files of 7 KB, a call costs about 17 µs
-   * on the local branch and about 63 µs through `LocalFileSystem`, which checks the file's
-   * status twice and tries to open the missing checksum file. */
+  /** One whole document, decoded as UTF-8, read by a one-file [[XmlFileReader]]. */
   def readXmlFile(path: String, conf: Configuration, codecs: CompressionCodecFactory): String =
     readXmlFile(path, conf, codecs, viaHadoop = false)
 
   /** [[readXmlFile]]; `viaHadoop` opens a local file with Hadoop's calls too. */
   private[xml] def readXmlFile(path: String, conf: Configuration, codecs: CompressionCodecFactory,
-                               viaHadoop: Boolean): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val codec = codecs.getCodec(p)
-    val local = if (codec != null || viaHadoop || !fs.isInstanceOf[LocalFileSystem]) None
-      else Some(Paths.get(fs.makeQualified(p).toUri.getPath))
-        .filterNot(f => Files.exists(f.resolveSibling(s".${f.getFileName}.crc")))
-    val bytes = local match {
-      case Some(f) => Files.readAllBytes(f)
-      case None =>
-        val raw = fs.open(p)
-        val in: InputStream = if (codec == null) raw else codec.createInputStream(raw)
-        try in.readAllBytes() finally in.close()
-    }
-    new String(bytes, StandardCharsets.UTF_8)
-  }
+                               viaHadoop: Boolean): String =
+    new XmlFileReader(conf, codecs, viaHadoop).read(path)
 
   /** The files a whole-document read of `path` covers, sorted by path, each with its
    * [[docId]]. `path` is a file, a directory or a glob; directories are walked

@@ -91,9 +91,6 @@ class SourceHygieneSpec extends AnyFunSuite {
       f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
     } yield (f, s"$f:${i + 1}", line)
-    // a registration probe means a fallback path, i.e. a second implementation
-    val probes = lines.collect { case (_, at, l) if l.contains("functionExists(\"word_ngrams\")") => at }
-    assert(probes.isEmpty, probes.mkString("\n", "\n", ""))
     val named = lines.collect {
       case (f, at, l) if l.contains("\"word_ngrams\"") && !f.endsWith("plans/WordNgramsExpr.scala") => at
     }
@@ -106,6 +103,28 @@ class SourceHygieneSpec extends AnyFunSuite {
     // the deleted HOF chain's shape: distinct space-joined windows, whole text below n
     val hof = lines.collect { case (_, at, l) if l.contains("array_distinct(when(size(") => at }
     assert(hof.isEmpty, hof.mkString("\n", "\n", ""))
+  }
+
+  test("one implementation per native kernel: no registration probe, no HOF twin under src/main/scala") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val lines = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    } yield (f, s"$f:${i + 1}", line)
+    // a registration probe means a fallback path, i.e. a second implementation
+    val probes = lines.collect { case (_, at, l) if l.contains("functionExists(") => at }
+    assert(probes.isEmpty, probes.mkString("\n", "\n", ""))
+    // the interpreted twins are test references (graft.functions.HofTwins);
+    // graft/plans holds the kernels, some of whose methods share a twin's name
+    val twins = Seq("def minhashBases(", "def minhashSignatureFromBases(", "def hofCharStats(",
+      "def hyperplaneSignature(")
+    val kernelNamed = Seq("def simhash62(", "def winnow(")
+    val defs = lines.collect {
+      case (f, at, l) if twins.exists(l.contains) ||
+        (kernelNamed.exists(l.contains) && !f.toString.contains("/plans/")) => at
+    }
+    assert(defs.isEmpty, defs.mkString("\n", "\n", ""))
   }
 
   test("every main under src/main/scala is named in README's entry-point list") {

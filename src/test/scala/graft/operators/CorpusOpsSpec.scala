@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{TextFunctions => T}
+import graft.functions.{HofTwins, TextFunctions => T}
 import graft.queries.Tables
 
 /** Corpus-prep operators: quota exactness, shuffle determinism/permutation,
@@ -309,7 +309,7 @@ class CorpusOpsSpec extends SparkSpec {
     for (base <- Seq(edge, real)) {
       val n = CorpusOps.nativeCharStats(base)
         .orderBy(col("id")).collect().map(_.toSeq).toSeq
-      val h = CorpusOps.hofCharStats(base)
+      val h = HofTwins.charStats(base)
         .select("id", "len", "nd", "s2", "max_run", "nsp")
         .orderBy(col("id")).collect().map(_.toSeq).toSeq
       assert(n == h, s"native vs HOF diverged:\n${n.zip(h).filter(p => p._1 != p._2)}")
@@ -356,7 +356,7 @@ class CorpusOpsSpec extends SparkSpec {
     val expect = docs.map { case (id, t) => id -> brute(t) }.toMap
     val base = docs.toDF("id", "t")
     for (path <- Seq(CorpusOps.nativeCharStats(base),
-      CorpusOps.hofCharStats(base).select("id", "len", "nd", "s2", "max_run", "nsp"))) {
+      HofTwins.charStats(base).select("id", "len", "nd", "s2", "max_run", "nsp"))) {
       val got = path.collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
       docs.foreach { case (id, t) =>

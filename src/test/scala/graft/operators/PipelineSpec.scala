@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.functions.{HofTwins, TextFunctions => T, VectorFunctions => V}
 import graft.queries.{PipelineQueries, Tables}
 
 /** Operator-level checks for the training-data pipeline (dedup / similarity /
@@ -64,9 +64,9 @@ class PipelineSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
     val native = docs.select(col("id"), expr("minhash_signature(shingles, 32)").as("sig"))
-    val (b1, b2) = T.minhashBases(col("shingles"))
+    val (b1, b2) = HofTwins.minhashBases(col("shingles"))
     val hof = docs.select(col("id"), b1.as("b1"), b2.as("b2"))
-      .select(col("id"), T.minhashSignatureFromBases(col("b1"), col("b2"), 32).as("sig"))
+      .select(col("id"), HofTwins.minhashSignatureFromBases(col("b1"), col("b2"), 32).as("sig"))
     val n = native.orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     val h = hof.orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     assert(n.toSeq == h.toSeq)
@@ -130,7 +130,7 @@ class PipelineSpec extends SparkSpec {
       .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
     val sigs = docs
       .select(col("id"), transform(col("shingles"), s => T.hash60(s)).as("hs"))
-      .select(col("id"), T.simhash62("hs").as("sig"))
+      .select(col("id"), call_function("simhash62", col("hs")).as("sig"))
     assert(sigs.where(col("sig") < 0 || col("sig") >= Long.MaxValue).count() == 0)
     val pairs = Dedup.simhashPairs(docs, 12).collect()
     assert(pairs.nonEmpty, "planted near-dups should collide within 12 bits")
@@ -208,7 +208,7 @@ class PipelineSpec extends SparkSpec {
       ("a", "alpha beta gamma delta epsilon"),
       ("b", "alpha beta gamma delta epsilon"),
       ("c", "one two three four five six")).toDF("id", "text")
-      .select(col("id"), T.fingerprint(col("text")).as("fp"))
+      .select(col("id"), call_function("min_hash60", T.shingles(col("text"), 3)).as("fp"))
     val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m("a") == m("b"))
     assert(m("a") != m("c"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.functions.{HofTwins, TextFunctions => T, VectorFunctions => V}
 import graft.queries.Tables
 
 /**
@@ -409,7 +409,7 @@ class ScaleOpsSpec extends SparkSpec {
     val e = embSubset
     val native = e.select(col("id"), V.hyperplaneSignatureNative(col("vec"), 64, 32).as("sig"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val hof = e.select(col("id"), V.hyperplaneSignature(col("vec"), 64, 32).as("sig"))
+    val hof = e.select(col("id"), HofTwins.hyperplaneSignature(col("vec"), 64, 32).as("sig"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(native.nonEmpty)
     assert(native == hof)
@@ -421,7 +421,7 @@ class ScaleOpsSpec extends SparkSpec {
       transform(col("shingles"), s => T.hash60(s)).as("hs"))
     val nativeSim = hashed.select(col("id"), call_function("simhash62", col("hs")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val hofSim = hashed.select(col("id"), T.simhash62("hs"))
+    val hofSim = hashed.select(col("id"), HofTwins.simhash62("hs"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(nativeSim.nonEmpty && nativeSim == hofSim)
     val nativeFp = docs.select(col("id"), call_function("min_hash60", col("shingles")))

@@ -2,14 +2,16 @@ package graft.operators
 
 import scala.util.Random
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.TextFunctions
+import graft.functions.HofTwins
 
 /**
  * Differential + property tests for the round-9 text-prep operators:
- * winnowing fingerprint selection (TextFunctions.winnow), the overlapping
+ * winnowing fingerprint selection (the `winnow_select` kernel and its
+ * HOF twin `HofTwins.winnow`), the overlapping
  * RAG chunker (CorpusOps.chunkOverlap), and corpus-common-line removal with
  * reconstruction (CorpusOps.lineDedup). Each is checked against a
  * brute-force Scala reference on random tiny-vocab corpora (collision-heavy
@@ -25,6 +27,10 @@ class TextPrepSpec extends SparkSpec {
     val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
+
+  /** q121's native winnowing kernel. */
+  private def winnowSelect(ws: Column, k: Int, w: Int): Column =
+    call_function("winnow_select", ws, lit(k), lit(w))
 
   /** Brute-force winnowing: k-gram (hash, pos) pairs, min per w-window
    * (lexicographic tuple min = leftmost minimal hash), distinct. */
@@ -46,7 +52,7 @@ class TextPrepSpec extends SparkSpec {
       if (w.length >= k) Some(id -> w) else None
     }
     val got = docs.toDF("id", "ws")
-      .select(col("id"), explode(TextFunctions.winnow(col("ws"), k, ww)).as("f"))
+      .select(col("id"), explode(winnowSelect(col("ws"), k, ww)).as("f"))
       .select(col("id"), col("f.h"), col("f.p"))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getInt(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -72,8 +78,8 @@ class TextPrepSpec extends SparkSpec {
         r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
           .map(f => (f.getLong(0), f.getInt(1)))
       }.toMap
-    val hof = arrOf(TextFunctions.winnow(col("ws"), k, ww))
-    val native = arrOf(call_function("winnow_select", col("ws"), lit(k), lit(ww)))
+    val hof = arrOf(HofTwins.winnow(col("ws"), k, ww))
+    val native = arrOf(winnowSelect(col("ws"), k, ww))
     docs.foreach { case (id, w) =>
       assert(native(id) == hof(id), s"doc $id tokens=$w")
     }
@@ -84,8 +90,8 @@ class TextPrepSpec extends SparkSpec {
       def one(c: org.apache.spark.sql.Column) =
         d2.select(c).first().getSeq[org.apache.spark.sql.Row](0)
           .map(f => (f.getLong(0), f.getInt(1)))
-      assert(one(call_function("winnow_select", col("ws"), lit(k), lit(ww))) ==
-        one(TextFunctions.winnow(col("ws"), k, ww)), s"case $i: $w")
+      assert(one(winnowSelect(col("ws"), k, ww)) ==
+        one(HofTwins.winnow(col("ws"), k, ww)), s"case $i: $w")
     }
   }
 
@@ -104,7 +110,7 @@ class TextPrepSpec extends SparkSpec {
       assert((fa intersect fb).nonEmpty, s"trial $trial: a=$a b=$b")
       // and the Spark side selects the same sets (sanity via one doc)
       val gotA = Seq((1L, a)).toDF("id", "ws")
-        .select(explode(TextFunctions.winnow(col("ws"), k, ww)).as("f"))
+        .select(explode(winnowSelect(col("ws"), k, ww)).as("f"))
         .select(col("f.h")).collect().map(_.getLong(0)).toSet
       assert(gotA == fa)
     }
