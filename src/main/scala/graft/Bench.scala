@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Benchmark main: runs every `SparkEntry.queries` entry against
@@ -56,12 +56,46 @@ object Bench {
     claimed && errors.isEmpty &&
       names.forall(n => best.get(n).exists(_ >= 0))
 
+  /** The bench's numeric knobs: `SPARK_GRAFT_BENCH_RUNS` (passes, default
+   * 3), `SPARK_GRAFT_BENCH_BUDGET` (wall-clock seconds, default 900) and
+   * `SPARK_GRAFT_BENCH_MIN_FREE_GB` (disk floor, default 8). */
+  final case class Knobs(runs: Int, budgetSec: Double, minFreeGb: Double)
+
+  /** [[Knobs]] from `env`; a value that does not parse or is out of range
+   * fails naming the variable and the value. */
+  def knobs(env: collection.Map[String, String] = sys.env): Knobs = {
+    def knob[A](name: String, default: String, what: String)(parse: String => Option[A]): A = {
+      val v = env.getOrElse(name, default)
+      parse(v.trim).getOrElse(throw new IllegalArgumentException(
+        s"$name must be $what (got '$v')"))
+    }
+    Knobs(
+      knob("SPARK_GRAFT_BENCH_RUNS", "3", "an integer >= 1")(_.toIntOption.filter(_ >= 1)),
+      knob("SPARK_GRAFT_BENCH_BUDGET", "900", "a number of seconds > 0")(
+        _.toDoubleOption.filter(_ > 0)),
+      knob("SPARK_GRAFT_BENCH_MIN_FREE_GB", "8", "a number of GB >= 0")(
+        _.toDoubleOption.filter(_ >= 0)))
+  }
+
+  /** Free everything a query left cached, so the next query starts cold.
+   * `clearCache` drops the CacheManager entries of the reuse points: an
+   * entry whose RDD was unpersisted behind its back stays plan-matched, so
+   * a later query with the same reuse point would substitute it and re-read
+   * the earlier run's shuffle output, skipping most of its own stages (q71
+   * at sf0.1: 1 job instead of 31). The sweep then drops what is left, the
+   * `localCheckpoint` RDDs of the components loops and the dedup
+   * operators. */
+  def freeCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
   def main(args: Array[String]): Unit = {
     val jvmStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus()
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "900").toDouble
+    val Knobs(runs, budgetSec, minFreeGb) = knobs()
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
 
     // sorted: deterministic pass order (Map iteration order is arbitrary), so
@@ -83,7 +117,6 @@ object Bench {
     // error) when free space is already below the floor, and a watchdog
     // cancels its Spark jobs if spill drives free space under the floor
     // mid-query — so a disk DNF is a clean, attributed error entry.
-    val minFreeGb = sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_FREE_GB", "8").toDouble
     def freeGb: Double = new java.io.File(".").getUsableSpace / 1e9
     // per query: (free GB before, free GB after) from the latest visit
     val diskGb = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
@@ -188,12 +221,10 @@ object Bench {
         watchdog.interrupt()
         diskGb(name) = (freeBefore, freeGb)
       }
-      // localCheckpoint blocks (q90/q97/q107/q112/q113, components loops)
-      // otherwise accumulate in the block manager across queries and passes
-      // — up to 3 passes × every checkpointing query in one JVM. Queries are
-      // independent, so drop everything persisted once the query is timed.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // reuse points and localCheckpoint blocks otherwise accumulate across
+      // queries and passes, and a later pass would read this pass's seeds.
+      // Queries are independent, so drop everything once the query is timed.
+      freeCaches(spark)
       flush(claimed = false)
     }
 

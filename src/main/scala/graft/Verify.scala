@@ -21,11 +21,10 @@ object Verify {
           .take(5).map(_.toString).mkString(" <- ")
         System.err.println(s"[verify] $name failed: $chain")
       }
-      // drop localCheckpoint blocks between queries — 113 queries share this
-      // JVM and the checkpointing ones would otherwise accumulate block
-      // manager memory for the whole session
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // drop reuse points and localCheckpoint blocks between queries — every
+      // query shares this JVM and the caching ones would otherwise
+      // accumulate block manager memory for the whole session
+      Bench.freeCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -255,8 +255,8 @@ object Annotations {
    * reads: `pairMass` (classes² rows — the within-item unordered-pair mass
    * Σ (W div (m−1))·2·t_c·t_k, which is D_o's whole corpus dependence),
    * `classMass` (classes rows), and 1-row `stats`. Those persist as
-   * tracked lazy reuse points ([[Checkpoints.reusePoint]] — released by
-   * `Checkpoints.release`, deduped across repeated calls, ≤ classes²+
+   * lazy reuse points ([[Checkpoints.reusePoint]] — deduped across
+   * repeated calls, freed by `spark.catalog.clearCache()`, ≤ classes²+
    * classes+1 rows of storage, construction still runs zero Spark jobs).
    * Per metric only the classes²-row distance table and two tiny
    * broadcast-joined sums remain. Output: one row per metric, in the given
@@ -455,9 +455,8 @@ object Annotations {
    * Scale posture: each round is two equi-shuffles on corpus-sized keys
    * (the census join on `item`, the factor product on (item, class)) plus
    * driver-sized θ/π grids joined by BROADCAST; round state is
-   * materialized through [[Checkpoints.iterative]] (localCheckpoint, or
-   * reliable `checkpoint()` under `graft.iterative.reliableCheckpoint`) so
-   * the unrolled lineage never re-executes prior rounds.
+   * a lazy [[Checkpoints.reusePoint]], so the unrolled lineage computes
+   * each prior round once and later rounds read it from the cache.
    */
   def dawidSkene(ann: DataFrame, nClasses: Int, rounds: Int = 2): DataFrame = {
     require(nClasses >= 2, "nClasses must be >= 2")
@@ -465,7 +464,7 @@ object Annotations {
     val spark = ann.sparkSession
     val classes = spark.range(nClasses.toLong)
       .select(col("id").cast("int").as("c"))
-    val mv = Checkpoints.iterative(
+    val mv = Checkpoints.reusePoint(
       consolidateLabels(ann).select(col("item"), col("top_label").as("lab")))
 
     var labels = mv
@@ -521,7 +520,7 @@ object Annotations {
                 "to log-space fixed point"))).cast("long")).as("prod"))
         .join(broadcast(prior), Seq("c"))
         .select(col("item"), col("c"), (col("prod") * col("prior_pm")).as("score"))
-      labels = Checkpoints.iterative(
+      labels = Checkpoints.reusePoint(
         scores.groupBy(col("item"))
           .agg(max(struct(col("score"), (-col("c")).as("neg"))).as("top"))
           .select(col("item"), (-col("top.neg")).as("lab")))

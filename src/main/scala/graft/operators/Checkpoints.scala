@@ -1,206 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /**
- * Opt-in RELIABLE checkpointing for the iterative operators
- * ([[Dedup.components]], [[Dedup.componentsStar]], [[Graph.pageRankInt]]).
+ * The one reuse point of the library's iterative and shared derivations
+ * ([[Graph.pageRankInt]], [[Annotations.dawidSkene]],
+ * [[Preferences.bradleyTerry]], q159's bounded summaries, the
+ * generation-eval pair table). The unbounded convergence loops of
+ * [[Dedup.components]] and [[Dedup.componentsStar]] truncate lineage with
+ * their own tracked `localCheckpoint`s instead.
  *
- * By default the iteration loops truncate lineage with `localCheckpoint()` —
- * blocks live in the executors' block managers, which is free of any
- * filesystem dependency and right for local mode, but on a real cluster a
- * lost executor loses blocks that CANNOT recompute (lineage is truncated) and
- * aborts the job. Setting the session conf
- * `graft.iterative.reliableCheckpoint=true` (with
- * `spark.sparkContext.setCheckpointDir(...)` pointing at shared storage)
- * switches every round's materialization to a reliable `checkpoint()`:
- * round state is written to the checkpoint directory, survives executor
- * loss, and is immune to block-manager eviction and blanket unpersist
- * sweeps. The trade is one filesystem write per round — the right price on
- * a 1000-executor job where a single preemption would otherwise restart the
- * whole fixpoint. Old round files are reclaimed by Spark's context cleaner
- * when `spark.cleaner.referenceTracking.cleanCheckpoints=true`, or by
- * deleting the checkpoint dir after the job. Both modes produce identical
- * results (IterativeCheckpointSpec; at 1M vertices both gave identical labels
- * in 21 rounds, PLANS.md "Round-10 changes").
+ * Release path: reuse points are ordinary plan-keyed cache entries, so a
+ * long-lived caller frees them with Spark's own API,
+ * `spark.catalog.clearCache()` or `Dataset.unpersist`. Lineage is kept, so
+ * a released frame recomputes on its next action instead of failing.
  */
 private[graft] object Checkpoints {
 
-  val ConfKey = "graft.iterative.reliableCheckpoint"
-
-  /** Session-scoped registry of every reuse point [[reusePoint]] persisted,
-   * so long-lived callers have a RELEASE path (VERDICT r13 #3 — r13's
-   * library persists accumulated cache entries per call with no way to free
-   * them; Dedup's tracked localCheckpoint ids are the in-repo precedent).
-   * Growth is already bounded WITHIN one session for repeated identical
-   * calls — `persist` is plan-keyed in the CacheManager, so calling the
-   * same operator twice on the same input registers ONE entry
-   * (PersistLifecycleSpec) — but distinct inputs do accumulate; `release`
-   * frees them all. Lineage is kept by every reuse point, so releasing is
-   * always safe: a released frame recomputes on its next action instead of
-   * failing. */
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
-
-  /** Drop registry entries whose SparkContext has stopped (their blocks are
-   * already gone with the context; only the heap object graph lingers).
-   * A weak-keyed map cannot do this — every registered DataFrame strongly
-   * references its session, so value→key chains would pin weak keys
-   * forever — and release() must hold the frames strongly to stay able to
-   * unpersist them. Instead every registry access sweeps dead contexts, so
-   * a stopped session's entries are reclaimed at the next reusePoint /
-   * release anywhere in the JVM (the ADVICE r14 multi-session leak).
-   * Sessions ABANDONED on a still-running context keep needing an explicit
-   * [[release]] — their cached blocks are live in the shared block manager
-   * and only a caller can decide to free them. */
-  private def purgeStoppedContexts(): Unit = {
-    val it = registry.keySet.iterator()
-    while (it.hasNext) {
-      if (it.next().sparkContext.isStopped) it.remove()
-    }
-  }
-
-  /** Persist `df` as a LAZY plan-keyed reuse point and track it for
-   * [[release]]. If the plan is ALREADY cached in this session (a prior
-   * call on the same input), returns `df` untouched — no duplicate
-   * registration, no CacheManager warning, and the substitution hits the
-   * existing entry. */
-  def reusePoint(df: DataFrame): DataFrame = {
-    purgeStoppedContexts()
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registry.computeIfAbsent(df.sparkSession,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(out)
-      out
-    }
-  }
-
-  /** Unpersist every reuse point this session registered and forget them;
-   * returns how many were released. Safe at any time — reuse points keep
-   * lineage, so a released frame recomputes instead of aborting. */
-  def release(spark: SparkSession): Int = {
-    purgeStoppedContexts()
-    val q = registry.remove(spark)
-    if (q == null) 0
-    else {
-      var n = 0
-      val it = q.iterator()
-      while (it.hasNext) { it.next().unpersist(blocking = false); n += 1 }
-      n
-    }
-  }
-
-  /** Registered reuse-point count for `spark` — observability for the
-   * lifecycle specs and long-lived callers sizing a release. */
-  def registered(spark: SparkSession): Int = {
-    val q = registry.get(spark)
-    if (q == null) 0 else q.size()
-  }
-
-  /** A SCOPED release handle (VERDICT r15 cosmetic #5: [[release]] is
-   * session-global, so concurrent pipelines sharing one session would
-   * free each other's reuse points). `scope(spark)` snapshots the
-   * registry; the returned handle's `release()` unpersists ONLY the
-   * reuse points registered after the snapshot, leaving earlier
-   * pipelines' caches untouched. Identity-based: the same frame
-   * registered before the scope is never double-freed; as everywhere,
-   * lineage is kept so releasing is always safe (recompute, not fail). */
-  final class ReleaseScope private[Checkpoints] (
-      spark: SparkSession,
-      before: java.util.IdentityHashMap[DataFrame, java.lang.Boolean]) {
-    def release(): Int = {
-      val q = registry.get(spark)
-      if (q == null) 0
-      else {
-        var n = 0
-        val it = q.iterator()
-        while (it.hasNext) {
-          val df = it.next()
-          if (!before.containsKey(df)) {
-            df.unpersist(blocking = false); it.remove(); n += 1
-          }
-        }
-        n
-      }
-    }
-  }
-
-  /** Open a release scope: everything [[reusePoint]] registers for
-   * `spark` from now on is freed by the handle's `release()`; prior
-   * registrations are not. */
-  def scope(spark: SparkSession): ReleaseScope = {
-    purgeStoppedContexts()
-    val m = new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]()
-    val q = registry.get(spark)
-    if (q != null) {
-      val it = q.iterator()
-      while (it.hasNext) m.put(it.next(), java.lang.Boolean.TRUE)
-    }
-    new ReleaseScope(spark, m)
-  }
-
-  def reliableEnabled(spark: SparkSession): Boolean =
-    spark.conf.get(ConfKey, "false").toBoolean && {
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        s"$ConfKey=true requires spark.sparkContext.setCheckpointDir(...) " +
-          "to point at storage that survives executor loss")
-      true
-    }
-
-  /** TEST-ONLY chaos hook: invoked on the driver thread right after each
-   * round's materialization, so a spec can force block eviction BETWEEN
-   * fixpoint iterations (the executor-loss simulation local mode allows).
-   * Installing the hook forces EAGER per-round materialization (the chaos
-   * being simulated — losing a round's only block copy — requires the round
-   * to exist before the next one builds on it); production leaves the hook
-   * unset and rounds checkpoint lazily. ThreadLocal scopes WHEN the hook
-   * fires to the thread that set it — a fixpoint running on another thread
-   * never triggers it. The hook BODY a chaos test installs (a blanket
-   * block-manager sweep) still acts on the shared session, which is safe
-   * because sbt runs the forked suite JVM's test classes sequentially
-   * (`Test/testForkedParallel` is false — the standing assumption of every
-   * blanket-unpersist spec in this repo). */
-  private[operators] val afterMaterialize: ThreadLocal[Option[DataFrame => Unit]] =
-    new ThreadLocal[Option[DataFrame => Unit]] {
-      override def initialValue: Option[DataFrame => Unit] = None
-    }
-
-  /** Mark one iteration round as a REUSE POINT. Three modes:
-   *
-   *   - default: `persist(MEMORY_AND_DISK)` — LAZY, so constructing an
-   *     unrolled-iteration plan (ExplainQuery, plan-shape specs, `explain`)
-   *     runs ZERO Spark jobs (VERDICT r12 #4; a non-eager `checkpoint`
-   *     would NOT deliver this — under AQE even `eager = false` executes
-   *     every intermediate query stage at RDD-creation time). The round
-   *     computes once at the first action and every later round reads the
-   *     cached InMemoryRelation. Lineage is KEPT, so an evicted round
-   *     RECOMPUTES instead of aborting — strictly better fault behavior
-   *     than a localCheckpoint block loss, at the price of logical plans
-   *     that nest previous rounds (fine for the fixed SMALL round counts —
-   *     ≤ ~5 — of the operators on this path; unbounded convergence loops
-   *     use [[Dedup]]'s own eager tracked checkpoints). Rounds register in
-   *     the session [[registry]] — [[release]] frees them; repeated calls
-   *     on the same input reuse the plan-keyed entries and register
-   *     NOTHING new (PersistLifecycleSpec).
-   *   - `graft.iterative.reliableCheckpoint=true`: eager `checkpoint()` to
-   *     the checkpoint dir — round state survives executor loss; the
-   *     opt-in cluster posture, construction jobs accepted.
-   *   - chaos hook installed (tests only): eager `localCheckpoint()`, so
-   *     the hook can evict a round's only block copy BETWEEN rounds. */
-  def iterative(df: DataFrame): DataFrame = {
-    val hook = afterMaterialize.get()
-    if (reliableEnabled(df.sparkSession)) {
-      val out = df.checkpoint()
-      hook.foreach(h => h(out))
-      out
-    } else if (hook.isDefined) {
-      val out = df.localCheckpoint()
-      hook.foreach(h => h(out))
-      out
-    } else {
-      reusePoint(df)
-    }
-  }
+  /** Persist `df` as a LAZY plan-keyed reuse point (`MEMORY_AND_DISK`):
+   * building a plan over it runs ZERO Spark jobs (VERDICT r12 #4; a
+   * non-eager `checkpoint` would not deliver this, since under AQE even
+   * `eager = false` executes every intermediate query stage). The frame
+   * computes once at the first action and every later reader substitutes
+   * the cached InMemoryRelation. Lineage is KEPT, so an evicted block
+   * recomputes instead of aborting; the price is logical plans that nest
+   * previous rounds, fine for the small fixed round counts (≤ ~5) of the
+   * callers. If the plan is ALREADY cached in this session (a prior call on
+   * the same input), returns `df` untouched: no duplicate entry, no
+   * CacheManager warning (PersistLifecycleSpec). */
+  def reusePoint(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else df.persist(StorageLevel.MEMORY_AND_DISK)
 }

@@ -76,8 +76,7 @@ object Dedup {
     // CALLER CONTRACT (the localCheckpoint trade): construction is EAGER —
     // a Spark job runs before this returns (plan-only/explain callers pay
     // it too), and the band-table blocks stay pinned in the block manager
-    // until the caller clears them (Bench and Verify run
-    // `sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))`
+    // until the caller clears them (Bench and Verify run `Bench.freeCaches`
     // between queries). Long-lived sessions should instead persist the band
     // table once with [[writeBandIndex]] and probe it via
     // [[incrementalCandidatesFromIndex]] — the artifact path with no
@@ -1416,16 +1415,8 @@ object Dedup {
   /** Eager localCheckpoint plus the persistent-RDD ids it registered, so the
    * iterative loops below can free each SUPERSEDED round's blocks the moment
    * the next round materializes — without this a 1M-vertex chain run pins
-   * every round's edge set in the block manager for the whole loop. Under
-   * the opt-in [[Checkpoints]] reliable mode the round instead writes to the
-   * checkpoint dir (survives executor loss; nothing to free — no blocks are
-   * pinned, file reclamation is the context cleaner's job). */
+   * every round's edge set in the block manager for the whole loop. */
   private def trackedCheckpoint(df: DataFrame): (DataFrame, Seq[Int]) = {
-    if (Checkpoints.reliableEnabled(df.sparkSession)) {
-      val out = df.checkpoint()
-      Checkpoints.afterMaterialize.get().foreach(h => h(out))
-      return (out, Seq.empty)
-    }
     val out = df.localCheckpoint()
     // the persisted id comes from the checkpoint's OWN LogicalRDD — a
     // before/after diff of getPersistentRDDs would race a concurrent query
@@ -1434,7 +1425,6 @@ object Dedup {
     val ids = out.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }
-    Checkpoints.afterMaterialize.get().foreach(h => h(out))
     (out, ids)
   }
 

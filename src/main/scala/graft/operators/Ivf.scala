@@ -847,7 +847,7 @@ object Ivf {
   /** [[adcSearchFromTable]] with the coarse model as a table. The probed
    * cells still COLLECT — bounded by min(nlist, queries × nprobe), the
    * price of a static partition filter, same boundedness class as the
-   * codebook literals. The probe frame is a tracked lazy reuse point
+   * codebook literals. The probe frame is a lazy reuse point
    * (ADVICE r16): the collect materializes it once and the ADC tail reads
    * the cached frame instead of re-running the centroid-vs-query scoring
    * job. Scan pruning is two-level under the grouped layout: probed

@@ -107,7 +107,7 @@ object Preferences {
    *
    * Scale posture: the duel corpus collapses to a models²-row census in
    * ONE map-side-combinable exchange; every round after that runs on the
-   * census (checkpoint-materialized) with broadcast strength joins — round
+   * census (a lazy reuse point) with broadcast strength joins — round
    * cost is independent of the number of comparisons.
    */
   def bradleyTerry(duels: DataFrame, rounds: Int = 2): DataFrame = {
@@ -146,7 +146,7 @@ object Preferences {
           col("n"), (col("n") - col("wins_lo")).as("w")))
     val gamesCheck = census.groupBy(col("model"))
       .agg(sum(col("n")).as("games_check"))
-    val directed = Checkpoints.iterative(
+    val directed = Checkpoints.reusePoint(
       census.join(broadcast(gamesCheck), Seq("model"))
         .select(col("model"), col("opp"),
           when(col("games_check") <= 4000000L, col("n"))
@@ -175,7 +175,7 @@ object Preferences {
           expr("((wins + 1) * 1000000000000) div " +
             "(d + 2000000000000 div (s_fp + 1000000))").as("raw"))
       val tot = raw.agg(sum(col("raw")).as("t")).crossJoin(broadcast(nModels))
-      s = Checkpoints.iterative(
+      s = Checkpoints.reusePoint(
         raw.crossJoin(broadcast(tot))
           .select(col("model"),
             greatest(expr("nm * ((raw * 1000000) div t)"), lit(1L)).as("s_fp")))

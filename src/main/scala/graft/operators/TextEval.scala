@@ -131,7 +131,7 @@ object TextEval {
   /** One side's tagged multiset gram census — (id, n, g, c): the count of
    * gram key `g` of order `n` in pair `id`'s `side` text, orders 1..maxN
    * in ONE pass (one shuffle regardless of maxN). The shared input shape
-   * of all three metrics: build each side ONCE (a tracked reuse point)
+   * of all three metrics: build each side ONCE (a lazy reuse point)
    * and feed the `*FromCensus` variants, so a ROUGE + BLEU + corpus trio
    * over the same pairs pays one census derivation per side instead of
    * three (VERDICT r15 #7). */

@@ -68,9 +68,9 @@ object PipelineQueries {
    * part and every gram order re-reads the same pair table; because the
    * cache is keyed on the PLAN, q160, q161 and q163 share one
    * materialization — SeedSubstitutionSpec pins the InMemoryRelation in
-   * all three consumers' optimized plans, and the
-   * reuse point is tracked so `Checkpoints.release` can free it
-   * (VERDICT r13 #3/#4). Repartitioned first: the per-word md5 roll and
+   * all three consumers' optimized plans, and
+   * `spark.catalog.clearCache()` frees it (VERDICT r13 #3/#4).
+   * Repartitioned first: the per-word md5 roll and
    * the downstream multi-order gram explosion are the heavy per-row work
    * of these queries, and a compact corpus can arrive as ONE scan
    * partition (sf0.1 is a single parquet file — measured 1-task, 8 s);
@@ -92,11 +92,10 @@ object PipelineQueries {
    * 1..4 — q160/q161/q163 all consume THIS frame (q160 filtered to
    * n ≤ 2), so a session running the whole trio derives each side's
    * census once instead of three times (VERDICT r15 #7; the
-   * q31/q92/q112 docShingles-sharing discipline). A tracked lazy
-   * `persist` reuse point like [[dropoutPairs]] itself: plan-keyed, so
-   * the three consumers substitute one materialization; construction
-   * runs zero jobs (ConstructionJobsSpec); releasable via
-   * `Checkpoints.release`. */
+   * q31/q92/q112 docShingles-sharing discipline). A lazy `persist`
+   * reuse point like [[dropoutPairs]] itself: plan-keyed, so the three
+   * consumers substitute one materialization; construction runs zero
+   * jobs (ConstructionJobsSpec); freed by `spark.catalog.clearCache()`. */
   private def trioCensus(s: SparkSession, d: String, side: String): DataFrame =
     graft.operators.Checkpoints.reusePoint(
       TextEval.gramCensus(dropoutPairs(s, d), side, maxN = 4))
@@ -830,7 +829,7 @@ object PipelineQueries {
       // and logical-sharing variants — 4.10 → 1.81 s at sf0.1): the corpus
       // folds ONCE into per-item label-census arrays — never a corpus
       // self-join — and only the ≤ classes²-row pairMass + classes-row
-      // classMass + 1-row stats summaries persist, as tracked
+      // classMass + 1-row stats summaries persist, as lazy
       // Checkpoints.reusePoints (Annotations.krippendorffAlphaMetrics)
       val sparse = annotatedDocs(s, d).where(expr(
         "cast(conv(substring(md5(concat('skip', annotator, ':', item)), 1, 4), 16, 10) as int) % 6 != annotator"))

@@ -74,7 +74,7 @@ object SqlSurface {
    * pipeline plus two more checkpoint jobs up front even if the view is
    * never queried — so it is gated behind `withTriangles = true`.
    * Because localCheckpoint truncates lineage, the blanket
-   * `getPersistentRDDs ... unpersist` sweep the Bench/Verify harnesses run
+   * `Bench.freeCaches` sweep the Bench/Verify harnesses run
    * between queries PERMANENTLY breaks checkpoint-backed views (the
    * dropped blocks cannot recompute): after any such sweep, re-run
    * `registerOperatorViews` before querying them again. Long-lived serving

@@ -18,9 +18,8 @@ object ExplainQuery {
     if (run) {
       // drop the explain construction's eager checkpoint blocks first, so
       // the timed run isn't measured under double-copy memory pressure
-      // Bench never has (Bench unpersists between queries)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // Bench never has (Bench frees caches between queries)
+      graft.Bench.freeCaches(spark)
       // Bench-style timing: construction + execution (an eagerly
       // materializing query pays its checkpoint inside the timed region)
       val repeat = args.collectFirst {
@@ -31,8 +30,7 @@ object ExplainQuery {
         graft.SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.Bench.freeCaches(spark)
         println(f"[explain] $name pass $i wall $sec%.2f s")
         sec
       }

@@ -41,8 +41,7 @@ object LeakageProfile {
     def docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").as("id"), T.shingles(col("text"), 2).as("shingles"))
 
-    def clear(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    def clear(): Unit = graft.Bench.freeCaches(spark)
 
     def time[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * r14 "what's wrong" #1): the r14 sf10 partial recorded `measured:167/167,
  * complete:true` while holding 62 sentinel -1.0 timings and 167 errored
  * pass-2 queries — only a manual rename kept it out of the gate's
- * scaling-artifact check. These pin the synthetic crashed-run shapes.
+ * scaling-artifact check. These pin the synthetic crashed-run shapes and
+ * the bench's knob parsing.
  */
 class BenchArtifactSpec extends AnyFunSuite {
 
@@ -52,5 +53,25 @@ class BenchArtifactSpec extends AnyFunSuite {
   test("claimed=false (mid-run flush) is never complete") {
     val best = Map("q1" -> 1.0, "q2" -> 2.0, "q3" -> 0.5)
     assert(!Bench.artifactComplete(claimed = false, names, best, Map.empty))
+  }
+
+  test("unset knobs take their defaults; set ones parse") {
+    assert(Bench.knobs(Map.empty) === Bench.Knobs(3, 900.0, 8.0))
+    assert(Bench.knobs(Map("SPARK_GRAFT_BENCH_RUNS" -> "1",
+      "SPARK_GRAFT_BENCH_BUDGET" -> "60.5", "SPARK_GRAFT_BENCH_MIN_FREE_GB" -> "0")) ===
+      Bench.Knobs(1, 60.5, 0.0))
+  }
+
+  test("a non-numeric or out-of-range knob fails naming the variable and the value") {
+    val bad = Seq(
+      "SPARK_GRAFT_BENCH_RUNS" -> "three", "SPARK_GRAFT_BENCH_RUNS" -> "0",
+      "SPARK_GRAFT_BENCH_RUNS" -> "-1", "SPARK_GRAFT_BENCH_RUNS" -> "2.5",
+      "SPARK_GRAFT_BENCH_BUDGET" -> "three", "SPARK_GRAFT_BENCH_BUDGET" -> "0",
+      "SPARK_GRAFT_BENCH_BUDGET" -> "-1", "SPARK_GRAFT_BENCH_MIN_FREE_GB" -> "three",
+      "SPARK_GRAFT_BENCH_MIN_FREE_GB" -> "-1", "SPARK_GRAFT_BENCH_MIN_FREE_GB" -> "NaN")
+    for ((k, v) <- bad) {
+      val e = intercept[IllegalArgumentException](Bench.knobs(Map(k -> v)))
+      assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
   }
 }

@@ -127,6 +127,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(defs.isEmpty, defs.mkString("\n", "\n", ""))
   }
 
+  test("no default-off checkpoint postures") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root ($main)")
+    val lines = for {
+      f <- Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    } yield (f, s"$f:${i + 1}", line)
+    // the reliable mode, its chaos hook, the scoped registry and an eager
+    // reliable checkpoint (localCheckpoint( does not contain ".checkpoint(")
+    val banned = Seq("reliableCheckpoint", "afterMaterialize", "ReleaseScope", ".checkpoint(")
+    val hits = lines.collect { case (_, at, l) if banned.exists(l.contains) => at }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+    // Checkpoints is one reuse point
+    val defs = lines.collect {
+      case (f, at, l) if f.endsWith("operators/Checkpoints.scala") && l.contains("def ") => at
+    }
+    assert(defs.size == 1, defs.mkString("\n", "\n", ""))
+  }
+
   test("every main under src/main/scala is named in README's entry-point list") {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repository root ($main)")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /**
  * Library persists have a LIFECYCLE (VERDICT r13 #3): r13's
- * `krippendorffAlphaMetrics`, `Checkpoints.iterative` default mode, and the
+ * `krippendorffAlphaMetrics`, the iterative operators' rounds, and the
  * generation-eval pair builder persisted reuse points and never released
  * them — any long-lived caller (the correctness driver, a notebook)
  * accumulated cache entries per call with no release path. The contract
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
  *   1. repeated calls on the SAME input do not grow `getPersistentRDDs` —
  *      `Checkpoints.reusePoint` consults the plan-keyed CacheManager before
  *      persisting, so an identical plan reuses the existing entry;
- *   2. `Checkpoints.release(spark)` drops every tracked entry, returning
+ *   2. Spark's own `spark.catalog.clearCache()` drops every entry, returning
  *      the session to its baseline — and the released frames still COMPUTE
  *      correctly afterwards (reuse points keep lineage; a release can only
  *      cost recompute, never correctness).
@@ -26,9 +26,9 @@ class PersistLifecycleSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   private def drainAll(): Unit = {
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    Checkpoints.release(spark)
   }
 
   private def ann(rows: (Long, Int, Int)*): DataFrame = {
@@ -59,14 +59,13 @@ class PersistLifecycleSpec extends SparkSpec {
         s"${persisted.size} vs ${afterFirst.size} entries")
     assert(second.toSeq == first.toSeq && third.toSeq == first.toSeq)
 
-    // release drops every tracked entry; results still compute (lineage kept)
-    val released = Checkpoints.release(spark)
-    assert(released > 0, "release() should have had tracked entries to drop")
+    // clearCache drops every entry; results still compute (lineage kept)
+    spark.catalog.clearCache()
     assert(persisted == baseline,
-      "release() must return the session to its cache baseline")
+      "clearCache() must return the session to its cache baseline")
     assert(run().toSeq == first.toSeq,
       "a released operator must recompute to the same result")
-    Checkpoints.release(spark)
+    spark.catalog.clearCache()
   }
 
   test("Checkpoints.iterative operators: repeated identical calls stable, release frees rounds") {
@@ -88,11 +87,12 @@ class PersistLifecycleSpec extends SparkSpec {
       "a second identical pageRankInt call must not add cache entries")
     assert(second.toSeq == first.toSeq)
 
-    assert(Checkpoints.release(spark) > 0)
+    spark.catalog.clearCache()
     assert(persisted == baseline,
-      "release() must free every tracked iterative round")
-    assert(run().toSeq == first.toSeq)
-    Checkpoints.release(spark)
+      "clearCache() must free every iterative round")
+    assert(run().toSeq == first.toSeq,
+      "released rounds must recompute to the same result")
+    spark.catalog.clearCache()
   }
 
   test("generation-eval pair builder: one cache entry shared by q160/q161/q163, released cleanly") {
@@ -111,40 +111,7 @@ class PersistLifecycleSpec extends SparkSpec {
     assert(persisted == afterFirst,
       "q160/q161/q163 must share ONE plan-keyed pair-table entry")
 
-    assert(Checkpoints.release(spark) > 0)
+    spark.catalog.clearCache()
     assert(persisted == baseline)
-    Checkpoints.release(spark)
-  }
-
-  test("Checkpoints.scope releases only reuse points registered inside it") {
-    drainAll()
-    import spark.implicits._
-    // pipeline A registers its reuse point BEFORE the scope opens
-    val a = Checkpoints.reusePoint(
-      Seq(1L, 2L, 3L).toDF("x").select(col("x") * 2))
-    a.collect()
-    val afterA = persisted
-    assert(Checkpoints.registered(spark) == 1)
-
-    val scope = Checkpoints.scope(spark)
-    val b = Checkpoints.reusePoint(
-      Seq(4L, 5L).toDF("y").select(col("y") + 1))
-    b.collect()
-    assert(Checkpoints.registered(spark) == 2)
-
-    // the scoped release frees B only: A's cache entry and registration
-    // both survive — concurrent pipelines sharing the session are safe
-    assert(scope.release() == 1)
-    assert(persisted == afterA,
-      "pipeline A's blocks must survive a scoped release")
-    assert(Checkpoints.registered(spark) == 1)
-    // B still COMPUTES after release (lineage kept), and a second scoped
-    // release is a no-op
-    assert(b.collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L))
-    assert(scope.release() == 0)
-
-    // the global release still frees A
-    assert(Checkpoints.release(spark) == 1)
-    Checkpoints.release(spark)
   }
 }

@@ -15,7 +15,7 @@ import graft.SparkEntry
  * offenders (q90's max-id guard `require`, bradleyTerry's census `head()`,
  * the q97/q145 half-split `head()`s, dawidSkene's per-item census) all moved
  * IN PLAN (`raise_error` branches / broadcast scalar joins) or to lazy
- * `persist` reuse points ([[graft.operators.Checkpoints.iterative]]).
+ * `persist` reuse points ([[graft.operators.Checkpoints.reusePoint]]).
  *
  * What legitimately REMAINS eager is enumerated in `allowed`, one reason
  * each — three structural classes:

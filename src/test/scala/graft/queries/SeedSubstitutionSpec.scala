@@ -13,7 +13,8 @@ import graft.SparkSpec
  * consumer seeds the cache and the CacheManager substitutes plan-keyed:
  * every consumer's optimized plan must read all three as
  * InMemoryRelations, with the derivation they cache nowhere above them
- * (VERDICT r13 #4, r15 #7).
+ * (VERDICT r13 #4, r15 #7). `Bench.freeCaches` must leave none of those
+ * seeds behind for the next query.
  */
 class SeedSubstitutionSpec extends SparkSpec {
 
@@ -24,12 +25,12 @@ class SeedSubstitutionSpec extends SparkSpec {
   /** Each trio query's optimized plan, built in a session with no reuse
    * points left over from earlier suites. */
   private def withTrioPlans(check: (String, LogicalPlan) => Unit): Unit = {
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    graft.operators.Checkpoints.release(spark)
     try for (q <- trio)
       check(q, graft.SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan)
-    finally graft.operators.Checkpoints.release(spark)
+    finally spark.catalog.clearCache()
   }
 
   /** Distinct cache entries the plan reads whose columns start with
@@ -67,5 +68,23 @@ class SeedSubstitutionSpec extends SparkSpec {
       val md5 = outside(opt, "md5")
       assert(md5.isEmpty, s"$q: md5 derivation above the censuses: $md5")
     }
+  }
+
+  test("Bench.freeCaches empties the cache manager, so q161 after q160 reads no stale entry") {
+    def cached(q: String) = graft.SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      .collect { case m: InMemoryRelation => m.cacheBuilder }
+    graft.Bench.freeCaches(spark)
+    val seeded = cached(trio.head)
+    assert(seeded.nonEmpty)
+    graft.SparkEntry.queries(trio.head)(spark, sf).write.format("noop").mode("overwrite").save()
+    graft.Bench.freeCaches(spark)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    // q161 persists its own lazy reuse points; an entry q160 left behind
+    // would substitute instead and serve q160's shuffle output
+    try {
+      val stale = cached(trio(1)).filter(b => seeded.exists(_ eq b))
+      assert(stale.isEmpty, stale.mkString("\n", "\n", ""))
+    } finally graft.Bench.freeCaches(spark)
   }
 }
